@@ -43,13 +43,4 @@ object Tables {
             org.apache.spark.sql.functions.col("ts").cast("timestamp"))
       } else spark.read.parquet(s"$dir/$name.parquet")
     })
-
-  /** `events.ts` is parquet TIMESTAMP(MICROS) without timezone, which Spark
-    * reads as TIMESTAMP_NTZ; cast to the session-zoned TIMESTAMP every
-    * event-time operator (windows, watermarks, as-of) expects. Sessions run
-    * with `spark.sql.session.timeZone=UTC` (guarded in [[load]]), so the
-    * cast re-tags the same wall-clock value DuckDB sees as a naive
-    * TIMESTAMP — oracle-exact. */
-  def loadEvents(spark: SparkSession, dir: String): DataFrame =
-    load(spark, dir, "events")
 }

@@ -26,13 +26,19 @@ import scala.collection.mutable.ListBuffer
   */
 object QueryCompiler {
 
-  def compile(
+  def compile(df: DataFrame, specs: Seq[ColumnSpec], qs: QuerySpec,
+      strict: Boolean = false): DataFrame = paginate(unpaged(df, specs, qs, strict), qs)
+
+  /** The request minus its offset/limit; validates the whole request,
+    * pagination included, so a paged view refuses before it runs a job. */
+  def unpaged(
       df: DataFrame,
       specs: Seq[ColumnSpec],
       qs: QuerySpec,
       strict: Boolean = false): DataFrame = {
 
-    val errors = ListBuffer.empty[String]
+    val errors = ListBuffer.from(paginationErrors(qs, strict))
+    if (errors.nonEmpty && !strict) throw GraftAnalysisException(errors.toList)
     val registry: Map[String, ColumnSpec] = specs.map(s => s.name -> s).toMap
     // bind once to know each declared column's Spark type (for literal casts)
     val bound: StructType = df.select(specs.map(_.boundCol): _*).schema
@@ -102,20 +108,36 @@ object QueryCompiler {
     var out = df
     if (predicates.nonEmpty) out = out.filter(predicates.reduce(_ && _))
     if (sortKeys.nonEmpty) out = out.orderBy(sortKeys: _*)
-    out = out.select(visibleSpecs.map(_.boundCol): _*)
-    paginate(out, qs)
+    out.select(visibleSpecs.map(_.boundCol): _*)
   }
 
-  /** Apply the request's offset/limit. Long request values are clamped: a
-    * page beyond Int.MaxValue rows is capped, never wrapped negative.
-    * Public so total-count views can paginate the SAME cached plan the
-    * total was counted from (see [[graft.core.TableSpec.pagedView]]). */
+  /** Apply the request's offset/limit; a limit over a sorted [[unpaged]]
+    * plan plans as a top-K (`TakeOrderedAndProject(limit, offset)`), not a
+    * full sort. A page Spark cannot address — an overflowing `pageIndex *
+    * pageSize`, or offset + limit past Int.MaxValue rows — is refused in
+    * both modes: wrapping or clamping it would serve other rows. Lenient
+    * clamping: a negative offset skips nothing, a negative limit is empty. */
   def paginate(df: DataFrame, qs: QuerySpec): DataFrame = {
-    def toIntClamped(n: Long): Int = math.min(n, Int.MaxValue.toLong).toInt
+    val refused = paginationErrors(qs, strict = false)
+    if (refused.nonEmpty) throw GraftAnalysisException(refused)
     var out = df
-    qs.effectiveOffset.filter(_ > 0).foreach(n => out = out.offset(toIntClamped(n)))
-    qs.effectiveLimit.map(n => math.max(n, 0L)).foreach(n => out = out.limit(toIntClamped(n)))
+    qs.effectiveOffset.filter(_ > 0).foreach(n => out = out.offset(n.toInt))
+    qs.effectiveLimit.foreach(n => out = out.limit(math.max(n, 0L).toInt))
     out
+  }
+
+  /** Unservable pages in both modes; negative values in strict mode only. */
+  private def paginationErrors(qs: QuerySpec, strict: Boolean): List[String] = {
+    val negative = if (!strict) Nil else List("drop" -> qs.drop, "take" -> qs.take,
+      "pageIndex" -> qs.pageIndex, "pageSize" -> qs.pageSize).collect {
+      case (name, Some(v)) if v < 0 => s"page: '$name' must not be negative, got $v"
+    }
+    val limit = qs.effectiveLimit.fold(0L)(math.max(_, 0L))
+    val range = scala.util.Try(qs.effectiveOffset.fold(0L)(math.max(_, 0L))).fold(
+      _ => List("page: pageIndex * pageSize overflows the row offset"),
+      offset => if (offset <= Int.MaxValue - limit) Nil
+        else List(s"page: offset $offset + limit $limit exceeds ${Int.MaxValue} rows"))
+    negative ++ range
   }
 
   /** Build one predicate; literals are cast to the column's bound type so

@@ -28,8 +28,9 @@ final case class QuerySpec(
     pageIndex: Option[Long] = None,
     pageSize: Option[Long] = None) {
 
+  /** Throws `ArithmeticException` if `pageIndex * pageSize` overflows. */
   def effectiveOffset: Option[Long] =
-    drop.orElse(for (i <- pageIndex; s <- pageSize) yield i * s)
+    drop.orElse(for (i <- pageIndex; s <- pageSize) yield Math.multiplyExact(i, s))
 
   def effectiveLimit: Option[Long] = take.orElse(pageSize)
 }

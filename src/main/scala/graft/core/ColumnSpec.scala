@@ -58,7 +58,6 @@ final case class ColumnSpec(
   def filterable(ops: FilterOp*): ColumnSpec = copy(filterOps = filterOps ++ ops)
   def withDefault(v: Any): ColumnSpec       = copy(defaultValue = Some(v))
   def named(n: String): ColumnSpec          = copy(name = n)
-  def withTypeName(t: String): ColumnSpec   = copy(typeNameOverride = Some(t))
   def asRawJson: ColumnSpec                 = copy(rawJson = true)
   def decimals(n: Int): ColumnSpec          = copy(formatDecimals = Some(n))
   def width(n: Int): ColumnSpec             = copy(formatWidth = Some(n))

@@ -57,21 +57,18 @@ final case class TableSpec(
 
   /** Paged view carrying the unpaged result total (reference:
     * doc-02.md:135 — pageIndex/pageSize requests imply a total so clients
-    * can render pagers). Both sinks — the count and the page — run over ONE
-    * cached materialization of the request-minus-pagination plan
-    * ([[graft.plans.Channels.multiSink]]); the filtered/sorted input is
-    * never computed twice. */
+    * can render pagers). Two plain actions over one analyzed unpaged plan:
+    * `count()`, from which the optimizer drops the sort and unused (UDF)
+    * columns, and a collect of [[QueryCompiler.paginate]], which runs a
+    * sorted page as a per-partition top-K — no cache, no range sort. A
+    * non-deterministic source may give the total and the page from two
+    * evaluations, as the reference's count and page statements may. */
   def pagedView(qs: QuerySpec = QuerySpec()): PagedView = {
-    val unpaged = query(qs.copy(
-      drop = None, take = None, pageIndex = None, pageSize = None))
-    val schema = unpaged.schema
-    val results = graft.plans.Channels.multiSink[Any](unpaged)(Seq(
-      df => df.count(),
-      df => QueryCompiler.paginate(df, qs).collect()))
-    val total = results(0).asInstanceOf[Long]
-    val rows = results(1).asInstanceOf[Array[org.apache.spark.sql.Row]]
-    PagedView(total,
-      JsonView(properties, rows.toIndexedSeq.map(JsonWriter.writeRow(schema))))
+    val unpaged = QueryCompiler.unpaged(df, specs, qs, strict)
+    val total = unpaged.count()
+    val rows = QueryCompiler.paginate(unpaged, qs).collect()
+    PagedView(total, JsonView(properties,
+      rows.toIndexedSeq.map(JsonWriter.writeRow(unpaged.schema))))
   }
 
   def withStrict(s: Boolean): TableSpec = copy(strict = s)

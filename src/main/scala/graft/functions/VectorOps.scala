@@ -27,13 +27,6 @@ object VectorOps {
     s
   }
 
-  def norm2(a: ArrayData): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < a.numElements()) { val x = a.getFloat(i).toDouble; s += x * x; i += 1 }
-    math.sqrt(s)
-  }
-
   /** Intersection size of two individually sorted, de-duplicated string
     * arrays — O(n+m) merge, no per-row hash set. Kernel for the exact
     * Jaccard verify tier. */

@@ -68,12 +68,6 @@ object Probe {
     } finally { cached.unpersist(blocking = false): Unit }
   }
 
-  /** [[trainLinear]] as a (dim, weight) frame — the gate shape. */
-  def trainLinearDF(
-      spark: SparkSession, data: DataFrame, vecCol: String, labelCol: String,
-      dim: Int, iters: Int = 3, lr: Double = 0.5): DataFrame =
-    weightsDF(spark, trainLinear(data, vecCol, labelCol, dim, iters, lr))
-
   /** A trained weight vector as the (dim, weight) gate frame. */
   def weightsDF(spark: SparkSession, w: Seq[Double]): DataFrame = {
     val rows = w.zipWithIndex.map { case (v, j) => Row(j, v) }

@@ -1,7 +1,7 @@
 package graft.compile
 
 import graft.SparkTestBase
-import graft.core.{ColumnSpec, FilterOp, TableSpec}
+import graft.core.{ColumnSpec, GraftAnalysisException, TableSpec}
 import graft.core.ColumnSpec.dsl._
 import org.apache.spark.sql.functions.col
 import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -56,6 +56,94 @@ class QueryCompilerPropSpec extends SparkTestBase {
     take <- Gen.option(Gen.choose(0L, 5L))
   } yield (drop, take)
 
+  private val genPaging: Gen[(Long, Long)] = for {
+    pageIndex <- Gen.choose(0L, 4L)
+    pageSize <- Gen.choose(0L, 3L)
+  } yield (pageIndex, pageSize)
+
+  private def table(capsByName: Map[String, Caps]): TableSpec = {
+    def build(name: String, caps: Caps): ColumnSpec = {
+      var s = name.ofCol(col(if (name == "ageOpt") "age" else name))
+      if (caps.sortable) s = s.order
+      caps.redirect.foreach(r => s = s.orderTarget(r))
+      if (caps.filterable) s = s.comparable.likeable
+      s
+    }
+    TableSpec(friend,
+      "id".ofCol(col("id")).order +: // unique key, always sortable
+        colNames.map(n => build(n, capsByName(n))))
+  }
+
+  /** The in-memory model of a request: ids of the filtered rows in the
+    * documented order, before the offset/limit. */
+  private def modelIds(capsByName: Map[String, Caps], req: QuerySpec): Seq[Long] = {
+    def cell(row: (Long, String, String, Option[Int]), name: String): Option[Any] =
+      name match {
+        case "id" => Some(row._1)
+        case "name" => Some(row._2)
+        case "nick" => Some(row._3)
+        case "ageOpt" => row._4
+        case _ => None
+      }
+    // filters: AND of declared+capable predicates, unknown elided
+    def passes(row: (Long, String, String, Option[Int])): Boolean =
+      req.filters.forall { case (name, ops) =>
+        if (!capsByName.contains(name) && name != "id") true // unknown
+        else if (name == "id") true // id declared without filter caps
+        else if (!capsByName(name).filterable) true // uncapable → elided
+        else ops.forall { case (op, v) =>
+          val c = cell(row, name)
+          (op, c) match {
+            case (_, None) => false // SQL null comparisons are not true
+            case ("like", Some(s: String)) =>
+              val pat = v.toString.replace("%", ".*")
+              s.matches(pat)
+            case ("eq", Some(a: Int)) => a == v.asInstanceOf[Int]
+            case ("ge", Some(a: Int)) => a >= v.asInstanceOf[Int]
+            case ("lt", Some(a: Int)) => a < v.asInstanceOf[Int]
+            case _ => true
+          }
+        }
+      }
+    // orders: first request per name, applied in declaration order
+    val reqByName = req.orders.reverse.map(o => o.name -> o.desc).toMap
+    val declOrder = Seq("id", "name", "nick", "ageOpt")
+    def sortKey(name: String): Option[String] = {
+      val caps = capsByName.get(name)
+      name match {
+        case "id" => Some("id")
+        case _ =>
+          caps.flatMap(_.redirect).filter(r => r == "id" || capsByName.contains(r))
+            .orElse(if (caps.exists(_.sortable)) Some(name) else None)
+      }
+    }
+    val effKeys: Seq[(String, Boolean)] = declOrder.flatMap { n =>
+      reqByName.get(n).flatMap(desc => sortKey(n).map(k => (k, desc)))
+    }
+    implicit val anyOrd: Ordering[(Option[Any], Boolean)] = Ordering.fromLessThan {
+      case ((None, _), (None, _)) => false
+      case ((None, _), _) => false // nulls last regardless of direction
+      case (_, (None, _)) => true
+      case ((Some(a), desc), (Some(b), _)) =>
+        val cmp = (a, b) match {
+          case (x: Long, y: Long) => x.compareTo(y)
+          case (x: Int, y: Int) => x.compareTo(y)
+          case (x: String, y: String) => x.compareTo(y)
+          case _ => 0
+        }
+        if (desc) cmp > 0 else cmp < 0
+    }
+    data.filter(passes).sortBy(r => effKeys.map { case (k, desc) =>
+      (cell(r, k), desc)
+    })(Ordering.Implicits.seqOrdering(anyOrd)).map(_._1)
+  }
+
+  private def slice(ids: Seq[Long], req: QuerySpec): Seq[Long] = {
+    val offset = req.effectiveOffset.getOrElse(0L).toInt
+    req.effectiveLimit.map(l => ids.slice(offset, offset + l.toInt))
+      .getOrElse(ids.drop(offset))
+  }
+
   test("lenient compiler ≡ in-memory reference semantics (scalacheck)") {
     val prop = Prop.forAll(genCaps, genCaps, genCaps, genOrders, genFilter, genPage) {
       (nameCaps: Caps, nickCaps: Caps, ageCaps: Caps,
@@ -63,92 +151,13 @@ class QueryCompilerPropSpec extends SparkTestBase {
        page: (Option[Long], Option[Long])) =>
 
         val capsByName = Map("name" -> nameCaps, "nick" -> nickCaps, "ageOpt" -> ageCaps)
-        def build(name: String, c: ColumnSpec, caps: Caps): ColumnSpec = {
-          var s = c
-          if (caps.sortable) s = s.order
-          caps.redirect.foreach(r => s = s.orderTarget(r))
-          if (caps.filterable) s = s.comparable.likeable
-          s
-        }
-        val specs = Seq(
-          "id".ofCol(col("id")).order, // unique key, always sortable
-          build("name", "name".ofCol(col("name")), nameCaps),
-          build("nick", "nick".ofCol(col("nick")), nickCaps),
-          build("ageOpt", "ageOpt".ofCol(col("age")), ageCaps))
-        val table = TableSpec(friend, specs)
         // force a total order so Spark/model agree on ties
         val req = QuerySpec(
           orders = orders :+ ColumnOrder("id", desc = false),
           filters = filters, drop = page._1, take = page._2)
 
-        val got = table.query(req).select("id").collect().map(_.getLong(0)).toSeq
-
-        // ---- in-memory model ----
-        def cell(row: (Long, String, String, Option[Int]), name: String): Option[Any] =
-          name match {
-            case "id" => Some(row._1)
-            case "name" => Some(row._2)
-            case "nick" => Some(row._3)
-            case "ageOpt" => row._4
-            case _ => None
-          }
-        // filters: AND of declared+capable predicates, unknown elided
-        def passes(row: (Long, String, String, Option[Int])): Boolean =
-          filters.forall { case (name, ops) =>
-            if (!capsByName.contains(name) && name != "id") true // unknown
-            else if (name == "id") true // id declared without filter caps
-            else if (!capsByName(name).filterable) true // uncapable → elided
-            else ops.forall { case (op, v) =>
-              val c = cell(row, name)
-              (op, c) match {
-                case (_, None) => false // SQL null comparisons are not true
-                case ("like", Some(s: String)) =>
-                  val pat = v.toString.replace("%", ".*")
-                  s.matches(pat)
-                case ("eq", Some(a: Int)) => a == v.asInstanceOf[Int]
-                case ("ge", Some(a: Int)) => a >= v.asInstanceOf[Int]
-                case ("lt", Some(a: Int)) => a < v.asInstanceOf[Int]
-                case _ => true
-              }
-            }
-          }
-        // orders: first request per name, applied in declaration order
-        val reqByName = req.orders.reverse.map(o => o.name -> o.desc).toMap
-        val declOrder = Seq("id", "name", "nick", "ageOpt")
-        def sortKey(name: String): Option[String] = {
-          val caps = capsByName.get(name)
-          name match {
-            case "id" => Some("id")
-            case _ =>
-              caps.flatMap(_.redirect).filter(r => r == "id" || capsByName.contains(r))
-                .orElse(if (caps.exists(_.sortable)) Some(name) else None)
-          }
-        }
-        val effKeys: Seq[(String, Boolean)] = declOrder.flatMap { n =>
-          reqByName.get(n).flatMap(desc => sortKey(n).map(k => (k, desc)))
-        }
-        implicit val anyOrd: Ordering[(Option[Any], Boolean)] = Ordering.fromLessThan {
-          case ((None, _), (None, _)) => false
-          case ((None, _), _) => false // nulls last regardless of direction
-          case (_, (None, _)) => true
-          case ((Some(a), desc), (Some(b), _)) =>
-            val cmp = (a, b) match {
-              case (x: Long, y: Long) => x.compareTo(y)
-              case (x: Int, y: Int) => x.compareTo(y)
-              case (x: String, y: String) => x.compareTo(y)
-              case _ => 0
-            }
-            if (desc) cmp > 0 else cmp < 0
-        }
-        val filtered = data.filter(passes)
-        val sorted = filtered.sortBy(r => effKeys.map { case (k, desc) =>
-          (cell(r, k), desc)
-        })(Ordering.Implicits.seqOrdering(anyOrd))
-        val offset = req.effectiveOffset.getOrElse(0L).toInt
-        val sliced = req.effectiveLimit
-          .map(l => sorted.slice(offset, offset + l.toInt))
-          .getOrElse(sorted.drop(offset))
-        val expected = sliced.map(_._1)
+        val got = table(capsByName).query(req).select("id").collect().map(_.getLong(0)).toSeq
+        val expected = slice(modelIds(capsByName, req), req)
 
         val ok = got == expected
         if (!ok) System.err.println(
@@ -159,5 +168,85 @@ class QueryCompilerPropSpec extends SparkTestBase {
     val result = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(60), prop)
     assert(result.passed, result.status.toString)
+  }
+
+  test("pagedView: total = model's filtered count, data = model's sorted page (scalacheck)") {
+    val prop = Prop.forAll(genCaps, genCaps, genCaps, genOrders, genFilter, genPaging) {
+      (nameCaps: Caps, nickCaps: Caps, ageCaps: Caps,
+       orders: Seq[ColumnOrder], filters: Map[String, Map[String, Any]],
+       paging: (Long, Long)) =>
+
+        val capsByName = Map("name" -> nameCaps, "nick" -> nickCaps, "ageOpt" -> ageCaps)
+        val req = QuerySpec(
+          columns = Some(Seq("id")),
+          orders = orders :+ ColumnOrder("id", desc = false),
+          filters = filters, pageIndex = Some(paging._1), pageSize = Some(paging._2))
+
+        val pv = table(capsByName).pagedView(req)
+        val ids = modelIds(capsByName, req)
+        val expected = slice(ids, req).map(id => s"""{"id":$id}""")
+
+        val ok = pv.total == ids.size && pv.view.data == expected
+        if (!ok) System.err.println(
+          s"[prop-fail] total=${pv.total} data=${pv.view.data} model=$ids " +
+            s"expected=$expected caps=$capsByName orders=${req.orders} " +
+            s"filters=$filters paging=$paging")
+        ok
+    }
+    val result = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(40), prop)
+    assert(result.passed, result.status.toString)
+  }
+
+  test("an overflowing or non-Int page is refused in both modes, never wrapped or clamped") {
+    val t = table(colNames.map(_ -> Caps(sortable = true, None, filterable = true)).toMap)
+    val max = Int.MaxValue.toLong
+    val unservable = Seq(
+      QuerySpec(pageIndex = Some(Long.MaxValue / 2), pageSize = Some(4)), // overflows
+      QuerySpec(pageIndex = Some(1L << 31), pageSize = Some(1)), // offset > Int.MaxValue
+      QuerySpec(drop = Some(max + 1)),
+      QuerySpec(drop = Some(max), take = Some(1)), // offset + limit > Int.MaxValue
+      QuerySpec(take = Some(max + 1)))
+    for (req <- unservable; strict <- Seq(false, true)) {
+      val st = t.withStrict(strict)
+      val reasons = Seq[() => Any](
+        () => st.query(req), () => st.pagedView(req),
+        () => QueryCompiler.paginate(friend, req)).map { call =>
+        intercept[GraftAnalysisException](call()).errors.mkString
+      }
+      reasons.foreach(r => assert(r.contains("offset"), r))
+    }
+    // the largest servable pages are served (past the end: an empty page)
+    for (req <- Seq(QuerySpec(drop = Some(max)), QuerySpec(drop = Some(max - 1), take = Some(1)))) {
+      val pv = t.pagedView(req)
+      assert(pv.total == 4 && pv.view.data.isEmpty)
+    }
+    assert(t.query(QuerySpec(take = Some(max))).count() == 4)
+  }
+
+  test("strict mode refuses negative pagination; lenient mode clamps it") {
+    val t = table(colNames.map(_ -> Caps(sortable = true, None, filterable = true)).toMap)
+    val byId = QuerySpec(columns = Some(Seq("id")), orders = Seq(ColumnOrder("id", desc = false)))
+    def ids(req: QuerySpec): Seq[Long] =
+      t.query(req).collect().map(_.getLong(0)).toSeq
+    val negatives = Seq(
+      "drop" -> byId.copy(drop = Some(-1)),
+      "take" -> byId.copy(take = Some(-1)),
+      "pageIndex" -> byId.copy(pageIndex = Some(-1), pageSize = Some(2)),
+      "pageSize" -> byId.copy(pageIndex = Some(1), pageSize = Some(-2)))
+    for ((field, req) <- negatives) {
+      val ex = intercept[GraftAnalysisException](t.withStrict(true).pagedView(req))
+      assert(ex.errors.exists(_.contains(s"'$field'")), ex.errors)
+      intercept[GraftAnalysisException](t.withStrict(true).query(req))
+    }
+    // all-errors-at-once: pagination errors join the request's other errors
+    val both = intercept[GraftAnalysisException](t.withStrict(true)
+      .query(byId.copy(drop = Some(-1), columns = Some(Seq("id", "nope")))))
+    assert(both.errors.size == 2, both.errors)
+    // lenient: a negative offset skips nothing, a negative limit is empty
+    assert(ids(byId.copy(drop = Some(-1))) == Seq(1L, 2L, 3L, 4L))
+    assert(ids(byId.copy(take = Some(-1))).isEmpty)
+    assert(ids(byId.copy(pageIndex = Some(-1), pageSize = Some(2))) == Seq(1L, 2L))
+    assert(ids(byId.copy(pageIndex = Some(1), pageSize = Some(-2))).isEmpty)
   }
 }

@@ -4,7 +4,14 @@ import graft.SparkTestBase
 import graft.compile.{ColumnOrder, QuerySpec}
 import graft.core.ColumnSpec.dsl._
 import graft.transform.Derive
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions.col
+
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 /** Golden tests reproducing the reference's captured outputs on the `friend`
   * fixture (FIXTURES.md §A; expectations from documentation/doc-02.md:96-171
@@ -54,7 +61,42 @@ class CoreGoldenSpec extends SparkTestBase {
     assert(ids2 == Seq(1L, 4L, 3L, 2L)) // 小莎莎 > shihu > kerr > jilen 酱
   }
 
-  test("pagedView: total = unpaged count over ONE cached materialization (doc-02.md:135)") {
+  /** Runs `body` under a job group; returns its result, the jobs it ran and
+    * the physical plans its SQL executions started with. Listener delivery
+    * is async but in order, so a fence job run after `body` marks the end of
+    * its events. */
+  private def traced[T](body: => T): (T, Int, Seq[SparkPlanInfo]) = {
+    val sc = spark.sparkContext
+    val group = s"graft-test-traced-${System.nanoTime()}"
+    val jobs = new AtomicInteger
+    val plans = new ConcurrentLinkedQueue[SparkPlanInfo]
+    val fenced = new CountDownLatch(1)
+    def groupOf(props: java.util.Properties): String =
+      Option(props).map(_.getProperty("spark.jobGroup.id")).orNull
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (groupOf(js.properties) == group) jobs.incrementAndGet()
+        else if (groupOf(js.properties) == s"$group-fence") fenced.countDown()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case st: SparkListenerSQLExecutionStart if st.jobGroupId.contains(group) =>
+          plans.add(st.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "traced", interruptOnCancel = false)
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-fence", "fence", interruptOnCancel = false)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fenced.await(60, TimeUnit.SECONDS), "the listener never saw the fence job")
+      (out, jobs.get, plans.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
+
+  test("pagedView: count() total + top-K page, no cache (doc-02.md:135)") {
     val evals = spark.sparkContext.longAccumulator("graft-test-source-evals")
     val tick = org.apache.spark.sql.functions.udf { (s: String) => evals.add(1L); s }
     val src = friend.withColumn("name", tick(col("name")))
@@ -64,23 +106,59 @@ class CoreGoldenSpec extends SparkTestBase {
     val qs = QuerySpec(
       orders = Seq(ColumnOrder("id", desc = false)),
       pageIndex = Some(1), pageSize = Some(2))
-    // baseline: ONE plain materialization of the shared (unpaged) plan —
-    // the global sort's range-partitioner sampling makes the absolute eval
+    // baseline: ONE plain materialization of the unpaged request — the
+    // global sort's range-partitioner sampling makes the absolute eval
     // count plan-dependent, so we compare against it rather than row count
+    val unpagedQs = qs.copy(pageIndex = None, pageSize = None)
     evals.reset()
-    t.query(qs.copy(pageIndex = None, pageSize = None)).collect()
+    t.query(unpagedQs).collect()
     val oneMaterialization = evals.value
 
     evals.reset()
-    val pv = t.pagedView(qs)
+    val (pv, jobs, plans) = traced(t.pagedView(qs))
     assert(pv.total == 4)
     assert(pv.view.data == Seq(
       """{"id":3,"name":"品神"}""",
       """{"id":4,"name":"廖师虎"}"""))
-    assert(evals.value == oneMaterialization,
-      s"source evaluated ${evals.value} times for total+page — expected one " +
-        s"materialization ($oneMaterialization); the count or the page recomputed the input")
     assert(pv.toJson.startsWith("""{"total":4,"properties":[{"property":"id""""))
+    assert(evals.value <= oneMaterialization,
+      s"source evaluated ${evals.value} times for total+page — more than one " +
+        s"plain materialization ($oneMaterialization)")
+    // count: scan + final aggregate stage; page: one top-K job
+    assert(jobs <= 3, s"pagedView ran $jobs jobs")
+    val ran = plans.flatMap(nodes)
+    assert(ran.exists(_.nodeName == "TakeOrderedAndProject"), ran.map(_.nodeName).distinct)
+    assert(!ran.exists(_.simpleString.toLowerCase.contains("rangepartitioning")),
+      "a paged view must not range-partition the unpaged result")
+    assert(!ran.exists(_.nodeName == "InMemoryTableScan"), "a paged view must not cache")
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    assert(session.sharedState.cacheManager
+      .lookupCachedData(session, t.query(unpagedQs).queryExecution.analyzed).isEmpty)
+  }
+
+  test("pagedView: a page past the end is empty with the exact total") {
+    val pv = decl1.pagedView(QuerySpec(
+      orders = Seq(ColumnOrder("id", desc = false)),
+      pageIndex = Some(5), pageSize = Some(3)))
+    assert(pv.total == 4)
+    assert(pv.view.data.isEmpty)
+    assert(pv.toJson.endsWith(""""data":[]}"""))
+  }
+
+  test("pagedView without orders: min(limit, total - offset) rows of the filtered set") {
+    val t = TableSpec(friend, Seq(
+      "id".ofCol(col("id")).order,
+      "ageOpt".ofCol(col("age")).comparable))
+    val filtered = Set("""{"id":2,"ageOpt":30}""", """{"id":3,"ageOpt":28}""")
+    for ((offset, limit) <- Seq((0L, 5L), (0L, 1L), (1L, 5L), (2L, 5L))) {
+      val pv = t.pagedView(QuerySpec(
+        filters = Map("ageOpt" -> Map("lt" -> 100)),
+        drop = Some(offset), take = Some(limit)))
+      assert(pv.total == 2)
+      assert(pv.view.data.size == math.min(limit, 2 - offset))
+      assert(pv.view.data.toSet.subsetOf(filtered))
+      assert(pv.view.data.distinct == pv.view.data)
+    }
   }
 
   test("lenient: an all-unknown projection request falls back to the declared view") {
