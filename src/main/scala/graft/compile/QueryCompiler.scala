@@ -2,8 +2,8 @@ package graft.compile
 
 import graft.core.{ColumnSpec, FilterOp, GraftAnalysisException}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.DataType
 
 import scala.collection.mutable.ListBuffer
 
@@ -26,24 +26,35 @@ import scala.collection.mutable.ListBuffer
   */
 object QueryCompiler {
 
-  def compile(df: DataFrame, specs: Seq[ColumnSpec], qs: QuerySpec,
-      strict: Boolean = false): DataFrame = paginate(unpaged(df, specs, qs, strict), qs)
+  /** Observation name [[unpaged]] reserves for a sorted paged request's
+    * filtered row count; a source must not observe under this name. */
+  val PageTotal = "__graft_page_total"
 
-  /** The request minus its offset/limit; validates the whole request,
-    * pagination included, so a paged view refuses before it runs a job. */
+  def compile(df: DataFrame, specs: Seq[ColumnSpec], qs: QuerySpec,
+      strict: Boolean = false): DataFrame =
+    paginate(unpaged(df, specs, boundTypes(df, specs), qs, strict), qs)
+
+  /** Each declared column's Spark type, bound against `df` (literal casts). */
+  def boundTypes(df: DataFrame, specs: Seq[ColumnSpec]): Map[String, DataType] =
+    df.select(specs.map(_.boundCol): _*).schema.fields.map(f => f.name -> f.dataType).toMap
+
+  /** The request minus its offset/limit, against the declaration's bound
+    * column `types` ([[boundTypes]]); validates the whole request,
+    * pagination included, so a paged view refuses before it runs a job.
+    * With `countRows`, a sorted request also counts its filtered rows as the
+    * observed metric [[PageTotal]], between the filter and the sort: a
+    * top-K page reads every one of them. */
   def unpaged(
       df: DataFrame,
       specs: Seq[ColumnSpec],
+      types: Map[String, DataType],
       qs: QuerySpec,
-      strict: Boolean = false): DataFrame = {
+      strict: Boolean,
+      countRows: Boolean = false): DataFrame = {
 
     val errors = ListBuffer.from(paginationErrors(qs, strict))
     if (errors.nonEmpty && !strict) throw GraftAnalysisException(errors.toList)
     val registry: Map[String, ColumnSpec] = specs.map(s => s.name -> s).toMap
-    // bind once to know each declared column's Spark type (for literal casts)
-    val bound: StructType = df.select(specs.map(_.boundCol): _*).schema
-    val typeOf: Map[String, DataType] =
-      bound.fields.map(f => f.name -> f.dataType).toMap
 
     // ---- dynamic filters (C8) ----
     val predicates: Seq[Column] = qs.filters.toSeq.sortBy(_._1).flatMap {
@@ -62,7 +73,7 @@ object QueryCompiler {
                   errors += s"filter: column '$prop' does not allow '$opName'"
                   None
                 case Some(op) =>
-                  buildPredicate(spec, op, value, typeOf.get(prop), errors)
+                  buildPredicate(spec, op, value, types.get(prop), errors)
               }
             }
         }
@@ -107,16 +118,22 @@ object QueryCompiler {
 
     var out = df
     if (predicates.nonEmpty) out = out.filter(predicates.reduce(_ && _))
-    if (sortKeys.nonEmpty) out = out.orderBy(sortKeys: _*)
+    if (sortKeys.nonEmpty) {
+      if (countRows) out = out.observe(PageTotal, count(lit(1)))
+      out = out.orderBy(sortKeys: _*)
+    }
     out.select(visibleSpecs.map(_.boundCol): _*)
   }
 
-  /** Apply the request's offset/limit; a limit over a sorted [[unpaged]]
-    * plan plans as a top-K (`TakeOrderedAndProject(limit, offset)`), not a
-    * full sort. A page Spark cannot address — an overflowing `pageIndex *
-    * pageSize`, or offset + limit past Int.MaxValue rows — is refused in
-    * both modes: wrapping or clamping it would serve other rows. Lenient
-    * clamping: a negative offset skips nothing, a negative limit is empty. */
+  /** Apply the request's offset/limit. A limit over a sorted [[unpaged]]
+    * plan plans as a top-K (`TakeOrderedAndProject(limit, offset)`): one
+    * job that reads every filtered row, not a full sort, so its
+    * [[PageTotal]] count is the page's total. An offset with no limit plans
+    * a range-partitioned sort instead. A page Spark cannot address — an
+    * overflowing `pageIndex * pageSize`, or offset + limit past
+    * Int.MaxValue rows — is refused in both modes: wrapping or clamping it
+    * would serve other rows. Lenient clamping: a negative offset skips
+    * nothing, a negative limit is empty. */
   def paginate(df: DataFrame, qs: QuerySpec): DataFrame = {
     val refused = paginationErrors(qs, strict = false)
     if (refused.nonEmpty) throw GraftAnalysisException(refused)

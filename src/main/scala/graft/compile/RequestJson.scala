@@ -1,6 +1,10 @@
 package graft.compile
 
+import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import graft.core.GraftAnalysisException
+
+import scala.collection.mutable.ListBuffer
 import scala.jdk.CollectionConverters._
 
 /** JSON request → [[QuerySpec]] — the reference's stated goal of driving
@@ -20,34 +24,63 @@ object RequestJson {
 
   private val mapper = new ObjectMapper()
 
+  /** Parses one request; a value of the wrong JSON type, or an integer past
+    * the Long range, is refused with every such error at once in a
+    * [[GraftAnalysisException]], in both modes: Jackson's `asLong`/`asText`
+    * would silently turn it into another value. */
   def parseQuerySpec(json: String): QuerySpec = {
-    val root = mapper.readTree(json)
+    val root = try mapper.readTree(json) catch {
+      case e: JsonProcessingException =>
+        throw GraftAnalysisException(Seq(s"request: not JSON: ${e.getOriginalMessage}"))
+    }
+    if (root == null || !root.isObject)
+      throw GraftAnalysisException(Seq("request: must be a JSON object"))
+    val errors = ListBuffer.empty[String]
     def opt(name: String): Option[JsonNode] =
       Option(root.get(name)).filterNot(_.isNull)
+    def elements(field: String, n: JsonNode): Seq[JsonNode] =
+      if (n.isArray) n.elements().asScala.toSeq
+      else { errors += s"$field: must be an array, got $n"; Nil }
+    def fields(field: String, n: JsonNode): Seq[(String, JsonNode)] =
+      if (n.isObject) n.properties().asScala.map(e => e.getKey -> e.getValue).toSeq
+      else { errors += s"$field: must be an object, got $n"; Nil }
+    def text(field: String, n: JsonNode): Option[String] =
+      if (n != null && n.isTextual) Some(n.asText())
+      else { errors += s"$field: must be a string, got $n"; None }
+    def long(field: String): Option[Long] = opt(field).flatMap { n =>
+      if (n.isIntegralNumber && n.canConvertToLong) Some(n.asLong())
+      else { errors += s"page: '$field' must be an integer in the Long range, got $n"; None }
+    }
+    // JSON scalar/array -> the Any the predicate builder understands
+    def value(field: String, n: JsonNode): Any =
+      if (n.isArray) n.elements().asScala.map(value(field, _)).toSeq
+      else if (n.isBoolean) n.asBoolean()
+      else if (n.isIntegralNumber) {
+        if (!n.canConvertToLong) errors += s"$field: integer $n is past the Long range"
+        n.asLong()
+      }
+      else if (n.isNumber) n.asDouble()
+      else if (n.isTextual) n.asText()
+      else { errors += s"$field: unsupported literal $n"; n.toString }
 
-    QuerySpec(
-      columns = opt("columns").map(_.elements().asScala.map(_.asText()).toSeq),
-      filters = opt("filters").map { f =>
-        f.properties().asScala.map { e =>
-          e.getKey -> e.getValue.properties().asScala
-            .map(op => op.getKey -> value(op.getValue)).toMap
+    val qs = QuerySpec(
+      columns = opt("columns").map(c => elements("columns", c).flatMap(text("columns", _))),
+      filters = opt("filters").map(f => fields("filters", f).map { case (prop, ops) =>
+        prop -> fields(s"filters.$prop", ops).map { case (op, v) =>
+          op -> value(s"filters.$prop.$op", v)
         }.toMap
-      }.getOrElse(Map.empty),
-      orders = opt("orders").map(_.elements().asScala.map { o =>
-        ColumnOrder(o.get("column").asText(),
-          Option(o.get("desc")).exists(_.asBoolean(false)))
-      }.toSeq).getOrElse(Nil),
-      drop = opt("drop").map(_.asLong()),
-      take = opt("take").map(_.asLong()),
-      pageIndex = opt("pageIndex").map(_.asLong()),
-      pageSize = opt("pageSize").map(_.asLong()))
+      }.toMap).getOrElse(Map.empty),
+      orders = opt("orders").map(os => elements("orders", os).flatMap { o =>
+        val desc = Option(o.get("desc")).filterNot(_.isNull)
+        desc.filterNot(_.isBoolean).foreach(d => errors += s"orders: 'desc' must be a boolean, got $d")
+        text("orders: 'column'", o.get("column"))
+          .map(ColumnOrder(_, desc.exists(_.asBoolean())))
+      }).getOrElse(Nil),
+      drop = long("drop"),
+      take = long("take"),
+      pageIndex = long("pageIndex"),
+      pageSize = long("pageSize"))
+    if (errors.nonEmpty) throw GraftAnalysisException(errors.toList)
+    qs
   }
-
-  /** JSON scalar/array → the Any the predicate builder understands. */
-  private def value(n: JsonNode): Any =
-    if (n.isArray) n.elements().asScala.map(value).toSeq
-    else if (n.isBoolean) n.asBoolean()
-    else if (n.isIntegralNumber) n.asLong()
-    else if (n.isNumber) n.asDouble()
-    else n.asText()
 }

@@ -3,7 +3,11 @@ package graft.core
 import graft.compile.{QueryCompiler, QuerySpec}
 import graft.render.{JsonView, JsonWriter, PagedView, PropertyInfo}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.expressions.SortOrder
+import org.apache.spark.sql.execution.{CollectMetricsExec, SparkPlan, TakeOrderedAndProjectExec, UnaryExecNode}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ResultQueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.types.DataType
 
 /** A source `DataFrame` plus its column declarations — the unit a dynamic
   * request is compiled against.
@@ -27,27 +31,26 @@ final case class TableSpec(
 
   lazy val registry: Map[String, ColumnSpec] = specs.map(s => s.name -> s).toMap
 
-  /** Schema of the fully-bound declaration (all columns, incl. hidden). */
-  lazy val boundSchema: StructType = df.select(specs.map(_.boundCol): _*).schema
+  /** Spark type of every declared column (incl. hidden), bound once: every
+    * request compiles against it. */
+  private lazy val boundTypes: Map[String, DataType] = QueryCompiler.boundTypes(df, specs)
 
   /** Client-facing column descriptors, one per declared column, with the
     * exact fields of the reference's properties view (doc-02.md:107-117). */
-  def properties: Seq[PropertyInfo] = {
-    val types = boundSchema.fields.map(f => f.name -> f.dataType).toMap
+  def properties: Seq[PropertyInfo] =
     specs.map { s =>
       PropertyInfo(
         property = s.name,
-        typeName = s.typeName(types(s.name)),
+        typeName = s.typeName(boundTypes(s.name)),
         inRetrieve = s.inView,
         canOrder = s.canOrder,
         isDefaultDesc = s.defaultDesc,
         describe = s.describeText)
     }
-  }
 
   /** Compile a dynamic request into a lazy DataFrame pipeline. */
   def query(qs: QuerySpec = QuerySpec()): DataFrame =
-    QueryCompiler.compile(df, specs, qs, strict)
+    QueryCompiler.paginate(QueryCompiler.unpaged(df, specs, boundTypes, qs, strict), qs)
 
   /** Compile + execute + render the `JsonView{properties, data}` sink
     * (doc-02.md:96-117). Driver-side by design: a view is a bounded page —
@@ -57,18 +60,53 @@ final case class TableSpec(
 
   /** Paged view carrying the unpaged result total (reference:
     * doc-02.md:135 — pageIndex/pageSize requests imply a total so clients
-    * can render pagers). Two plain actions over one analyzed unpaged plan:
+    * can render pagers). One collect of the [[QueryCompiler.paginate]]d
+    * request: a sorted, limited page runs as a single top-K job, and the
+    * total is the [[QueryCompiler.PageTotal]] row count observed under that
+    * top-K while it read every filtered row, so the total and the page come
+    * from the same evaluation. Where the executed plan cannot vouch for that
+    * count ([[observedTotal]]) — an unsorted page, an offset with no limit,
+    * a source already in the page's order, a page the optimizer pruned —
+    * the total is a second action,
     * `count()`, from which the optimizer drops the sort and unused (UDF)
-    * columns, and a collect of [[QueryCompiler.paginate]], which runs a
-    * sorted page as a per-partition top-K — no cache, no range sort. A
-    * non-deterministic source may give the total and the page from two
-    * evaluations, as the reference's count and page statements may. */
+    * columns. No cache, no range sort on the one-job path. */
   def pagedView(qs: QuerySpec = QuerySpec()): PagedView = {
-    val unpaged = QueryCompiler.unpaged(df, specs, qs, strict)
-    val total = unpaged.count()
-    val rows = QueryCompiler.paginate(unpaged, qs).collect()
+    val unpaged = QueryCompiler.unpaged(df, specs, boundTypes, qs, strict, countRows = true)
+    val page = QueryCompiler.paginate(unpaged, qs)
+    val rows = page.collect()
+    val total = observedTotal(page).getOrElse(unpaged.count())
     PagedView(total, JsonView(properties,
-      rows.toIndexedSeq.map(JsonWriter.writeRow(unpaged.schema))))
+      rows.toIndexedSeq.map(JsonWriter.writeRow(page.schema))))
+  }
+
+  /** The [[QueryCompiler.PageTotal]] count `page`'s collect observed, read
+    * synchronously from its executed plan, if that count is exact: the
+    * plan's root is a top-K whose child is not already in its order (else it
+    * reads a partition only up to the limit) and only unary, non-exchange
+    * nodes sit between it and the count. That is one result stage, and the
+    * scheduler applies a result task's accumulator update once. Otherwise
+    * (a `CollectLimit` reads some partitions; a range sort's sampling job
+    * re-runs the subtree; a pruned plan has no count) `None`. */
+  private def observedTotal(page: DataFrame): Option[Long] = {
+    def counted(p: SparkPlan): Option[CollectMetricsExec] = p match {
+      case m: CollectMetricsExec if m.name == QueryCompiler.PageTotal => Some(m)
+      case _: Exchange => None
+      case u: UnaryExecNode => counted(u.child)
+      case _ => None
+    }
+    val root = page.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan match {
+        case r: ResultQueryStageExec => r.plan
+        case p => p
+      }
+      case p => p
+    }
+    root match {
+      case top: TakeOrderedAndProjectExec
+          if !SortOrder.orderingSatisfies(top.child.outputOrdering, top.sortOrder) =>
+        counted(top.child).map(_.collectedMetrics.getLong(0))
+      case _ => None
+    }
   }
 
   def withStrict(s: Boolean): TableSpec = copy(strict = s)

@@ -1,7 +1,7 @@
 package graft.compile
 
 import graft.SparkTestBase
-import graft.core.{ColumnSpec, DynamicTable, TableSpec}
+import graft.core.{ColumnSpec, DynamicTable, GraftAnalysisException, TableSpec}
 import graft.core.ColumnSpec.dsl._
 import graft.plans.Channels
 import org.apache.spark.sql.functions._
@@ -21,6 +21,30 @@ class RequestJsonSpec extends SparkTestBase {
         "y" -> Map("in" -> Seq(1L, 2L))),
       orders = Seq(ColumnOrder("a", desc = true), ColumnOrder("b", desc = false)),
       drop = Some(5L), pageSize = Some(20L)))
+  }
+
+  // Jackson's asLong()/asText() would serve each of these as another value
+  // (0, 1, a wrapped Long) or throw an NPE; every one is a typed refusal
+  private val pastLong = "100000000000000000000"
+  for ((what, json) <- Seq(
+      "a string pageSize" -> """{"pageSize": "abc"}""",
+      "an array pageSize" -> """{"pageSize": [3]}""",
+      "a fractional pageSize" -> """{"pageSize": 1.5}""",
+      "a boolean take" -> """{"take": true}""",
+      "a drop past the Long range" -> s"""{"drop": $pastLong}""",
+      "a pageIndex past the Long range" -> s"""{"pageIndex": $pastLong, "pageSize": 1}""",
+      "a filter literal past the Long range" -> s"""{"filters": {"id": {"eq": $pastLong}}}""",
+      "an order with no column" -> """{"orders": [{"desc": true}]}"""))
+    test(s"JSON request refused: $what") {
+      val ex = intercept[GraftAnalysisException](RequestJson.parseQuerySpec(json))
+      assert(ex.errors.size == 1, ex.errors)
+    }
+
+  test("JSON request refusal reports every bad field at once") {
+    val ex = intercept[GraftAnalysisException](RequestJson.parseQuerySpec(
+      s"""{"pageSize": "abc", "drop": 1.5, "orders": [{"column": 3}],
+         |  "filters": {"id": {"in": [1, $pastLong]}}}""".stripMargin))
+    assert(ex.errors.size == 4, ex.errors)
   }
 
   test("JSON-declared table behaves identically to the builder declaration") {

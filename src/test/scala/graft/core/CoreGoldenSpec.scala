@@ -7,7 +7,7 @@ import graft.transform.Derive
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
@@ -96,7 +96,7 @@ class CoreGoldenSpec extends SparkTestBase {
 
   private def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
 
-  test("pagedView: count() total + top-K page, no cache (doc-02.md:135)") {
+  test("pagedView: one top-K job counts the total, no cache (doc-02.md:135)") {
     val evals = spark.sparkContext.longAccumulator("graft-test-source-evals")
     val tick = org.apache.spark.sql.functions.udf { (s: String) => evals.add(1L); s }
     val src = friend.withColumn("name", tick(col("name")))
@@ -124,16 +124,70 @@ class CoreGoldenSpec extends SparkTestBase {
     assert(evals.value <= oneMaterialization,
       s"source evaluated ${evals.value} times for total+page — more than one " +
         s"plain materialization ($oneMaterialization)")
-    // count: scan + final aggregate stage; page: one top-K job
-    assert(jobs <= 3, s"pagedView ran $jobs jobs")
+    // the page's top-K job is the whole request: it also counts the total
+    assert(jobs == 1, s"pagedView ran $jobs jobs")
     val ran = plans.flatMap(nodes)
-    assert(ran.exists(_.nodeName == "TakeOrderedAndProject"), ran.map(_.nodeName).distinct)
+    val tops = ran.filter(_.nodeName == "TakeOrderedAndProject")
+    assert(tops.nonEmpty, ran.map(_.nodeName).distinct)
+    assert(tops.exists(nodes(_).exists(_.nodeName == "CollectMetrics")),
+      "the total must be counted below the top-K")
     assert(!ran.exists(_.simpleString.toLowerCase.contains("rangepartitioning")),
       "a paged view must not range-partition the unpaged result")
     assert(!ran.exists(_.nodeName == "InMemoryTableScan"), "a paged view must not cache")
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     assert(session.sharedState.cacheManager
       .lookupCachedData(session, t.query(unpagedQs).queryExecution.analyzed).isEmpty)
+  }
+
+  test("pagedView: pages the top-K cannot count take the exact total from count()") {
+    val t = TableSpec(friend, Seq(
+      "id".ofCol(col("id")).order.filterable(FilterOp.In),
+      "ageOpt".ofCol(col("age")).comparable))
+    val byId = QuerySpec(columns = Some(Seq("id")), orders = Seq(ColumnOrder("id", desc = false)))
+    // offset, no limit: a range-partitioned sort whose sampling job re-runs
+    // the counted subtree, so an observed count would be twice the rows
+    val dropOnly = t.pagedView(byId.copy(drop = Some(1)))
+    assert(dropOnly.total == 4)
+    assert(dropOnly.view.data == Seq("""{"id":2}""", """{"id":3}""", """{"id":4}"""))
+    val filtered = t.pagedView(byId.copy(drop = Some(1), filters = Map("ageOpt" -> Map("lt" -> 100))))
+    assert(filtered.total == 2 && filtered.view.data == Seq("""{"id":3}"""))
+    // a page of size 0 and an always-false filter: the optimizer prunes the
+    // counted subtree
+    val empty = t.pagedView(byId.copy(pageIndex = Some(1), pageSize = Some(0)))
+    assert(empty.total == 4 && empty.view.data.isEmpty)
+    val none = t.pagedView(byId.copy(take = Some(2), filters = Map("id" -> Map("in" -> Seq.empty))))
+    assert(none.total == 0 && none.view.data.isEmpty)
+  }
+
+  test("pagedView: a source already in the page's order, or joined under AQE, keeps the exact total") {
+    val qs = QuerySpec(orders = Seq(ColumnOrder("id", desc = false)), take = Some(1))
+    // already in order: the top-K reads each partition only up to its limit
+    val presorted = friend.sortWithinPartitions(col("id").asc_nulls_last)
+    // a shuffle join: the top-K runs in AQE's result stage, above the exchanges
+    val keys = spark.range(0, 10).toDF("k")
+    val joined = friend.join(keys.hint("shuffle_merge"), col("id") === col("k"))
+    for ((src, observed) <- Seq(presorted -> false, joined -> true)) {
+      val (pv, _, plans) = traced(TableSpec(src, Seq("id".ofCol(col("id")).order)).pagedView(qs))
+      assert(pv.total == 4)
+      assert(pv.view.data == Seq("""{"id":1}"""))
+      // an observed total needs no second query; the count() fallback is one
+      assert(plans.size == (if (observed) 1 else 2), plans.map(_.simpleString))
+    }
+  }
+
+  test("pagedView: a source's own observation survives and the total stays exact") {
+    val seen = org.apache.spark.sql.Observation("graft-test-source-rows")
+    val src = friend.observe(seen, org.apache.spark.sql.functions.count(lit(1)).as("rows"))
+    val t = TableSpec(src, Seq(
+      "id".ofCol(col("id")).order,
+      "ageOpt".ofCol(col("age")).comparable))
+    val (pv, jobs, _) = traced(t.pagedView(QuerySpec(
+      columns = Some(Seq("id")), orders = Seq(ColumnOrder("id", desc = true)),
+      filters = Map("ageOpt" -> Map("lt" -> 100)), take = Some(1))))
+    assert(pv.total == 2)
+    assert(pv.view.data == Seq("""{"id":3}"""))
+    assert(jobs == 1, s"pagedView ran $jobs jobs")
+    assert(seen.get == Map("rows" -> 4L))
   }
 
   test("pagedView: a page past the end is empty with the exact total") {
