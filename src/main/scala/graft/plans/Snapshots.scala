@@ -225,19 +225,9 @@ object Snapshots {
     val toWrite =
       if (statsCols.isEmpty) distribute(df)
       else cluster(df, statsCols, zorder)
-    graft.core.Labeled(s, s"graft commitFull v$v: write $dir") {
-      toWrite.write.mode("overwrite").partitionBy("split")
-        .parquet(s"$root/$dir")
-    }
-    // explicit schema: an EMPTY corpus writes no part files, and an
-    // inference-based read-back would refuse instead of recording v1
-    val written = s.read.schema(df.schema)
-      .option("basePath", s"$root/$dir")
-      .parquet(s"$root/$dir")
-    val (refsMap, blooms) =
-      graft.core.Labeled(s, s"graft commitFull v$v: stats+bloom read-back") {
-        collectRefsAndBlooms(s, written, dir, statsCols, bloomCols)
-      }
+    // an EMPTY corpus writes no part files and records v1 with no refs
+    val (refsMap, blooms) = writeSplits(s, toWrite, root, dir, statsCols,
+      bloomCols, s"graft commitFull v$v", s"write $dir")
     val refs = refsMap.values.toIndexedSeq
     // a full rewrite has no defined rebase against an interleaved delta
     // (it replaces the corpus wholesale) — a lost race refuses loudly
@@ -447,18 +437,176 @@ object Snapshots {
     None
   }
 
-  /** Per-split refs (row count + stats cells) AND the per-split bloom
-    * cells of freshly-written files, keyed by split — ONE aggregation
-    * pass over the written data (r16, guide §1.2/§2.3: stats and blooms
-    * group by the same key over the same files, so computing them as two
-    * jobs re-read the written data once per commit for nothing — at
-    * corpus scale a full extra pass over the delta's stats columns).
-    * Bounded driver collect — one row per split partition (the
-    * applyDelta bound). String columns pre-truncate INSIDE the
-    * aggregation (`substring` is monotone, so min/max of truncations =
-    * truncation of min/max) — the partial aggregates never carry more
-    * than cap+1 code points per value, whatever the stored strings'
-    * size. */
+  /** Write `frame` into `root/dir` (`partitionBy("split")` unless
+    * `partitioned` is false, as for a deletion-vector sidecar) and return
+    * the per-split refs (row count + stats cells) and bloom cells of what
+    * was written, keyed by split.
+    *
+    * The metadata comes from the WRITE JOB itself: one typed per-split
+    * aggregator ([[SplitMetaAgg]]) is `observe`d on top of the frame, so
+    * it runs in the write's result stage, above its last exchange. Result
+    * tasks' accumulator updates are applied once per partition, so the
+    * counts are exact, and the commit pays no second query over its own
+    * files. The observation completes through a query-execution listener,
+    * i.e. asynchronously: the commit waits a fixed bound for it, and
+    * when it does not arrive falls back to reading the written files
+    * back ([[collectRefsAndBlooms]]). Both paths give the same refs,
+    * stats cells and bloom bytes, and both refuse NULL keys before
+    * anything is published. Driver payload: one buffer per split, the
+    * same bound as the read-back's one row per split (hash distribution
+    * puts each split in one task). */
+  private def writeSplits(s: SparkSession, frame: DataFrame, root: String,
+      dir: String, statsCols: Seq[String], bloomCols: Seq[String],
+      phase: String, write: String, partitioned: Boolean = true)
+      : (Map[String, SplitRef], Map[(String, String), Array[Byte]]) = {
+    val obs = org.apache.spark.sql.Observation()
+    val observed = frame.observe(obs,
+      splitMetaCol(s, frame.schema, statsCols, bloomCols).as("meta"))
+    graft.core.Labeled(s, s"$phase: $write") {
+      val w = observed.write.mode("overwrite")
+      (if (partitioned) w.partitionBy("split") else w).parquet(s"$root/$dir")
+    }
+    awaitSplitMeta(obs).filterNot(_.isNullAt(0)) match {
+      case Some(row) =>
+        observedRefs(s, row.getAs[Array[Byte]](0), frame.schema, dir,
+          statsCols, bloomCols, partitioned)
+      case None =>
+        // explicit schema: an EMPTY write leaves no part files, and an
+        // inference-based read would refuse instead of reading zero rows
+        val written = s.read.schema(frame.schema)
+          .option("basePath", s"$root/$dir").parquet(s"$root/$dir")
+        val what = if (partitioned) "stats+bloom" else "DV count"
+        graft.core.Labeled(s, s"$phase: $what read-back") {
+          collectRefsAndBlooms(s, written, dir, statsCols, bloomCols)
+        }
+    }
+  }
+
+  /** How long a commit waits for its write's observed metadata before it
+    * reads the written files back instead. Delivery normally takes well
+    * under a millisecond after the write returns. */
+  private val SplitMetaWait = scala.concurrent.duration.Duration(10, "s")
+
+  /** The observed metadata row of a finished write, or None when it did
+    * not arrive in time. A seam for tests, which replace it to force the
+    * read-back path. */
+  @volatile private[plans] var awaitSplitMeta
+      : org.apache.spark.sql.Observation => Option[org.apache.spark.sql.Row] =
+    obs =>
+      try Some(scala.concurrent.Await.result(obs.future, SplitMetaWait))
+      catch { case _: java.util.concurrent.TimeoutException => None }
+
+  /** The one aggregate [[writeSplits]] observes: [[SplitMetaAgg]] over
+    * (split, doc_id IS NOT NULL, one order key per stats column, one
+    * fingerprint per bloom column). The keys keep Spark's own order:
+    * strings as the UTF-8 bytes of their `cap + 1`-code-point prefix
+    * (the read-back's `substring`, compared byte-wise like Spark's binary
+    * collation), dates as epoch days and timestamps as epoch micros (the
+    * internal values, so no calendar conversion runs per row); other
+    * types compare as themselves. Blooms hash the read-back's exact
+    * fingerprint column. */
+  private def splitMetaCol(s: SparkSession,
+      schema: org.apache.spark.sql.types.StructType, statsCols: Seq[String],
+      bloomCols: Seq[String]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.types._
+    val cap = statsMaxStringLen(s)
+    val keys = statsCols.map { c =>
+      schema(c).dataType match {
+        case StringType =>
+          (substring(col(c), 1, cap + 1).cast(BinaryType), BinaryType, SplitMetaAgg.Bytes)
+        case DateType => (unix_date(col(c)), IntegerType, SplitMetaAgg.Integral)
+        case TimestampType => (unix_micros(col(c)), LongType, SplitMetaAgg.Integral)
+        case dt @ (ByteType | ShortType | IntegerType | LongType) =>
+          (col(c), dt, SplitMetaAgg.Integral)
+        case dt @ (FloatType | DoubleType) => (col(c), dt, SplitMetaAgg.Floating)
+        case dt => (col(c), dt, SplitMetaAgg.Ordered)
+      }
+    }
+    val inSchema = StructType(
+      Seq(StructField("split", StringType), StructField("has_doc_id", BooleanType)) ++
+        keys.zipWithIndex.map { case (k, i) => StructField(s"k$i", k._2) } ++
+        bloomCols.indices.map(i => StructField(s"f$i", LongType)))
+    val agg = new SplitMetaAgg(keys.map(_._3).toArray, bloomCols.size,
+      bloomBits(s) >>> 3, BloomK)
+    udaf(agg, org.apache.spark.sql.Encoders.row(inSchema))(
+      (Seq(col("split"), col("doc_id").isNotNull) ++ keys.map(_._1) ++
+        bloomCols.map(bloomFpCol(s, _))): _*)
+  }
+
+  /** The refs and bloom cells of an observed [[SplitMetaAgg]] result,
+    * rendered exactly as [[collectRefsAndBlooms]] renders the read-back:
+    * order keys turn back into the values a `collect()` of the written
+    * files would give (under this session's datetime API setting), then
+    * through [[renderStat]] and the string truncation. The writer's own
+    * key mapping is applied first: `partitionBy` writes an empty split,
+    * and one literally named like the Hive default partition, into the
+    * default-partition dir, which reads back NULL — so those refuse
+    * exactly as a NULL split does. */
+  private def observedRefs(s: SparkSession, bytes: Array[Byte],
+      schema: org.apache.spark.sql.types.StructType, dir: String,
+      statsCols: Seq[String], bloomCols: Seq[String], partitioned: Boolean)
+      : (Map[String, SplitRef], Map[(String, String), Array[Byte]]) = {
+    import org.apache.spark.sql.catalyst.util.DateTimeUtils
+    import org.apache.spark.sql.types._
+    val metas = SplitMetaAgg.decode(bytes)
+    val readsBackNull = (sp: String) => sp == null || (partitioned &&
+      (sp.isEmpty || sp == org.apache.spark.sql.catalyst.catalog
+        .ExternalCatalogUtils.DEFAULT_PARTITION_NAME))
+    if (metas.exists { case (sp, m) => readsBackNull(sp) || m.rows != m.docIds })
+      throw nullKeyRefusal()
+    val cap = statsMaxStringLen(s)
+    val java8 = s.sessionState.conf.datetimeJava8ApiEnabled
+    def value(c: String, k: AnyRef): Any = (schema(c).dataType, k) match {
+      case (StringType, b: Array[Byte]) =>
+        new String(b, java.nio.charset.StandardCharsets.UTF_8)
+      case (DateType, d: Integer) =>
+        if (java8) DateTimeUtils.daysToLocalDate(d) else DateTimeUtils.toJavaDate(d)
+      case (TimestampType, us: java.lang.Long) =>
+        if (java8) DateTimeUtils.microsToInstant(us)
+        else DateTimeUtils.toJavaTimestamp(us)
+      case (_, other) => other
+    }
+    val refs = metas.map { case (sp, m) =>
+      val cells = statsCols.indices.map { i =>
+        val c = statsCols(i)
+        val mn0 = Option(m.mins(i)).map(k => renderStat(value(c, k)))
+        val mx0 = Option(m.maxs(i)).map(k => renderStat(value(c, k)))
+        val (mn, mx) =
+          if (schema(c).dataType == StringType)
+            (mn0.map(truncMin(_, cap)), mx0.flatMap(truncMax(_, cap)))
+          else (mn0, mx0)
+        StatCell(mn, mx, m.rows - m.nonNull(i))
+      }
+      sp -> SplitRef(sp, dir, m.rows, cells)
+    }.toMap
+    val blooms = metas.toSeq.flatMap { case (sp, m) =>
+      bloomCols.zipWithIndex.map { case (c, i) => (sp, c) -> m.blooms(i) }
+    }.toMap
+    (refs, blooms)
+  }
+
+  /** The refusal of rows with no (split, doc_id) key: a NULL doc_id can
+    * never be tombstoned (DV joins never match null) and a NULL split has
+    * no partition home, so every commit door refuses them PRE-PUBLISH —
+    * the attempt dir stays invisible debris for vacuum. */
+  private def nullKeyRefusal(): graft.core.GraftAnalysisException =
+    graft.core.GraftAnalysisException(Seq(
+      s"commit refused: rows carry a NULL `split` or `doc_id` — " +
+        "store rows are (split, doc_id)-keyed; an input frame " +
+        "missing a column gets it NULL-filled by SQL by-name " +
+        "resolution, so key every row explicitly (nothing was " +
+        "published; the attempt dir is debris vacuum sweeps)"))
+
+  /** The FALLBACK of [[writeSplits]] when a write's observed metadata
+    * does not arrive: per-split refs (row count + stats cells) AND bloom
+    * cells read back from the freshly-written files, keyed by split —
+    * ONE aggregation pass (stats and blooms group by the same key over
+    * the same files). Bounded driver collect — one row per split
+    * partition (the applyDelta bound). String columns pre-truncate
+    * INSIDE the aggregation (`substring` is monotone, so min/max of
+    * truncations = truncation of min/max) — the partial aggregates never
+    * carry more than cap+1 code points per value, whatever the stored
+    * strings' size. */
   private def collectRefsAndBlooms(s: SparkSession, written: DataFrame,
       dir: String, statsCols: Seq[String], bloomCols: Seq[String])
       : (Map[String, SplitRef], Map[(String, String), Array[Byte]]) = {
@@ -470,10 +618,7 @@ object Snapshots {
       if (isStr(c)) substring(col(c), 1, cap + 1) else col(c)
     val bits = bloomBits(s)
     // doc_id nullability rides the SAME aggregate as the stats (zero
-    // extra jobs): a NULL doc_id can never be tombstoned (DV joins
-    // never match null) and a NULL split has no partition home, so the
-    // store refuses them at every commit door PRE-PUBLISH — the
-    // attempt dir stays invisible debris for vacuum
+    // extra jobs; see nullKeyRefusal)
     val aggs = Seq(count(lit(1)).as("n"),
       count(col("doc_id")).as("n_docid")) ++ statsCols.flatMap(c =>
       Seq(min(statExpr(c)), max(statExpr(c)), count(col(c)))) ++
@@ -484,13 +629,7 @@ object Snapshots {
       .collect()
     val refs = rows.map { r =>
       val n = r.getLong(1)
-      if (r.isNullAt(0) || n != r.getLong(2))
-        throw graft.core.GraftAnalysisException(Seq(
-          s"commit refused: rows carry a NULL `split` or `doc_id` — " +
-            "store rows are (split, doc_id)-keyed; an input frame " +
-            "missing a column gets it NULL-filled by SQL by-name " +
-            "resolution, so key every row explicitly (nothing was " +
-            "published; the attempt dir is debris vacuum sweeps)"))
+      if (r.isNullAt(0) || n != r.getLong(2)) throw nullKeyRefusal()
       val cells = statsCols.indices.map { i =>
         val base = 3 + i * 3
         val mn0 = Option(r.get(base)).map(renderStat)
@@ -690,51 +829,16 @@ object Snapshots {
     val confirmed = readRefs(s, root, vfBase.schema, affectedRefs)
       .join(victims, Seq("split", "doc_id"), "left_semi")
       .select(col("split"), col("doc_id"))
-    graft.core.Labeled(s, s"graft commitRemove v$v: write DV sidecar") {
-      confirmed.write.mode("overwrite").parquet(s"$root/$dvDir")
-    }
-    // exact per-split tombstone counts from the WRITTEN sidecar (the
-    // manifest verification contract, same as collectRefs)
-    val dvSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("split",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("doc_id",
-        vfBase.schema("doc_id").dataType)))
-    // DISTINCT doc_id per split rides the SAME read-back aggregation
-    // (r16, one pass): the sidecar legitimately holds one row per matched
-    // PHYSICAL row (duplicated (split, doc_id) corpus rows all tombstone,
-    // and dvRows must count them all), so requireAllFound compares
-    // DISTINCT keys — Σ per-split distinct doc_ids, since split is in
-    // the group key — not raw rows, which could mask an unmatched
-    // request behind a duplicate or spuriously refuse a fully-matched one
-    val countRows =
-      graft.core.Labeled(s, s"graft commitRemove v$v: DV count read-back") {
-        s.read.schema(dvSchema).parquet(s"$root/$dvDir")
-          .groupBy(col("split"))
-          .agg(count(lit(1)).as("c"), count_distinct(col("doc_id")).as("d"))
-          .collect()
-      }
-    val counts = countRows.map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (requireAllFound) {
-      val requested = victims.count() // victims are distinct by construction
-      val found = countRows.map(_.getLong(2)).sum
-      if (found != requested) {
-        // the unfulfilled requests, for the refusal — bounded sample
-        // (the written sidecar is unreferenced debris; vacuum sweeps it)
-        val missing = victims
-          .join(s.read.schema(dvSchema).parquet(s"$root/$dvDir"),
-            Seq("split", "doc_id"), "left_anti")
-          .limit(6).collect()
-          .map(r => s"(${r.get(0)}, ${r.get(1)})")
-        throw graft.core.GraftAnalysisException(Seq(
-          s"commitRemove at $root (requireAllFound): only $found of " +
-            s"$requested requested takedowns matched a live row — " +
-            s"unmatched e.g. ${missing.take(5).mkString(", ")}" +
-            (if (missing.length > 5) ", …" else "") +
-            "; a mis-keyed split or an already-deleted doc — nothing " +
-            "was committed"))
-      }
-    }
+    // exact per-split tombstone counts (the sidecar holds one row per
+    // matched PHYSICAL row: duplicated (split, doc_id) corpus rows all
+    // tombstone, and dvRows must count them all), observed in the
+    // sidecar's own write job
+    val counts: Map[String, Long] =
+      if (!requireAllFound)
+        writeSplits(s, confirmed, root, dvDir, Nil, Nil,
+          s"graft commitRemove v$v", "write DV sidecar", partitioned = false)
+          ._1.view.mapValues(_.nRows).toMap
+      else requireAllFoundCounts(s, root, victims, confirmed, dvDir, v)
     val newRefs = vfBase.refs.map { r =>
       counts.get(r.split) match {
         case Some(c) if c > 0 =>
@@ -752,6 +856,47 @@ object Snapshots {
     v
   }
 
+  /** [[commitRemove]]'s `requireAllFound` sidecar write: it needs the
+    * DISTINCT doc_ids per split besides the row counts, which the written
+    * sidecar is read back for. Requested and found keys are compared
+    * DISTINCT — Σ per-split distinct doc_ids, since split is in the group
+    * key — not as raw rows, which could mask an unmatched request behind
+    * a duplicate or spuriously refuse a fully-matched one. */
+  private def requireAllFoundCounts(s: SparkSession, root: String,
+      victims: DataFrame, confirmed: DataFrame, dvDir: String,
+      v: Int): Map[String, Long] = {
+    graft.core.Labeled(s, s"graft commitRemove v$v: write DV sidecar") {
+      confirmed.write.mode("overwrite").parquet(s"$root/$dvDir")
+    }
+    val dvSchema = confirmed.schema
+    val countRows =
+      graft.core.Labeled(s, s"graft commitRemove v$v: DV count read-back") {
+        s.read.schema(dvSchema).parquet(s"$root/$dvDir")
+          .groupBy(col("split"))
+          .agg(count(lit(1)).as("c"), count_distinct(col("doc_id")).as("d"))
+          .collect()
+      }
+    val requested = victims.count() // victims are distinct by construction
+    val found = countRows.map(_.getLong(2)).sum
+    if (found != requested) {
+      // the unfulfilled requests, for the refusal — bounded sample
+      // (the written sidecar is unreferenced debris; vacuum sweeps it)
+      val missing = victims
+        .join(s.read.schema(dvSchema).parquet(s"$root/$dvDir"),
+          Seq("split", "doc_id"), "left_anti")
+        .limit(6).collect()
+        .map(r => s"(${r.get(0)}, ${r.get(1)})")
+      throw graft.core.GraftAnalysisException(Seq(
+        s"commitRemove at $root (requireAllFound): only $found of " +
+          s"$requested requested takedowns matched a live row — " +
+          s"unmatched e.g. ${missing.take(5).mkString(", ")}" +
+          (if (missing.length > 5) ", …" else "") +
+          "; a mis-keyed split or an already-deleted doc — nothing " +
+          "was committed"))
+    }
+    countRows.map(r => r.getString(0) -> r.getLong(1)).toMap
+  }
+
   private def commitDeltaChain(s: SparkSession, root: String,
       adds: DataFrame, removedIds: DataFrame, tag: Option[String],
       branch: Option[String]): Int = {
@@ -761,7 +906,7 @@ object Snapshots {
           s"$root/$VersionsDir/$TagsDir is not branch-scoped) — commit to " +
           s"branch '${branch.get}' untagged, or ingest into main"))
     // removedIds persists alongside adds (r17): the attempt's affected-
-    // split collect and goneSpec both evaluate it — for a CDC-derived
+    // split collect and gone both evaluate it — for a CDC-derived
     // delta (DocIndex.refresh) each evaluation re-runs the pointer-pruned
     // diff scan, so the cache halves that read. Caller-owned-cache guard
     // (the Channels.multiSink rule): a frame the caller already persisted
@@ -773,9 +918,13 @@ object Snapshots {
       if (removedOwned) removedIds
       else removedIds
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val goneSpec = removedIdsP.select(col("doc_id"))
-      .unionByName(adds.select(col("doc_id"))).distinct()
-    val goneP = goneSpec
+    // no distinct: every use of gone (the rewrite's anti-join, the
+    // victim-split collect, the rebase clash sample) is duplicate-
+    // insensitive, and a distinct here cost a shuffle that AQE elided or
+    // kept depending on which cached input finished first — a commit's
+    // job count varied from run to run
+    val goneP = removedIdsP.select(col("doc_id"))
+      .unionByName(adds.select(col("doc_id")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val addsPOuter = adds
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -875,8 +1024,8 @@ object Snapshots {
 
     val splitKeyed = removedIds.columns.contains("split")
     // `adds` and `gone` arrive PERSISTED by the caller: the commit runs
-    // several actions over them (affected-split collect, rewrite,
-    // read-back) — in a foreachBatch the adds are the micro-batch
+    // several actions over them (constraint check, affected-split
+    // collect, rewrite) — in a foreachBatch the adds are the micro-batch
     // source, which must not be recomputed per action
     val addsP = adds;
     {
@@ -933,32 +1082,20 @@ object Snapshots {
             if (!zClustered) rewritten0
             else rewritten0.persist(
               org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
+          val (touchedRefs, touchedBlooms) = try {
             val rewritten =
               if (statsCols.isEmpty) distribute(rewritten0P)
               else cluster(rewritten0P, statsCols, vfBase.zorder)
-            graft.core.Labeled(s, s"graft commitDelta v$v: rewrite " +
-                s"${affected.size} split(s) -> $dir") {
-              rewritten.write.mode("overwrite").partitionBy("split")
-                .parquet(s"$root/$dir")
-            }
+            // counts, stats and blooms of the rewritten splits come from
+            // the rewrite job itself (exact); a split rewritten to EMPTY
+            // has no files — its ref records 0 rows and readAt skips it.
+            // Untouched splits CARRY their stats and bloom cells verbatim
+            // — exact, because their files are immutable.
+            writeSplits(s, rewritten, root, dir, statsCols, vfBase.bloomCols,
+              s"graft commitDelta v$v", s"rewrite ${affected.size} split(s) -> $dir")
           } finally {
             if (zClustered) rewritten0P.unpersist(blocking = false): Unit
           }
-          // read-back counts + stats from the WRITTEN files (the manifest
-          // verification contract); a split rewritten to EMPTY has no
-          // files — its ref records 0 rows and readAt skips it. Untouched
-          // splits CARRY their stats cells verbatim — exact, because
-          // their files are immutable.
-          val readBack = s.read.schema(rewritten0.schema)
-            .option("basePath", s"$root/$dir").parquet(s"$root/$dir")
-          // blooms ride the SAME read-back aggregation as the stats:
-          // rewritten splits recompute both (exact), kept splits carry
-          // their cells verbatim (exact — their files are immutable)
-          val (touchedRefs, touchedBlooms) =
-            graft.core.Labeled(s, s"graft commitDelta v$v: stats+bloom read-back") {
-              collectRefsAndBlooms(s, readBack, dir, statsCols, vfBase.bloomCols)
-            }
           if (vfBase.bloomCols.nonEmpty)
             newBlooms = vfBase.blooms.view
               .filterKeys(k => !affected.contains(k._1)).toMap ++ touchedBlooms
@@ -1892,9 +2029,11 @@ object Snapshots {
     val srcP = source
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val dup = srcP.groupBy(col("doc_id")).count()
-        .filter(col("count") > 1).limit(6)
-        .collect().map(_.get(0).toString)
+      val dup = graft.core.Labeled(s, s"graft mergeInto: source key check") {
+        srcP.groupBy(col("doc_id")).count()
+          .filter(col("count") > 1).limit(6)
+          .collect().map(_.get(0).toString)
+      }
       if (dup.nonEmpty)
         throw graft.core.GraftAnalysisException(Seq(
           s"mergeInto at $root: source doc_ids must be unique — " +
@@ -1903,7 +2042,9 @@ object Snapshots {
             " (which duplicate wins is not the engine's call)"))
       // match detection reads ONLY the source's splits (bounded collect:
       // one value per source split — one job, no exchange, r17)
-      val srcSplits = distinctStringsOneJob(srcP.select(col("split")))
+      val srcSplits = graft.core.Labeled(s, s"graft mergeInto: source splits") {
+        distinctStringsOneJob(srcP.select(col("split")))
+      }
       // the classification is only valid against the head it read — so
       // the commit is PINNED to that head, and an interleaved commit
       // (even one that never races our claim) re-runs the WHOLE merge
@@ -1972,7 +2113,7 @@ object Snapshots {
       else removedIds
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val gone = removedIdsP.select(col("doc_id"))
-      .unionByName(adds.select(col("doc_id"))).distinct()
+      .unionByName(adds.select(col("doc_id"))) // see commitDeltaChain
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val addsP = adds
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -2099,21 +2240,15 @@ object Snapshots {
       if (!zClustered) effective0
       else effective0.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    val (freshRefs, freshBlooms) = try {
       val effective =
         if (vf.statsCols.isEmpty) distribute(effectiveP)
         else cluster(effectiveP, vf.statsCols, vf.zorder)
-      effective.write.mode("overwrite").partitionBy("split")
-        .parquet(s"$root/$dir")
+      writeSplits(s, effective, root, dir, vf.statsCols, vf.bloomCols,
+        s"graft dvCompact v$v", s"rewrite ${targets.size} split(s) -> $dir")
     } finally {
       if (zClustered) effectiveP.unpersist(blocking = false): Unit
     }
-    val readBack = s.read.schema(vf.schema)
-      .option("basePath", s"$root/$dir").parquet(s"$root/$dir")
-    val (freshRefs, freshBlooms) =
-      graft.core.Labeled(s, s"graft dvCompact v$v: stats+bloom read-back") {
-        collectRefsAndBlooms(s, readBack, dir, vf.statsCols, vf.bloomCols)
-      }
     val emptyCells = vf.statsCols.map(_ => StatCell(None, None, 0L)).toIndexedSeq
     val targetNames = targets.map(_.split).toSet
     val newRefs = vf.refs.map { r =>
@@ -3055,32 +3190,44 @@ object Snapshots {
     * merges. The shuffle `distinct().collect()` this replaces costs two
     * AQE query-stage jobs per call — pure job-submission latency on the
     * commit path's metadata collects, whose value domain (split/bucket
-    * names) is bounded by the store's split count. Driver payload is
-    * Σ per-partition distinct counts — the same order the shuffle's
-    * map-side partial aggregate already materializes and sends; a task
-    * whose distinct count exceeds the cap (pathological: a near-unique
-    * column) flags overflow and the call STANDS DOWN to the legacy
+    * names) is bounded by the store's split count. The cap bounds the
+    * driver: a task whose distinct count exceeds it flags overflow, and
+    * task results are merged as they arrive, so the driver holds at most
+    * `cap` merged values plus one partition's set; once either overflows
+    * (pathological: a near-unique column, or many partitions each under
+    * the cap) later results are dropped and the call STANDS DOWN to the
     * shuffle distinct, so the result is identical on any input. NULLs
     * are preserved (commitDelta's null-split refusal reads them). */
   private[graft] def distinctStringsOneJob(df: DataFrame): Set[String] = {
     val cap = df.sparkSession.conf
       .getOption("spark.graft.snapshot.metaCollectCap")
       .map(_.toInt).getOrElse(100000)
-    val parts: Array[(Boolean, Array[String])] = df.queryExecution.toRdd
-      .mapPartitions { it =>
-        val seen = new scala.collection.mutable.HashSet[String]()
-        var overflow = false
-        while (it.hasNext && !overflow) {
-          val r = it.next()
-          // copy out of the (possibly reused) row buffer immediately
-          seen += (if (r.isNullAt(0)) null else r.getUTF8String(0).toString)
-          if (seen.size > cap) overflow = true
-        }
-        Iterator.single((overflow, seen.toArray))
-      }.collect()
-    if (parts.exists(_._1))
-      df.distinct().collect().map(_.getString(0)).toSet
-    else parts.iterator.flatMap(_._2).toSet
+    val parts = df.queryExecution.toRdd.mapPartitions { it =>
+      val seen = new scala.collection.mutable.HashSet[String]()
+      var overflow = false
+      while (it.hasNext && !overflow) {
+        val r = it.next()
+        // copy out of the (possibly reused) row buffer immediately
+        seen += (if (r.isNullAt(0)) null else r.getUTF8String(0).toString)
+        if (seen.size > cap) overflow = true
+      }
+      Iterator.single((overflow, seen.toArray))
+    }
+    val merged = new scala.collection.mutable.HashSet[String]()
+    var overflow = false
+    // the handler runs on the driver, one task result at a time
+    df.sparkSession.sparkContext.runJob(parts,
+      (it: Iterator[(Boolean, Array[String])]) => it.next(),
+      (_: Int, part: (Boolean, Array[String])) =>
+        if (!overflow) {
+          if (part._1) overflow = true
+          else {
+            merged ++= part._2
+            if (merged.size > cap) { overflow = true; merged.clear() }
+          }
+        })
+    if (overflow) df.distinct().collect().map(_.getString(0)).toSet
+    else merged.toSet
   }
 
   /** One scan per referenced version dir, each PRUNED to the splits the
@@ -3147,4 +3294,127 @@ object Snapshots {
     java.net.URLEncoder.encode(s, "UTF-8")
   private def unescape(s: String): String =
     java.net.URLDecoder.decode(s, "UTF-8")
+}
+
+/** One split's metadata accumulated inside a commit's write job (see
+  * `Snapshots.writeSplits`): row and non-null doc_id counts, per stats
+  * column the min/max order key and non-null count, per bloom column the
+  * bitset. */
+private[plans] final class SplitMeta(nStats: Int, nBlooms: Int, bloomBytes: Int)
+    extends Serializable {
+  var rows = 0L
+  var docIds = 0L
+  val mins = new Array[AnyRef](nStats)
+  val maxs = new Array[AnyRef](nStats)
+  val nonNull = new Array[Long](nStats)
+  val blooms: Array[Array[Byte]] = Array.fill(nBlooms)(new Array[Byte](bloomBytes))
+}
+
+/** Per-split typed aggregator over (split, has_doc_id, keys…, fingerprints…)
+  * rows: the one observed aggregate of a commit's write. `kinds(i)` says
+  * how stats key i compares, matching Spark's own min/max order; ties keep
+  * the value seen first, as Spark's `least`/`greatest` do. The result is
+  * the serialized split → [[SplitMeta]] map, decoded on the driver by
+  * [[SplitMetaAgg.decode]]. */
+private[plans] final class SplitMetaAgg(kinds: Array[Int], nBlooms: Int,
+    bloomBytes: Int, bloomK: Int) extends org.apache.spark.sql.expressions.Aggregator[
+      org.apache.spark.sql.Row,
+      scala.collection.mutable.HashMap[String, SplitMeta], Array[Byte]] {
+  import SplitMetaAgg._
+  private type Buf = scala.collection.mutable.HashMap[String, SplitMeta]
+
+  override def zero: Buf = new scala.collection.mutable.HashMap[String, SplitMeta]
+
+  override def reduce(b: Buf, r: org.apache.spark.sql.Row): Buf = {
+    val sp = if (r.isNullAt(0)) null else r.getString(0)
+    val m = b.getOrElseUpdate(sp, new SplitMeta(kinds.length, nBlooms, bloomBytes))
+    m.rows += 1
+    if (r.getBoolean(1)) m.docIds += 1
+    var i = 0
+    while (i < kinds.length) {
+      val k = r.get(2 + i).asInstanceOf[AnyRef]
+      if (k != null) {
+        m.nonNull(i) += 1
+        if (m.mins(i) == null || compare(kinds(i), k, m.mins(i)) < 0) m.mins(i) = k
+        if (m.maxs(i) == null || compare(kinds(i), k, m.maxs(i)) > 0) m.maxs(i) = k
+      }
+      i += 1
+    }
+    var j = 0
+    while (j < nBlooms) {
+      graft.functions.BloomOps.set(m.blooms(j), r.getLong(2 + kinds.length + j),
+        bloomK)
+      j += 1
+    }
+    b
+  }
+
+  override def merge(a: Buf, b: Buf): Buf = {
+    b.foreach { case (sp, y) =>
+      a.get(sp) match {
+        case None => a(sp) = y
+        case Some(x) =>
+          x.rows += y.rows
+          x.docIds += y.docIds
+          var i = 0
+          while (i < kinds.length) {
+            x.nonNull(i) += y.nonNull(i)
+            if (y.mins(i) != null && (x.mins(i) == null ||
+                compare(kinds(i), y.mins(i), x.mins(i)) < 0)) x.mins(i) = y.mins(i)
+            if (y.maxs(i) != null && (x.maxs(i) == null ||
+                compare(kinds(i), y.maxs(i), x.maxs(i)) > 0)) x.maxs(i) = y.maxs(i)
+            i += 1
+          }
+          x.blooms.indices.foreach(j =>
+            graft.functions.BloomOps.orInto(x.blooms(j), y.blooms(j)))
+      }
+    }
+    a
+  }
+
+  override def finish(b: Buf): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new java.io.ObjectOutputStream(bos)
+    out.writeObject(b)
+    out.close()
+    bos.toByteArray
+  }
+
+  override def bufferEncoder: org.apache.spark.sql.Encoder[Buf] =
+    org.apache.spark.sql.Encoders.javaSerialization[Buf]
+  override def outputEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
+    org.apache.spark.sql.Encoders.BINARY
+}
+
+private[plans] object SplitMetaAgg {
+  /** Key kinds: UTF-8 bytes (unsigned byte order), integral numbers (also
+    * epoch days and micros), floating point (Spark's order: -0.0 equals
+    * 0.0, NaN above everything) and anything `Comparable` (decimal,
+    * boolean, local date-time). */
+  val Bytes = 0
+  val Integral = 1
+  val Floating = 2
+  val Ordered = 3
+
+  def compare(kind: Int, a: AnyRef, b: AnyRef): Int = kind match {
+    case Bytes =>
+      java.util.Arrays.compareUnsigned(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
+    case Integral =>
+      java.lang.Long.compare(a.asInstanceOf[Number].longValue, b.asInstanceOf[Number].longValue)
+    case Floating =>
+      val (x, y) = (a.asInstanceOf[Number].doubleValue, b.asInstanceOf[Number].doubleValue)
+      if (x == y) 0 else java.lang.Double.compare(x, y)
+    case _ => a.asInstanceOf[Comparable[AnyRef]].compareTo(b)
+  }
+
+  def decode(bytes: Array[Byte]): scala.collection.Map[String, SplitMeta] = {
+    val loader = classOf[SplitMeta].getClassLoader
+    val in = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes)) {
+      override def resolveClass(d: java.io.ObjectStreamClass): Class[_] =
+        try Class.forName(d.getName, false, loader)
+        catch { case _: ClassNotFoundException => super.resolveClass(d) }
+    }
+    try in.readObject().asInstanceOf[scala.collection.Map[String, SplitMeta]]
+    finally in.close()
+  }
 }

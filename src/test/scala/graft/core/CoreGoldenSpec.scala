@@ -1,17 +1,10 @@
 package graft.core
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, Traced}
 import graft.compile.{ColumnOrder, QuerySpec}
 import graft.core.ColumnSpec.dsl._
 import graft.transform.Derive
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-import org.apache.spark.sql.execution.SparkPlanInfo
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions.{col, lit}
-
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import scala.jdk.CollectionConverters._
 
 /** Golden tests reproducing the reference's captured outputs on the `friend`
   * fixture (FIXTURES.md §A; expectations from documentation/doc-02.md:96-171
@@ -61,41 +54,6 @@ class CoreGoldenSpec extends SparkTestBase {
     assert(ids2 == Seq(1L, 4L, 3L, 2L)) // 小莎莎 > shihu > kerr > jilen 酱
   }
 
-  /** Runs `body` under a job group; returns its result, the jobs it ran and
-    * the physical plans its SQL executions started with. Listener delivery
-    * is async but in order, so a fence job run after `body` marks the end of
-    * its events. */
-  private def traced[T](body: => T): (T, Int, Seq[SparkPlanInfo]) = {
-    val sc = spark.sparkContext
-    val group = s"graft-test-traced-${System.nanoTime()}"
-    val jobs = new AtomicInteger
-    val plans = new ConcurrentLinkedQueue[SparkPlanInfo]
-    val fenced = new CountDownLatch(1)
-    def groupOf(props: java.util.Properties): String =
-      Option(props).map(_.getProperty("spark.jobGroup.id")).orNull
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (groupOf(js.properties) == group) jobs.incrementAndGet()
-        else if (groupOf(js.properties) == s"$group-fence") fenced.countDown()
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case st: SparkListenerSQLExecutionStart if st.jobGroupId.contains(group) =>
-          plans.add(st.sparkPlanInfo)
-        case _ =>
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "traced", interruptOnCancel = false)
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-fence", "fence", interruptOnCancel = false)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(fenced.await(60, TimeUnit.SECONDS), "the listener never saw the fence job")
-      (out, jobs.get, plans.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
-  }
-
-  private def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] = p +: p.children.flatMap(nodes)
-
   test("pagedView: one top-K job counts the total, no cache (doc-02.md:135)") {
     val evals = spark.sparkContext.longAccumulator("graft-test-source-evals")
     val tick = org.apache.spark.sql.functions.udf { (s: String) => evals.add(1L); s }
@@ -115,7 +73,7 @@ class CoreGoldenSpec extends SparkTestBase {
     val oneMaterialization = evals.value
 
     evals.reset()
-    val (pv, jobs, plans) = traced(t.pagedView(qs))
+    val Traced(pv, jobs, plans, _, _) = traced(t.pagedView(qs))
     assert(pv.total == 4)
     assert(pv.view.data == Seq(
       """{"id":3,"name":"品神"}""",
@@ -167,7 +125,7 @@ class CoreGoldenSpec extends SparkTestBase {
     val keys = spark.range(0, 10).toDF("k")
     val joined = friend.join(keys.hint("shuffle_merge"), col("id") === col("k"))
     for ((src, observed) <- Seq(presorted -> false, joined -> true)) {
-      val (pv, _, plans) = traced(TableSpec(src, Seq("id".ofCol(col("id")).order)).pagedView(qs))
+      val Traced(pv, _, plans, _, _) = traced(TableSpec(src, Seq("id".ofCol(col("id")).order)).pagedView(qs))
       assert(pv.total == 4)
       assert(pv.view.data == Seq("""{"id":1}"""))
       // an observed total needs no second query; the count() fallback is one
@@ -181,7 +139,7 @@ class CoreGoldenSpec extends SparkTestBase {
     val t = TableSpec(src, Seq(
       "id".ofCol(col("id")).order,
       "ageOpt".ofCol(col("age")).comparable))
-    val (pv, jobs, _) = traced(t.pagedView(QuerySpec(
+    val Traced(pv, jobs, _, _, _) = traced(t.pagedView(QuerySpec(
       columns = Some(Seq("id")), orders = Seq(ColumnOrder("id", desc = true)),
       filters = Map("ageOpt" -> Map("lt" -> 100)), take = Some(1))))
     assert(pv.total == 2)

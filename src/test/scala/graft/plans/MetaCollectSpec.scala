@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * metadata collect the commit path's affected-split/bucket-probe
   * collects ride. It must be EXACTLY `distinct().collect()` — nulls and
   * hostile values preserved, duplicates across many partitions merged,
-  * and the overflow cap standing the call down to the shuffle path with
-  * an identical result. */
+  * and the overflow cap — per task and over all tasks together —
+  * standing the call down to the shuffle path with an identical result. */
 class MetaCollectSpec extends SparkTestBase {
 
   private val CapKey = "spark.graft.snapshot.metaCollectCap"
@@ -43,6 +43,27 @@ class MetaCollectSpec extends SparkTestBase {
         .select(pmod(col("id"), lit(50)).cast("string").as("v"))
       val fast = Snapshots.distinctStringsOneJob(df)
       assert(fast == (0 until 50).map(_.toString).toSet)
+    } finally {
+      prev match {
+        case Some(p) => spark.conf.set(CapKey, p)
+        case None => spark.conf.unset(CapKey)
+      }
+    }
+  }
+
+  test("per-task sets each under the cap but over it together stand down too, result identical") {
+    val prev = spark.conf.getOption(CapKey)
+    try {
+      // 8 tasks of 5 distinct values: every task under a cap of 10, 40 in all
+      val df = spark.range(0, 40, 1, 8).select(col("id").cast("string").as("v"))
+      spark.conf.set(CapKey, "10")
+      val over = traced(Snapshots.distinctStringsOneJob(df))
+      assert(over.out == (0 until 40).map(_.toString).toSet)
+      assert(over.jobs > 1, s"the shuffle distinct never ran: ${over.jobs} job(s)")
+      spark.conf.set(CapKey, "40")
+      val under = traced(Snapshots.distinctStringsOneJob(df))
+      assert(under.out == over.out)
+      assert(under.jobs == 1, s"${under.jobs} jobs under the cap")
     } finally {
       prev match {
         case Some(p) => spark.conf.set(CapKey, p)

@@ -2313,4 +2313,203 @@ class SnapshotsSpec extends SparkTestBase {
         "the rewritten version file must be re-parsed, not served stale")
     } finally CorpusExport.deleteRecursively(root.toFile)
   }
+
+  // ---- split metadata from the write job itself -------------------------
+
+  /** Runs `body` with every commit's observed write metadata withheld, as
+    * if it never arrived: each commit must take the read-back fallback. */
+  private def withoutObservedMeta[T](body: => T): T = {
+    val prev = Snapshots.awaitSplitMeta
+    Snapshots.awaitSplitMeta = _ => None
+    try body finally Snapshots.awaitSplitMeta = prev
+  }
+
+  /** Version file `v` with what legitimately differs between two stores
+    * fed the same commits removed: the commit stamp and the attempt-
+    * unique dir names. */
+  private def versionText(root: java.nio.file.Path, v: Int): String =
+    new String(java.nio.file.Files.readAllBytes(
+      root.resolve("_versions").resolve(s"v$v.list")), "UTF-8")
+      .linesIterator.filterNot(_.startsWith("#ts="))
+      .map(_.replaceAll("v\\d+-[0-9a-f]{8}", "v?")).mkString("\n")
+
+  private def readBacks(descs: Seq[String]): Seq[String] =
+    descs.filter(_.contains("read-back"))
+
+  /** Stats, blooms and DV fixture: truncated strings (cap 3) including a
+    * surrogate pair, timestamps, dates, a nullable double with nulls and
+    * a duplicated (split, doc_id) row. */
+  private def metaFixture(): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    def ts(s: String) = java.sql.Timestamp.from(java.time.Instant.parse(s))
+    def d(s: String) = java.sql.Date.valueOf(s)
+    val schema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("split", StringType), StructField("title", StringType),
+      StructField("ts", TimestampType), StructField("d", DateType),
+      StructField("score", DoubleType)))
+    spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(1L, "a", "abcdef", ts("2024-01-01T00:00:00.123456Z"), d("2024-01-01"), 1.5),
+      Row(2L, "a", "abd", ts("2023-06-30T23:59:59Z"), d("1999-12-31"), null),
+      Row(2L, "a", "abd", ts("2023-06-30T23:59:59Z"), d("1999-12-31"), null),
+      Row(3L, "b", "zz😀x", ts("1970-01-01T00:00:00Z"), d("2000-02-29"), -2.0),
+      Row(4L, "b", "b", null, null, null),
+      Row(5L, "c", "c-only", ts("2030-05-05T05:05:05Z"), d("2030-05-05"), 0.25)), 3), schema)
+  }
+
+  /** commitFull, a widening delta that also empties split c, a DV over
+    * the duplicated row, DV compaction and consolidation. Returns each
+    * commit's traced job descriptions. */
+  private def metaLifecycle(root: String): Seq[Seq[String]] = {
+    val base = metaFixture()
+    val full = traced(Snapshots.commitFull(spark, base, root,
+      Seq("doc_id", "title", "ts", "d", "score"), Nil, zorder = false,
+      Seq("doc_id", "title")))
+    val adds = base.filter(col("doc_id") === 1L)
+      .withColumn("doc_id", lit(6L)).withColumn("title", lit("abcz-wide"))
+      .withColumn("lang", lit("en"))
+    val delta = traced(Snapshots.commitDelta(spark, root, adds,
+      base.filter(col("doc_id") === 5L).select(col("split"), col("doc_id"))))
+    val remove = traced(Snapshots.commitRemove(spark, root,
+      base.filter(col("doc_id") === 2L).select(col("split"), col("doc_id"))))
+    val compact = traced(Snapshots.compactDeletionVectors(spark, root, 0.0))
+    val consolidate = traced(Snapshots.consolidate(spark, root))
+    assert(Seq(full, delta, remove, compact, consolidate).map(_.out) == (1 to 5))
+    Seq(full, delta, remove, compact, consolidate).map(_.descs)
+  }
+
+  test("observed split metadata equals the read-back byte for byte; a withheld metric takes the read-back") {
+    val (obs, rb) = (freshRoot(), freshRoot())
+    val capKey = "spark.graft.snapshot.statsMaxStringLen"
+    spark.conf.set(capKey, "3")
+    try {
+      val observed = metaLifecycle(obs.toString)
+      val readBack = withoutObservedMeta(metaLifecycle(rb.toString))
+      (1 to 5).foreach(v => assert(versionText(obs, v) == versionText(rb, v), s"v$v"))
+      assert(observed.forall(readBacks(_).isEmpty), observed)
+      assert(readBack.forall(readBacks(_).nonEmpty), readBack)
+      // the fixture reaches what it is for: a truncated min, a bumped max
+      val v1 = versionText(obs, 1)
+      assert(v1.contains("\tabc\tabd\t0\t"), v1)
+      assert(v1.contains("\tb\tzz%F0%9F%98%81\t0\t"), v1)
+      val v2 = versionText(obs, 2)
+      assert(v2.linesIterator.exists(_.startsWith("c\tv?\t0\t")), v2) // emptied split
+      assert(v2.startsWith("doc_id BIGINT,split STRING,title STRING") && v2.contains("lang"), v2)
+      val v3 = versionText(obs, 3)
+      assert(v3.linesIterator.exists(l => l.startsWith("a\t") && l.endsWith("-dv\t2")), v3)
+      assert(Snapshots.readAt(spark, obs.toString, 5).count() == 4L)
+    } finally {
+      spark.conf.unset(capKey)
+      CorpusExport.deleteRecursively(obs.toFile)
+      CorpusExport.deleteRecursively(rb.toFile)
+    }
+  }
+
+  test("z-ordered store: observed split metadata equals the read-back") {
+    val (obs, rb) = (freshRoot(), freshRoot())
+    def lifecycle(root: String): Unit = {
+      import spark.implicits._
+      val rows = (1 to 12).map(i => (i.toLong, s"s${i % 3}", i * 7 % 11, i * 5L))
+        .toDF("doc_id", "split", "x", "y")
+      Snapshots.commitFull(spark, rows, root, Seq("x", "y"), Nil, zorder = true)
+      Snapshots.commitDelta(spark, root,
+        Seq((13L, "s1", -4, 99L)).toDF("doc_id", "split", "x", "y"),
+        Seq(("s2", 2L)).toDF("split", "doc_id"))
+    }
+    try {
+      lifecycle(obs.toString)
+      withoutObservedMeta(lifecycle(rb.toString))
+      (1 to 2).foreach(v => assert(versionText(obs, v) == versionText(rb, v), s"v$v"))
+      assert(versionText(obs, 1).contains("#zorder=1"))
+    } finally {
+      CorpusExport.deleteRecursively(obs.toFile)
+      CorpusExport.deleteRecursively(rb.toFile)
+    }
+  }
+
+  test("commits run no read-back job, within pinned job counts, observing above the write's last exchange") {
+    val root = freshRoot()
+    try {
+      val r = root.toString
+      val base = df(Seq(doc(1, "a", "one"), doc(2, "a", "two"), doc(3, "b", "three")))
+      val full = traced(Snapshots.commitFull(spark, base, r, Seq("doc_id"), Nil,
+        zorder = false, Seq("doc_id")))
+      val delta = traced(Snapshots.commitDelta(spark, r, df(Seq(doc(4, "b", "four"))),
+        df(Seq(doc(1, "a", ""))).select(col("split"), col("doc_id"))))
+      val remove = traced(Snapshots.commitRemove(spark, r,
+        df(Seq(doc(2, "a", ""))).select(col("split"), col("doc_id"))))
+      val compact = traced(Snapshots.compactDeletionVectors(spark, r, 0.0))
+      val consolidate = traced(Snapshots.consolidate(spark, r))
+      // measured on this fixture; a read-back adds jobs to every one
+      val bounds = Seq("commitFull" -> (full, 2), "commitDelta" -> (delta, 6),
+        "commitRemove" -> (remove, 3), "compactDeletionVectors" -> (compact, 3),
+        "consolidate" -> (consolidate, 2))
+      bounds.foreach { case (what, (t, maxJobs)) =>
+        assert(readBacks(t.descs).isEmpty, s"$what read back: ${t.descs}")
+        assert(t.jobs <= maxJobs, s"$what ran ${t.jobs} jobs: ${t.descs}")
+      }
+      // the observed aggregate sits in the write's result stage: no
+      // exchange between it and the root, at least one below it
+      def exchange(n: org.apache.spark.sql.execution.SparkPlanInfo) =
+        n.nodeName.contains("Exchange") ||
+          (n.nodeName.contains("QueryStage") && !n.nodeName.startsWith("ResultQueryStage"))
+      def pathTo(p: org.apache.spark.sql.execution.SparkPlanInfo)
+          : Option[Seq[org.apache.spark.sql.execution.SparkPlanInfo]] =
+        if (p.nodeName == "CollectMetrics") Some(Seq(p))
+        else p.children.iterator.flatMap(pathTo).nextOption().map(p +: _)
+      val writes = delta.finalPlans.flatMap(p => pathTo(p).map(p -> _))
+      assert(writes.nonEmpty, delta.finalPlans.map(_.simpleString))
+      writes.foreach { case (plan, path) =>
+        assert(!path.exists(exchange), path.map(_.nodeName))
+        assert(nodes(path.last).exists(exchange), plan.simpleString)
+      }
+    } finally CorpusExport.deleteRecursively(root.toFile)
+  }
+
+  test("keys the writer maps to the default partition, and NULL keys, refuse before publish") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("split", StringType), StructField("text", StringType)))
+    def frame(doc: java.lang.Long, split: String) = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(1L, "a", "ok"), Row(doc, split, "bad")), 2), schema)
+    val bad = Seq(frame(2L, ""), frame(2L, "__HIVE_DEFAULT_PARTITION__"),
+      frame(2L, null), frame(null, "a"))
+    bad.foreach { f =>
+      val root = freshRoot()
+      try {
+        val e = intercept[graft.core.GraftAnalysisException](
+          Snapshots.commitFull(spark, f, root.toString))
+        assert(e.getMessage.contains("NULL"), e.getMessage)
+        assert(Snapshots.latestVersion(spark, root.toString) == 0)
+      } finally CorpusExport.deleteRecursively(root.toFile)
+    }
+    val root = freshRoot()
+    try {
+      Snapshots.commitFull(spark, frame(2L, "b"), root.toString)
+      val e = intercept[graft.core.GraftAnalysisException](Snapshots.commitDelta(
+        spark, root.toString, frame(3L, "").filter(col("doc_id") === 3L),
+        frame(3L, "").select(col("doc_id")).limit(0)))
+      assert(e.getMessage.contains("NULL"), e.getMessage)
+      assert(Snapshots.latestVersion(spark, root.toString) == 1)
+    } finally CorpusExport.deleteRecursively(root.toFile)
+  }
+
+  test("writes that turn out empty still deliver their observed metadata") {
+    val root = freshRoot()
+    try {
+      val r = root.toString
+      val base = df(Seq(doc(1, "a", "one"), doc(2, "b", "two")))
+      val runtimeEmpty = base.filter(col("text") === concat(col("text"), lit("x")))
+      val antiEmpty = base.join(base.select(col("doc_id")), Seq("doc_id"), "left_anti")
+      val empties = Seq(runtimeEmpty, antiEmpty, base.filter(lit(false)), base.limit(0))
+      empties.zipWithIndex.foreach { case (e, i) =>
+        val t = traced(Snapshots.commitFull(spark, e, r, Seq("doc_id")))
+        assert(t.out == i + 1)
+        assert(readBacks(t.descs).isEmpty, s"empty write $i read back: ${t.descs}")
+        assert(versionText(root, i + 1).linesIterator.count(!_.startsWith("#")) == 1,
+          versionText(root, i + 1)) // schema line only: no refs
+      }
+    } finally CorpusExport.deleteRecursively(root.toFile)
+  }
 }
