@@ -157,90 +157,69 @@ object Snapshots {
   /** Commit the FULL corpus as the next version (v1 on an empty root; a
     * consolidation commit on a live one): every split rewrites into
     * `root/v{N}/`, the new version file points only there. Returns the
-    * committed version number. `df` must carry a `split` column. */
-  def commitFull(s: SparkSession, df: DataFrame, root: String): Int =
-    commitFull(s, df, root, Nil)
-
-  /** [[commitFull]] recording per-split min/max/null-count stats for
-    * `statsCols` (numeric, string — binary collation only —, boolean,
-    * date or timestamp columns). Every later [[commitDelta]] maintains
-    * them automatically; [[readAtWhere]] uses them to skip splits. Rows
-    * are additionally clustered (`sortWithinPartitions`, no shuffle) by
-    * the stats columns inside each split, so parquet row-group min/max
-    * pushdown bites WITHIN the splits that do get read. */
+    * committed version number. `df` must carry a `split` column. A full
+    * rewrite has no defined rebase against an interleaved delta (it
+    * replaces the corpus wholesale), so a lost claim race refuses.
+    *
+    * @param statsCols per-split min/max/null-count stats for these
+    *   (numeric, string — binary collation only —, boolean, date or
+    *   timestamp) columns. Every later [[commitDelta]] maintains them;
+    *   [[readAtWhere]] uses them to skip splits. Rows are additionally
+    *   clustered (`sortWithinPartitions`, no shuffle) by the stats columns
+    *   inside each split, so parquet row-group min/max pushdown bites
+    *   WITHIN the splits that do get read.
+    * @param constraints CHECK CONSTRAINTS — boolean SQL expressions over
+    *   the stored columns that every commit must satisfy (standard CHECK
+    *   semantics: a row violates only when the expression is FALSE; null
+    *   passes). Recorded in the version file and ENFORCED ON EVERY LATER
+    *   DELTA's adds before anything is written — a violating commit
+    *   refuses listing each failed constraint, its violation count and
+    *   sample doc_ids. The store's data contract: bad rows are stopped at
+    *   the door, not discovered by a consumer three jobs downstream.
+    *   Redefine constraints with a fresh `commitFull` (a full rewrite is a
+    *   new contract).
+    * @param zorder Z-ORDER clustering: rows cluster inside each split by
+    *   the Morton-interleaved key of the (≥2 numeric, non-floating) stats
+    *   columns ([[Layout.zValue]]) instead of their lexicographic order —
+    *   each parquet file/row-group covers a small HYPERCUBE in stats
+    *   space, so predicates on ANY tracked dimension skip row groups
+    *   within the splits that survive manifest pruning (a lexicographic
+    *   sort only serves its leading column). Costs one range exchange per
+    *   commit (the same shuffle [[Layout.zorderWrite]] pays); the choice
+    *   is recorded in the version file and every later delta re-clusters
+    *   the splits it rewrites.
+    * @param bloomCols per-split BLOOM cells: for each named column (must
+    *   also be a stats column; string or integral type) every split
+    *   records a small bloom filter of its values in the version file, and
+    *   [[readAtWhere]] consults it for EQUALITY and IN/InSet predicates —
+    *   the pruning min/max ranges cannot give on a high-cardinality column
+    *   whose values don't correlate with splits (a doc_id/url/hash point
+    *   lookup over date-keyed splits prunes to ~the one split that holds
+    *   it, at the bloom's false-positive rate). Sound by construction: a
+    *   bloom can only KEEP extra splits, never drop a matching one. Sized
+    *   by `spark.graft.snapshot.bloomBits` (power of two, default 2^16
+    *   bits = 8 KB per split per column); deltas recompute the blooms of
+    *   the splits they rewrite and carry the rest verbatim. */
   def commitFull(s: SparkSession, df: DataFrame, root: String,
-      statsCols: Seq[String]): Int =
-    commitFull(s, df, root, statsCols, Nil)
-
-  /** [[commitFull]] with CHECK CONSTRAINTS — boolean SQL expressions
-    * over the stored columns that every commit must satisfy (standard
-    * CHECK semantics: a row violates only when the expression is FALSE;
-    * null passes). The constraints are recorded in the version file and
-    * ENFORCED ON EVERY LATER DELTA's adds before anything is written —
-    * a violating commit refuses listing each failed constraint, its
-    * violation count and sample doc_ids. The store's data contract: bad
-    * rows are stopped at the door, not discovered by a consumer three
-    * jobs downstream. Redefine constraints with a fresh `commitFull`
-    * (a full rewrite is a new contract). */
-  def commitFull(s: SparkSession, df: DataFrame, root: String,
-      statsCols: Seq[String], constraints: Seq[String]): Int =
-    commitFull(s, df, root, statsCols, constraints, zorder = false)
-
-  /** [[commitFull]] with Z-ORDER clustering: rows cluster inside each
-    * split by the Morton-interleaved key of the (numeric, ≥2) stats
-    * columns ([[Layout.zValue]]) instead of their lexicographic order —
-    * each parquet file/row-group covers a small HYPERCUBE in stats
-    * space, so predicates on ANY tracked dimension skip row groups
-    * within the splits that survive manifest pruning (a lexicographic
-    * sort only serves its leading column). Costs one range exchange per
-    * commit (the same shuffle [[Layout.zorderWrite]] pays); the choice
-    * is recorded in the version file and every later delta re-clusters
-    * the splits it rewrites. */
-  def commitFull(s: SparkSession, df: DataFrame, root: String,
-      statsCols: Seq[String], constraints: Seq[String],
-      zorder: Boolean): Int =
-    commitFull(s, df, root, statsCols, constraints, zorder, Nil)
-
-  /** [[commitFull]] with per-split BLOOM cells: for each named column
-    * (must also be a stats column; string or integral type) every split
-    * records a small bloom filter of its values in the version file, and
-    * [[readAtWhere]] consults it for EQUALITY and IN/InSet predicates —
-    * the pruning min/max ranges cannot give on a high-cardinality column
-    * whose values don't correlate with splits (a doc_id/url/hash point
-    * lookup over date-keyed splits prunes to ~the one split that holds
-    * it, at the bloom's false-positive rate). Sound by construction:
-    * a bloom can only KEEP extra splits, never drop a matching one.
-    * Sized by `spark.graft.snapshot.bloomBits` (power of two, default
-    * 2^16 bits = 8 KB per split per column); deltas recompute the blooms
-    * of the splits they rewrite and carry the rest verbatim. */
-  def commitFull(s: SparkSession, df: DataFrame, root: String,
-      statsCols: Seq[String], constraints: Seq[String],
-      zorder: Boolean, bloomCols: Seq[String]): Int = {
+      statsCols: Seq[String] = Nil, constraints: Seq[String] = Nil,
+      zorder: Boolean = false, bloomCols: Seq[String] = Nil): Int = {
     validateStatsCols(root, df.schema, statsCols)
     if (zorder) validateZOrder(root, df.schema, statsCols)
     validateBloomCols(root, df.schema, statsCols, bloomCols)
     checkConstraints(root, df, constraints, "commitFull seed data")
+    val contract = VersionFile(df.schema, Nil, None, statsCols.toIndexedSeq,
+      constraints = constraints.toIndexedSeq, zorder = zorder,
+      bloomCols = bloomCols.toIndexedSeq)
     val v = latestVersion(s, root) + 1
     val dir = attemptDir(v)
     val toWrite =
       if (statsCols.isEmpty) distribute(df)
       else cluster(df, statsCols, zorder)
     // an EMPTY corpus writes no part files and records v1 with no refs
-    val (refsMap, blooms) = writeSplits(s, toWrite, root, dir, statsCols,
+    val (refs, blooms) = writeSplits(s, toWrite, root, dir, statsCols,
       bloomCols, s"graft commitFull v$v", s"write $dir")
-    val refs = refsMap.values.toIndexedSeq
-    // a full rewrite has no defined rebase against an interleaved delta
-    // (it replaces the corpus wholesale) — a lost race refuses loudly
-    try writeVersionFile(s, root, v, df.schema, refs, None, statsCols,
-      constraints = constraints, zorder = zorder, bloomCols = bloomCols,
-      blooms = blooms)
-    catch {
-      case CommitRaceLost(_, lostV) =>
-        throw graft.core.GraftAnalysisException(Seq(
-          s"concurrent commit detected at $root: v$lostV already exists — " +
-            "a full rewrite cannot be rebased automatically; re-read the " +
-            "latest version and re-derive the commitFull against it"))
-    }
+    publishOrRefuse(s, root, v,
+      contract.copy(refs = refs.values.toIndexedSeq, blooms = blooms), "commitFull")
     v
   }
 
@@ -332,16 +311,26 @@ object Snapshots {
         .drop("__zval")
     }
 
+  /** Z-order needs ≥ 2 numeric stats columns, none of them floating:
+    * [[Layout.zValue]] quantizes each one with `div`, which Spark only
+    * takes over integral and decimal operands. */
   private def validateZOrder(root: String,
       schema: org.apache.spark.sql.types.StructType,
       statsCols: Seq[String]): Unit = {
-    val bad = statsCols.filterNot(c => schema.fields.find(_.name == c)
-      .exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]))
+    import org.apache.spark.sql.types._
+    val bad = statsCols.flatMap { c =>
+      schema.fields.find(_.name == c).map(_.dataType) match {
+        case Some(dt @ (FloatType | DoubleType)) =>
+          Some(s"stats column '$c' has type ${dt.sql} — a floating column " +
+            "cannot be quantized by integer division; cast it to an integral type")
+        case Some(_: NumericType) => None
+        case _ => Some(s"stats column '$c' is not numeric")
+      }
+    }
     if (statsCols.size < 2 || bad.nonEmpty) {
       val header = s"z-ordered commits at $root need >= 2 NUMERIC stats " +
         "columns (the Morton key interleaves their quantized bits)"
-      throw graft.core.GraftAnalysisException(
-        header +: bad.map(c => s"stats column '$c' is not numeric").toIndexedSeq)
+      throw graft.core.GraftAnalysisException(header +: bad.toIndexedSeq)
     }
   }
 
@@ -701,36 +690,29 @@ object Snapshots {
     * splits must list its old `(split, doc_id)` as a removal). A
     * doc_id-only `removedIds` falls back to locating victims with a
     * corpus-wide semi-join — correct, but a full-corpus scan per commit;
-    * key your takedowns when the corpus is large. */
+    * key your takedowns when the corpus is large.
+    *
+    * @param tag an IDEMPOTENCE TAG — the at-least-once glue: a
+    *   `foreachBatch` ingest stream commits each micro-batch with
+    *   `tag = Some(s"b$batchId")`, and a redelivered batch finds its tag
+    *   already recorded and returns THAT version instead of committing a
+    *   duplicate (the [[graft.sources.Sources.commitBatchJdbc]] ledger
+    *   discipline). Tags live in a DURABLE LEDGER (`_versions/_tags/`, one
+    *   tiny marker file per tag) that [[vacuum]] never deletes — a batch
+    *   redelivered after its version was vacuumed (stream down across a
+    *   retention sweep) still finds its tag and is still skipped, though
+    *   the returned version number may no longer be readable. The check
+    *   is O(1) per commit: one marker lookup, after a once-per-JVM repair
+    *   scan that backfills markers for any version whose committer crashed
+    *   between its rename and its marker write.
+    * @param branch commit against a BRANCH chain (see [[createBranch]];
+    *   None = main). Branch commits write their own `b-…` data dirs and
+    *   never touch main's files or version numbering. Idempotence tags
+    *   are main-only (the streaming ingest path targets main); a tagged
+    *   branch commit refuses. */
   def commitDelta(s: SparkSession, root: String,
-      adds: DataFrame, removedIds: DataFrame): Int =
-    commitDelta(s, root, adds, removedIds, tag = None)
-
-  /** [[commitDelta]] with an IDEMPOTENCE TAG — the at-least-once glue:
-    * a `foreachBatch` ingest stream commits each micro-batch with
-    * `tag = Some(s"b$batchId")`, and a redelivered batch finds its tag
-    * already recorded and returns THAT version instead of committing a
-    * duplicate (the [[graft.sources.Sources.commitBatchJdbc]] ledger
-    * discipline). Tags live in a DURABLE LEDGER (`_versions/_tags/`, one
-    * tiny marker file per tag) that [[vacuum]] never deletes — a batch
-    * redelivered after its version was vacuumed (stream down across a
-    * retention sweep) still finds its tag and is still skipped, though
-    * the returned version number may no longer be readable. The check is
-    * O(1) per commit: one marker lookup, after a once-per-JVM repair scan
-    * that backfills markers for any version whose committer crashed
-    * between its rename and its marker write. */
-  def commitDelta(s: SparkSession, root: String,
-      adds: DataFrame, removedIds: DataFrame, tag: Option[String]): Int =
-    commitDeltaChain(s, root, adds, removedIds, tag, None)
-
-  /** [[commitDelta]] against a BRANCH chain (see [[createBranch]]).
-    * Branch commits write their own `b-…` data dirs and never touch
-    * main's files or version numbering. Idempotence tags are main-only
-    * (the streaming ingest path targets main); a tagged branch commit
-    * refuses. */
-  def commitDelta(s: SparkSession, root: String,
-      adds: DataFrame, removedIds: DataFrame, tag: Option[String],
-      branch: Option[String]): Int =
+      adds: DataFrame, removedIds: DataFrame, tag: Option[String] = None,
+      branch: Option[String] = None): Int =
     commitDeltaChain(s, root, adds, removedIds, tag, branch)
 
   /** Bounded optimistic-concurrency retries for a claim-race loser: a
@@ -763,35 +745,18 @@ object Snapshots {
     * present in the CURRENT effective view tombstone (counts stay
     * exact, re-deleting is a no-op). Tags and branches behave exactly
     * as on [[commitDelta]]; a lost claim race auto-rebases. Returns the
-    * new version. */
+    * new version.
+    *
+    * @param requireAllFound the commit REFUSES (naming samples) unless
+    *   every requested `(split, doc_id)` matched a live row — the
+    *   takedown-pipeline safety catch. The default treats an unmatched
+    *   request as the already-deleted no-op (idempotent re-deliveries); a
+    *   FIRST-delivery GDPR pipeline should require all found, because a
+    *   mis-keyed split makes a silent no-op indistinguishable from a
+    *   completed takedown. */
   def commitRemove(s: SparkSession, root: String,
-      removedIds: DataFrame): Int =
-    commitRemove(s, root, removedIds, None, None)
-
-  def commitRemove(s: SparkSession, root: String,
-      removedIds: DataFrame, tag: Option[String]): Int =
-    commitRemove(s, root, removedIds, tag, None)
-
-  def commitRemove(s: SparkSession, root: String,
-      removedIds: DataFrame, tag: Option[String],
-      branch: Option[String]): Int =
-    commitRemove(s, root, removedIds, tag, branch, requireAllFound = false)
-
-  /** [[commitRemove]] with `requireAllFound = true`: the commit REFUSES
-    * (naming samples) unless every requested `(split, doc_id)` matched a
-    * live row — the takedown-pipeline safety catch. The default treats
-    * an unmatched request as the already-deleted no-op (idempotent
-    * re-deliveries); a FIRST-delivery GDPR pipeline should require all
-    * found, because a mis-keyed split makes a silent no-op
-    * indistinguishable from a completed takedown. */
-  def commitRemove(s: SparkSession, root: String,
-      removedIds: DataFrame, tag: Option[String],
-      branch: Option[String], requireAllFound: Boolean): Int = {
-    if (tag.nonEmpty && branch.nonEmpty)
-      throw graft.core.GraftAnalysisException(Seq(
-        s"tagged commits are main-chain only (the durable tag ledger at " +
-          s"$root/$VersionsDir/$TagsDir is not branch-scoped) — commit to " +
-          s"branch '${branch.get}' untagged, or ingest into main"))
+      removedIds: DataFrame, tag: Option[String] = None,
+      branch: Option[String] = None, requireAllFound: Boolean = false): Int = {
     if (!removedIds.columns.contains("split") ||
         !removedIds.columns.contains("doc_id"))
       throw graft.core.GraftAnalysisException(Seq(
@@ -848,11 +813,8 @@ object Snapshots {
     }
     // stats AND blooms carry verbatim: both only ever over-approximate
     // the post-takedown content — sound for pruning by construction
-    writeVersionFile(s, root, v, vfBase.schema, newRefs, tag,
-      vfBase.statsCols, branch, constraints = vfBase.constraints,
-      zorder = vfBase.zorder, bloomCols = vfBase.bloomCols,
-      blooms = vfBase.blooms)
-    tag.foreach { t => writeTagMarker(s, root, t, v); bumpLedger(s, root, v) }
+    writeVersionFile(s, root, v,
+      vfBase.successor.copy(refs = newRefs, tag = tag), branch)
     v
   }
 
@@ -897,14 +859,14 @@ object Snapshots {
     countRows.map(r => r.getString(0) -> r.getLong(1)).toMap
   }
 
+  /** The delta commit behind [[commitDelta]], [[mergeBranch]]'s landing
+    * commit and [[mergeInto]]: persists the frames every attempt reads and
+    * runs [[commitDeltaAttempt]] through [[commitWithRebase]]. `pinned`
+    * is the head a caller derived the adds and removals from; see
+    * [[commitWithRebase]]. */
   private def commitDeltaChain(s: SparkSession, root: String,
       adds: DataFrame, removedIds: DataFrame, tag: Option[String],
-      branch: Option[String]): Int = {
-    if (tag.nonEmpty && branch.nonEmpty)
-      throw graft.core.GraftAnalysisException(Seq(
-        s"tagged commits are main-chain only (the durable tag ledger at " +
-          s"$root/$VersionsDir/$TagsDir is not branch-scoped) — commit to " +
-          s"branch '${branch.get}' untagged, or ingest into main"))
+      branch: Option[String], pinned: Option[Int] = None): Int = {
     // removedIds persists alongside adds (r17): the attempt's affected-
     // split collect and gone both evaluate it — for a CDC-derived
     // delta (DocIndex.refresh) each evaluation re-runs the pointer-pruned
@@ -926,30 +888,44 @@ object Snapshots {
     val goneP = removedIdsP.select(col("doc_id"))
       .unionByName(adds.select(col("doc_id")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val addsPOuter = adds
+    // the commit runs several actions over the adds (constraint check,
+    // affected-split collect, rewrite) — in a foreachBatch they are the
+    // micro-batch source, which must not be recomputed per action
+    val addsP = adds
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try
-      commitWithRebase(s, root, tag, branch, goneP)(base =>
-        commitDeltaAttempt(s, root, addsPOuter, removedIdsP, goneP,
-          tag, branch, base))
+      commitWithRebase(s, root, tag, branch, goneP, pinned)(base =>
+        commitDeltaAttempt(s, root, addsP, removedIdsP, goneP, tag, branch, base))
     finally {
       goneP.unpersist(blocking = false)
       if (!removedOwned) removedIdsP.unpersist(blocking = false)
-      addsPOuter.unpersist(blocking = false): Unit
+      addsP.unpersist(blocking = false): Unit
     }
   }
 
   /** The optimistic-concurrency driver shared by every delta-shaped
     * commit ([[commitDelta]], [[commitRemove]], [[mergeBranch]]'s
-    * landing commit): run `attemptFn` against the current head; on a
-    * lost claim race, re-read the head, diff the interleaved commits
-    * (pointer-pruned CDC), refuse on genuine doc_id overlap with `gone`
-    * (this commit's touched doc_ids, persisted by the caller), and
-    * otherwise retry against the new head — bounded attempts. */
+    * landing commit, [[mergeInto]]): refuse a tagged branch commit, skip
+    * a redelivered tag, run `attemptFn` against the head and ledger its
+    * tag. On a lost claim race, re-read the head, diff the interleaved
+    * commits (pointer-pruned CDC), refuse on genuine doc_id overlap with
+    * `gone` (this commit's touched doc_ids, persisted by the caller), and
+    * otherwise retry against the new head — bounded attempts.
+    *
+    * A `pinned` commit was DERIVED from that head ([[mergeInto]]'s
+    * classification), so it never rebases: any interleaved commit, seen
+    * as a moved head before the attempt or as a lost claim during it,
+    * surfaces as [[CommitRaceLost]] for the caller to re-derive against
+    * the new head — a silent rebase would land a stale classification. */
   private def commitWithRebase(s: SparkSession, root: String,
-      tag: Option[String], branch: Option[String], gone: DataFrame)
-      (attemptFn: Int => Int): Int = {
-    var base = latestVersion(s, root, branch)
+      tag: Option[String], branch: Option[String], gone: DataFrame,
+      pinned: Option[Int] = None)(attemptFn: Int => Int): Int = {
+    if (tag.nonEmpty && branch.nonEmpty)
+      throw graft.core.GraftAnalysisException(Seq(
+        s"tagged commits are main-chain only (the durable tag ledger at " +
+          s"$root/$VersionsDir/$TagsDir is not branch-scoped) — commit to " +
+          s"branch '${branch.get}' untagged, or ingest into main"))
+    var base = pinned.getOrElse(latestVersion(s, root, branch))
     require(base >= 1, branch match {
       case None => s"delta commit on an empty store at $root — commitFull first"
       case Some(b) => s"no branch '$b' at $root — createBranch first"
@@ -963,9 +939,13 @@ object Snapshots {
         readTagMarker(s, root, t).foreach(v => return v)
       }
       try {
-        return attemptFn(base)
+        if (pinned.nonEmpty && latestVersion(s, root, branch) != base)
+          throw CommitRaceLost(root, base + 1)
+        val v = attemptFn(base)
+        tag.foreach { t => writeTagMarker(s, root, t, v); bumpLedger(s, root, v) }
+        return v
       } catch {
-        case CommitRaceLost(_, lostV) =>
+        case CommitRaceLost(_, lostV) if pinned.isEmpty =>
           attempt += 1
           val newHead = latestVersion(s, root, branch)
           if (newHead < lostV)
@@ -1011,7 +991,8 @@ object Snapshots {
 
   /** One optimistic attempt of a delta commit against `base` (the head
     * this attempt believes in). Throws [[CommitRaceLost]] when another
-    * committer lands `base + 1` first; the caller rebases and retries. */
+    * committer lands `base + 1` first; the caller rebases and retries.
+    * `adds` and `gone` arrive PERSISTED by the caller. */
   private def commitDeltaAttempt(s: SparkSession, root: String,
       adds: DataFrame, removedIds: DataFrame, gone: DataFrame,
       tag: Option[String], branch: Option[String], base: Int): Int = {
@@ -1023,94 +1004,92 @@ object Snapshots {
     val dir = attemptDir(v, branch)
 
     val splitKeyed = removedIds.columns.contains("split")
-    // `adds` and `gone` arrive PERSISTED by the caller: the commit runs
-    // several actions over them (constraint check, affected-split
-    // collect, rewrite) — in a foreachBatch the adds are the micro-batch
-    // source, which must not be recomputed per action
-    val addsP = adds;
-    {
-      // the store's data contract, enforced at the door: a delta whose
-      // adds violate a recorded CHECK refuses before anything is written
-      checkConstraints(root, addsP, vfBase.constraints,
-        s"commitDelta v$v adds" + branch.fold("")(b => s" (branch '$b')"))
-      // affected = splits receiving adds ∪ splits losing docs. Bounded
-      // driver collect: one row per AFFECTED split (a daily delta touches
-      // few of many splits — the design point). Split-keyed removals read
-      // their split straight off the delta; doc_id-only removals pay a
-      // corpus-wide semi-join to find where their victims live.
-      val affected: Set[String] =
-        graft.core.Labeled(s, s"graft commitDelta v$v: affected splits") {
-          if (splitKeyed)
-            distinctStringsOneJob(addsP.select(col("split"))
-              .unionByName(removedIds.select(col("split"))))
-          else
-            distinctStringsOneJob(addsP.select(col("split"))
-              .unionByName(readRefs(s, root, schema, refs)
-                .join(gone, "doc_id").select(col("split"))))
-        }
-      // a NULL split surfaces HERE for free (it is one of the distinct
-      // values just collected): refuse before anything is written —
-      // null keys have no partition home and could never be tombstoned
-      if (affected.contains(null))
-        throw graft.core.GraftAnalysisException(Seq(
-          s"commitDelta v$v at $root refused: rows carry a NULL " +
-            "`split` — store rows are (split, doc_id)-keyed; an input " +
-            "frame missing the column gets it NULL-filled by SQL " +
-            "by-name resolution, so key every row explicitly"))
+    // the store's data contract, enforced at the door: a delta whose
+    // adds violate a recorded CHECK refuses before anything is written
+    checkConstraints(root, adds, vfBase.constraints,
+      s"commitDelta v$v adds" + branch.fold("")(b => s" (branch '$b')"))
+    // affected = splits receiving adds ∪ splits losing docs. Bounded
+    // driver collect: one row per AFFECTED split (a daily delta touches
+    // few of many splits — the design point). Split-keyed removals read
+    // their split straight off the delta; doc_id-only removals pay a
+    // corpus-wide semi-join to find where their victims live.
+    val affected: Set[String] =
+      graft.core.Labeled(s, s"graft commitDelta v$v: affected splits") {
+        if (splitKeyed)
+          distinctStringsOneJob(adds.select(col("split"))
+            .unionByName(removedIds.select(col("split"))))
+        else
+          distinctStringsOneJob(adds.select(col("split"))
+            .unionByName(readRefs(s, root, schema, refs)
+              .join(gone, "doc_id").select(col("split"))))
+      }
+    // a NULL split surfaces HERE for free (it is one of the distinct
+    // values just collected): refuse before anything is written —
+    // null keys have no partition home and could never be tombstoned
+    if (affected.contains(null))
+      throw graft.core.GraftAnalysisException(Seq(
+        s"commitDelta v$v at $root refused: rows carry a NULL " +
+          "`split` — store rows are (split, doc_id)-keyed; an input " +
+          "frame missing the column gets it NULL-filled by SQL " +
+          "by-name resolution, so key every row explicitly"))
 
-      var newBlooms: Map[(String, String), Array[Byte]] = vfBase.blooms
-      val newRefs0: Seq[SplitRef] =
-        if (affected.isEmpty) refs
-        else {
-          // read ONLY the affected splits of the current version —
-          // partition-pruned at planning time, so unaffected splits'
-          // files are never opened
-          val affectedRefs = refs.filter(r => affected.contains(r.split))
-          val current = readRefs(s, root, schema, affectedRefs)
-          val currentWide = current.select(widened.fieldNames.map(n =>
-            if (current.columns.contains(n)) col(n)
-            else lit(null).cast(widened(n).dataType).as(n)).toIndexedSeq: _*)
-          val rewritten0 = currentWide
-            .join(gone, Seq("doc_id"), "left_anti")
-            .unionByName(addsP.filter(col("split").isin(affected.toSeq: _*))
-              .select(widened.fieldNames.map(col).toIndexedSeq: _*))
-          // the z-order path evaluates its input THREE times (isEmpty,
-          // dimRanges, the write) — persist the rewrite join for the
-          // commit's duration, exactly as addsP is persisted above
-          val zClustered = statsCols.nonEmpty && vfBase.zorder
-          val rewritten0P =
-            if (!zClustered) rewritten0
-            else rewritten0.persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val (touchedRefs, touchedBlooms) = try {
-            val rewritten =
-              if (statsCols.isEmpty) distribute(rewritten0P)
-              else cluster(rewritten0P, statsCols, vfBase.zorder)
-            // counts, stats and blooms of the rewritten splits come from
-            // the rewrite job itself (exact); a split rewritten to EMPTY
-            // has no files — its ref records 0 rows and readAt skips it.
-            // Untouched splits CARRY their stats and bloom cells verbatim
-            // — exact, because their files are immutable.
-            writeSplits(s, rewritten, root, dir, statsCols, vfBase.bloomCols,
-              s"graft commitDelta v$v", s"rewrite ${affected.size} split(s) -> $dir")
-          } finally {
-            if (zClustered) rewritten0P.unpersist(blocking = false): Unit
-          }
-          if (vfBase.bloomCols.nonEmpty)
-            newBlooms = vfBase.blooms.view
-              .filterKeys(k => !affected.contains(k._1)).toMap ++ touchedBlooms
-          val kept = refs.filterNot(r => affected.contains(r.split))
-          val emptyCells = statsCols.map(_ => StatCell(None, None, 0L)).toIndexedSeq
-          val touched = affected.toSeq.sorted.map(sp =>
-            touchedRefs.getOrElse(sp, SplitRef(sp, dir, 0L, emptyCells)))
-          kept ++ touched
+    val rewritten =
+      if (affected.isEmpty) vfBase
+      else {
+        // read ONLY the affected splits of the current version —
+        // partition-pruned at planning time, so unaffected splits'
+        // files are never opened
+        val affectedRefs = refs.filter(r => affected.contains(r.split))
+        val current = readRefs(s, root, schema, affectedRefs)
+        val currentWide = current.select(widened.fieldNames.map(n =>
+          if (current.columns.contains(n)) col(n)
+          else lit(null).cast(widened(n).dataType).as(n)).toIndexedSeq: _*)
+        val rewritten0 = currentWide
+          .join(gone, Seq("doc_id"), "left_anti")
+          .unionByName(adds.filter(col("split").isin(affected.toSeq: _*))
+            .select(widened.fieldNames.map(col).toIndexedSeq: _*))
+        // the z-order path evaluates its input THREE times (isEmpty,
+        // dimRanges, the write) — persist the rewrite join for the
+        // commit's duration, exactly as the caller persists the adds
+        val zClustered = statsCols.nonEmpty && vfBase.zorder
+        val rewritten0P =
+          if (!zClustered) rewritten0
+          else rewritten0.persist(
+            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val written = try {
+          val toWrite =
+            if (statsCols.isEmpty) distribute(rewritten0P)
+            else cluster(rewritten0P, statsCols, vfBase.zorder)
+          // counts, stats and blooms of the rewritten splits come from
+          // the rewrite job itself (exact)
+          writeSplits(s, toWrite, root, dir, statsCols, vfBase.bloomCols,
+            s"graft commitDelta v$v", s"rewrite ${affected.size} split(s) -> $dir")
+        } finally {
+          if (zClustered) rewritten0P.unpersist(blocking = false): Unit
         }
-      writeVersionFile(s, root, v, widened, newRefs0, tag, statsCols, branch,
-        constraints = vfBase.constraints, zorder = vfBase.zorder,
-        bloomCols = vfBase.bloomCols, blooms = newBlooms)
-      tag.foreach { t => writeTagMarker(s, root, t, v); bumpLedger(s, root, v) }
-      v
-    }
+        replaceSplits(vfBase, affected, Some(dir), written)
+      }
+    writeVersionFile(s, root, v,
+      rewritten.successor.copy(schema = widened, tag = tag), branch)
+    v
+  }
+
+  /** `base` with the refs and bloom cells of `splits` replaced by what a
+    * rewrite into `dir` wrote (`written`, from [[writeSplits]]): a split
+    * the rewrite left empty has no files and gets a 0-row ref, which
+    * readAt skips. Every other split carries its ref and bloom cells
+    * VERBATIM — exact, because its files are immutable. `dir = None`
+    * drops the splits instead. */
+  private def replaceSplits(base: VersionFile, splits: Set[String],
+      dir: Option[String],
+      written: (Map[String, SplitRef], Map[(String, String), Array[Byte]])
+        = (Map.empty, Map.empty)): VersionFile = {
+    val emptyCells = base.statsCols.map(_ => StatCell(None, None, 0L))
+    val fresh = dir.toSeq.flatMap(d => splits.toSeq.map(sp =>
+      written._1.getOrElse(sp, SplitRef(sp, d, 0L, emptyCells))))
+    base.copy(refs = base.refs.filterNot(r => splits.contains(r.split)) ++ fresh,
+      blooms = base.blooms.filterNot { case ((sp, _), _) => splits.contains(sp) } ++
+        written._2)
   }
 
   /** The widened schema of a delta commit: the stored schema plus any NEW
@@ -1151,13 +1130,11 @@ object Snapshots {
     * (not per split, not per commit), unioned. Reads with the schema the
     * version COMMITTED — columns added by later deltas are invisible
     * here, and columns added by earlier ones read back null from dirs
-    * written before them. */
-  def readAt(s: SparkSession, root: String, version: Int): DataFrame =
-    readAt(s, root, version, None)
-
-  /** [[readAt]] on a BRANCH chain (None = main). */
+    * written before them.
+    *
+    * @param branch the BRANCH chain to read (None = main). */
   def readAt(s: SparkSession, root: String, version: Int,
-      branch: Option[String]): DataFrame = {
+      branch: Option[String] = None): DataFrame = {
     val vf = readVersionFile(s, root, version, branch)
     readRefs(s, root, vf.schema, vf.refs)
   }
@@ -1171,16 +1148,14 @@ object Snapshots {
     * prefix, IS [NOT] NULL), and a split is pruned only when a conjunct
     * is PROVABLY empty on it — everything unrecognized simply doesn't
     * prune. The full predicate is still applied to the surviving scan:
-    * pruning can never change the result, only the files read. */
+    * pruning can never change the result, only the files read.
+    *
+    * @param branch the BRANCH chain to read (None = main) — branch
+    *   version files carry the fork's stats and maintain them per commit,
+    *   so a forked experiment prunes exactly like main. */
   def readAtWhere(s: SparkSession, root: String, version: Int,
-      pred: org.apache.spark.sql.Column): DataFrame =
-    readAtWhere(s, root, version, pred, None)
-
-  /** [[readAtWhere]] on a BRANCH chain (None = main) — branch version
-    * files carry the fork's stats and maintain them per commit, so a
-    * forked experiment prunes exactly like main. */
-  def readAtWhere(s: SparkSession, root: String, version: Int,
-      pred: org.apache.spark.sql.Column, branch: Option[String]): DataFrame = {
+      pred: org.apache.spark.sql.Column,
+      branch: Option[String] = None): DataFrame = {
     val vf = readVersionFile(s, root, version, branch)
     readRefs(s, root, vf.schema, prunedRefs(s, root, vf, pred)).filter(pred)
   }
@@ -1797,12 +1772,11 @@ object Snapshots {
     * the [[writeSummaryCheckpoint]] manifest log where present). The
     * store's DESCRIBE HISTORY: which commits exist, what each was
     * tagged (the ingest batch it carries), and the corpus size as of
-    * each. */
-  def history(s: SparkSession, root: String): DataFrame =
-    history(s, root, None)
-
-  /** [[history]] of a BRANCH chain (None = main). */
-  def history(s: SparkSession, root: String, branch: Option[String]): DataFrame = {
+    * each.
+    *
+    * @param branch the BRANCH chain to list (None = main). */
+  def history(s: SparkSession, root: String,
+      branch: Option[String] = None): DataFrame = {
     val dirP = new org.apache.hadoop.fs.Path(chainDir(root, branch))
     val fs = dirP.getFileSystem(s.sparkContext.hadoopConfiguration)
     val known: Map[Int, VersionSummary] =
@@ -1862,11 +1836,9 @@ object Snapshots {
     * (forgetting either would silently drop data skipping or the data
     * contract at the consolidation point). Returns the new version. */
   def consolidate(s: SparkSession, root: String): Int = {
-    val latest = latestVersion(s, root)
-    require(latest >= 1, s"consolidate on an empty store at $root")
-    val vf = readVersionFile(s, root, latest)
-    commitFull(s, readRefs(s, root, vf.schema, vf.refs), root,
-      vf.statsCols, vf.constraints, vf.zorder, vf.bloomCols)
+    val head = latestVersion(s, root)
+    require(head >= 1, s"consolidate on an empty store at $root")
+    commitFullLike(s, readAt(s, root, head), root)
   }
 
   /** [[commitFull]] carrying the HEAD's recorded contract forward —
@@ -2003,9 +1975,10 @@ object Snapshots {
     * inserts), so match detection reads only the source's splits —
     * never the corpus. Source doc_ids must be unique (a doc matched by
     * two source rows is a refusal, the Delta convention — which source
-    * row should win is not the engine's call). Tags, branches,
-    * constraints, schema widening, stats/bloom maintenance and the
-    * lost-race auto-rebase all ride the underlying [[commitDelta]].
+    * row should win is not the engine's call). Tags (main only),
+    * branches, constraints, schema widening and stats/bloom maintenance
+    * all ride the underlying delta commit; an interleaved commit makes the
+    * whole merge re-derive against the new head instead of rebasing.
     * Returns the new version. */
   def mergeInto(s: SparkSession, root: String, source: DataFrame,
       whenMatched: WhenMatched, whenNotMatched: WhenNotMatched,
@@ -2077,7 +2050,7 @@ object Snapshots {
             if (whenMatched == WhenMatched.Delete)
               matched.select(col("split"), col("doc_id"))
             else none.select(col("split"), col("doc_id"))
-          return commitDeltaPinned(s, root, adds, removes, tag, branch, head)
+          return commitDeltaChain(s, root, adds, removes, tag, branch, pinned = Some(head))
         } catch {
           case CommitRaceLost(_, _) =>
             attempt += 1
@@ -2090,43 +2063,6 @@ object Snapshots {
       }
       -1 // unreachable: the loop returns or throws
     } finally srcP.unpersist(blocking = false): Unit
-  }
-
-  /** One delta commit PINNED to `expectedBase` — [[mergeInto]]'s commit
-    * point: its adds/removes were DERIVED from that head, so any
-    * interleaved commit (seen either as a moved head before the attempt
-    * or as a lost claim during it) surfaces as [[CommitRaceLost]] for
-    * the caller to re-derive against the new head; a silent rebase here
-    * would land a stale classification. */
-  private def commitDeltaPinned(s: SparkSession, root: String,
-      adds: DataFrame, removedIds: DataFrame, tag: Option[String],
-      branch: Option[String], expectedBase: Int): Int = {
-    tag.foreach { t =>
-      ensureTagLedger(s, root)
-      readTagMarker(s, root, t).foreach(v => return v)
-    }
-    // caller-owned-cache guard — see commitDeltaChain
-    val removedOwned = removedIds.storageLevel !=
-      org.apache.spark.storage.StorageLevel.NONE
-    val removedIdsP =
-      if (removedOwned) removedIds
-      else removedIds
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val gone = removedIdsP.select(col("doc_id"))
-      .unionByName(adds.select(col("doc_id"))) // see commitDeltaChain
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val addsP = adds
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (latestVersion(s, root, branch) != expectedBase)
-        throw CommitRaceLost(root, expectedBase + 1)
-      commitDeltaAttempt(s, root, addsP, removedIdsP, gone, tag, branch,
-        expectedBase)
-    } finally {
-      gone.unpersist(blocking = false)
-      if (!removedOwned) removedIdsP.unpersist(blocking = false)
-      addsP.unpersist(blocking = false): Unit
-    }
   }
 
   /** RESTORE: make `version`'s content the new HEAD as a fresh commit —
@@ -2150,19 +2086,9 @@ object Snapshots {
       throw graft.core.GraftAnalysisException(Seq(
         s"restore of v$version at $root is the current head — nothing to " +
           "undo (pin readers with readAt instead)"))
-    val vf = readVersionFile(s, root, version)
     val v = head + 1
-    try writeVersionFile(s, root, v, vf.schema, vf.refs, None, vf.statsCols,
-      constraints = vf.constraints, zorder = vf.zorder,
-      bloomCols = vf.bloomCols, blooms = vf.blooms)
-    catch {
-      case CommitRaceLost(_, lostV) =>
-        throw graft.core.GraftAnalysisException(Seq(
-          s"concurrent commit detected at $root: v$lostV landed while " +
-            "restoring — re-check the head and restore again if still " +
-            "intended (a restore races like any commit; it must not " +
-            "silently clobber an interleaved delta)"))
-    }
+    publishOrRefuse(s, root, v,
+      readVersionFile(s, root, version).successor, "restore")
     v
   }
 
@@ -2187,21 +2113,9 @@ object Snapshots {
       throw graft.core.GraftAnalysisException(
         s"dropSplits at $root names splits the head (v$head) does not hold" +:
           unknown.map(sp => s"unknown split '$sp'").toIndexedSeq)
-    val gone = splits.toSet
-    val newRefs = vf.refs.filterNot(r => gone.contains(r.split))
-    val newBlooms = vf.blooms.view.filterKeys(k => !gone.contains(k._1)).toMap
     val v = head + 1
-    try writeVersionFile(s, root, v, vf.schema, newRefs, None, vf.statsCols,
-      constraints = vf.constraints, zorder = vf.zorder,
-      bloomCols = vf.bloomCols, blooms = newBlooms)
-    catch {
-      case CommitRaceLost(_, lostV) =>
-        throw graft.core.GraftAnalysisException(Seq(
-          s"concurrent commit detected at $root: v$lostV landed during " +
-            "dropSplits — re-check the head and re-run the trim if still " +
-            "intended (a pointer-only trim never rebases over a commit " +
-            "that may have refilled the split)"))
-    }
+    publishOrRefuse(s, root, v,
+      replaceSplits(vf.successor, splits.toSet, dir = None), "dropSplits")
     v
   }
 
@@ -2240,7 +2154,7 @@ object Snapshots {
       if (!zClustered) effective0
       else effective0.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (freshRefs, freshBlooms) = try {
+    val written = try {
       val effective =
         if (vf.statsCols.isEmpty) distribute(effectiveP)
         else cluster(effectiveP, vf.statsCols, vf.zorder)
@@ -2249,26 +2163,8 @@ object Snapshots {
     } finally {
       if (zClustered) effectiveP.unpersist(blocking = false): Unit
     }
-    val emptyCells = vf.statsCols.map(_ => StatCell(None, None, 0L)).toIndexedSeq
-    val targetNames = targets.map(_.split).toSet
-    val newRefs = vf.refs.map { r =>
-      if (!targetNames.contains(r.split)) r
-      else freshRefs.getOrElse(r.split, SplitRef(r.split, dir, 0L, emptyCells))
-    }
-    val newBlooms =
-      if (vf.bloomCols.isEmpty) vf.blooms
-      else vf.blooms.view.filterKeys(k => !targetNames.contains(k._1)).toMap ++
-        freshBlooms
-    try writeVersionFile(s, root, v, vf.schema, newRefs, None, vf.statsCols,
-      constraints = vf.constraints, zorder = vf.zorder,
-      bloomCols = vf.bloomCols, blooms = newBlooms)
-    catch {
-      case CommitRaceLost(_, lostV) =>
-        throw graft.core.GraftAnalysisException(Seq(
-          s"concurrent commit detected at $root: v$lostV landed during DV " +
-            "compaction — re-run compactDeletionVectors against the new " +
-            "head (maintenance never rebases over interleaved commits)"))
-    }
+    publishOrRefuse(s, root, v, replaceSplits(vf.successor,
+      targets.map(_.split).toSet, Some(dir), written), "compactDeletionVectors")
     v
   }
 
@@ -2371,17 +2267,9 @@ object Snapshots {
       throw graft.core.GraftAnalysisException(Seq(
         s"branch '$name' already exists at $root — dropBranch first, or " +
           "pick another name"))
-    val vf = readVersionFile(s, root, fromVersion)
-    try writeVersionFile(s, root, 1, vf.schema, vf.refs, None, vf.statsCols,
-      Some(name), fork = Some(fromVersion), constraints = vf.constraints,
-      zorder = vf.zorder, bloomCols = vf.bloomCols, blooms = vf.blooms)
-    catch {
-      case CommitRaceLost(_, _) =>
-        throw graft.core.GraftAnalysisException(Seq(
-          s"branch '$name' already exists at $root (a concurrent " +
-            "createBranch won the race) — dropBranch first, or pick " +
-            "another name"))
-    }
+    publishOrRefuse(s, root, 1, readVersionFile(s, root, fromVersion)
+      .successor.copy(fork = Some(fromVersion)), s"createBranch '$name'",
+      Some(name))
   }
 
   /** Live branch names at `root` (ones with at least one committed
@@ -2418,9 +2306,6 @@ object Snapshots {
       .foreach(p => fs.delete(p, true): Unit)
   }
 
-  def mergeBranch(s: SparkSession, root: String, name: String): Int =
-    mergeBranch(s, root, name, force = false)
-
   /** Land a branch's NET changes since its fork point as ONE new main
     * commit (the branch itself is left intact — drop it after). The
     * delta is the branch chain's own pointer-pruned row diff
@@ -2432,11 +2317,12 @@ object Snapshots {
     * CONFLICTS: if main advanced past the fork point and touched any
     * doc_id the branch also touched, the merge refuses and names a
     * sample (both sides changed the same document — someone must
-    * decide). `force = true` overrides with branch-wins semantics.
-    * Returns the new main version (or main's head unchanged when the
-    * branch committed nothing). */
+    * decide). Returns the new main version (or main's head unchanged when
+    * the branch committed nothing).
+    *
+    * @param force override a conflict with branch-wins semantics. */
   def mergeBranch(s: SparkSession, root: String, name: String,
-      force: Boolean): Int = {
+      force: Boolean = false): Int = {
     val bChain = Some(name)
     val bHead = latestVersion(s, root, bChain)
     if (bHead < 1)
@@ -2616,13 +2502,11 @@ object Snapshots {
 
   /** Latest committed version at `root` (0 = empty store): the largest N
     * with a COMPLETE `v{N}.list` — a crashed commit's data dir without
-    * its version file is invisible, by design. */
-  def latestVersion(s: SparkSession, root: String): Int =
-    latestVersion(s, root, None)
-
-  /** Latest committed version on a BRANCH chain (None = main). */
+    * its version file is invisible, by design.
+    *
+    * @param branch the BRANCH chain to look at (None = main). */
   def latestVersion(s: SparkSession, root: String,
-      branch: Option[String]): Int = {
+      branch: Option[String] = None): Int = {
     val p = new org.apache.hadoop.fs.Path(chainDir(root, branch))
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     listVersions(fs, p).lastOption.getOrElse(0)
@@ -2740,14 +2624,9 @@ object Snapshots {
     * encoder escapes a literal tilde). Written to a temp name and
     * atomically renamed after the exclusive-create CLAIM (`.v{N}.claim`)
     * is won — the claim is the concurrency control, the rename the
-    * visibility point. */
+    * visibility point. `next.ts` is ignored: the stamp is taken here. */
   private def writeVersionFile(s: SparkSession, root: String, v: Int,
-      schema: org.apache.spark.sql.types.StructType,
-      refs: Seq[SplitRef], tag: Option[String] = None,
-      statsCols: Seq[String] = Nil, branch: Option[String] = None,
-      fork: Option[Int] = None, constraints: Seq[String] = Nil,
-      zorder: Boolean = false, bloomCols: Seq[String] = Nil,
-      blooms: Map[(String, String), Array[Byte]] = Map.empty): Unit = {
+      next: VersionFile, branch: Option[String]): Unit = {
     def cell(o: Option[String]): String = o.map(escape).getOrElse("~")
     // STRICTLY-INCREASING commit stamps: two commits landing in the same
     // millisecond (or a backwards clock step) would otherwise share an
@@ -2758,21 +2637,21 @@ object Snapshots {
       if (v <= 1) 0L
       else readVersionFile(s, root, v - 1, branch).ts.getOrElse(0L)
     val ts = math.max(prevTs + 1, System.currentTimeMillis())
-    val body = (Seq(schema.toDDL) ++
+    val body = (Seq(next.schema.toDDL) ++
       Seq(s"#ts=$ts") ++
-      tag.map(t => s"#tag=${escape(t)}") ++
-      fork.map(f => s"#fork=$f") ++
-      constraints.map(c => s"#check=${escape(c)}") ++
-      (if (zorder) Seq("#zorder=1") else Nil) ++
-      (if (statsCols.isEmpty) Nil
-       else Seq(s"#stats=${statsCols.map(escape).mkString(",")}")) ++
-      (if (bloomCols.isEmpty) Nil
-       else Seq(s"#bloom=${bloomCols.map(escape).mkString(",")}")) ++
-      blooms.toSeq.sortBy(_._1).map { case ((sp, c), bytes) =>
+      next.tag.map(t => s"#tag=${escape(t)}") ++
+      next.fork.map(f => s"#fork=$f") ++
+      next.constraints.map(c => s"#check=${escape(c)}") ++
+      (if (next.zorder) Seq("#zorder=1") else Nil) ++
+      (if (next.statsCols.isEmpty) Nil
+       else Seq(s"#stats=${next.statsCols.map(escape).mkString(",")}")) ++
+      (if (next.bloomCols.isEmpty) Nil
+       else Seq(s"#bloom=${next.bloomCols.map(escape).mkString(",")}")) ++
+      next.blooms.toSeq.sortBy(_._1).map { case ((sp, c), bytes) =>
         s"#bf=${escape(sp)}\t${escape(c)}\t" +
           java.util.Base64.getEncoder.encodeToString(bytes)
       } ++
-      refs.sortBy(_.split).map { r =>
+      next.refs.sortBy(_.split).map { r =>
         val statCells = r.stats.flatMap(c =>
           Seq(cell(c.min), cell(c.max), c.nulls.toString))
         // trailing optional DV cells: comma-joined sidecar dirs + the
@@ -2849,9 +2728,10 @@ object Snapshots {
   }
 
   /** Typed race signal: a concurrent committer landed this version
-    * number first. [[commitDeltaChain]] catches it and AUTO-REBASES
-    * (re-read head, overlap-check, retry); [[commitFull]] translates it
-    * to a loud refusal (rebasing a full rewrite has no defined winner). */
+    * number first. [[commitWithRebase]] catches it and AUTO-REBASES
+    * (re-read head, overlap-check, retry); [[mergeInto]] re-derives its
+    * merge; every commit that never rebases refuses in
+    * [[publishOrRefuse]]. */
   private[plans] final case class CommitRaceLost(root: String, v: Int)
     extends RuntimeException(
       s"concurrent commit detected at $root: v$v already exists")
@@ -2867,6 +2747,24 @@ object Snapshots {
     extends IllegalArgumentException(
       s"no committed version v$version at $root" +
         branch.fold("")(b => s" on branch '$b'"))
+
+  /** Publish `next` for a commit that never rebases ([[commitFull]],
+    * [[restore]], [[dropSplits]], [[compactDeletionVectors]],
+    * [[createBranch]]): a full rewrite or a maintenance step has no
+    * defined rebase over an interleaved commit, and must not silently
+    * clobber it, so a lost claim race refuses. */
+  private def publishOrRefuse(s: SparkSession, root: String, v: Int,
+      next: VersionFile, op: String, branch: Option[String] = None): Unit =
+    try writeVersionFile(s, root, v, next, branch)
+    catch {
+      case CommitRaceLost(_, lostV) =>
+        throw graft.core.GraftAnalysisException(Seq(
+          s"$op at $root lost its commit race: v$lostV" +
+            branch.fold("")(b => s" of branch '$b'") + " landed first and " +
+            s"nothing was published — $op never rebases over an " +
+            "interleaved commit; re-read the head and run it again if " +
+            "still intended"))
+    }
 
   private def loseRace(fs: org.apache.hadoop.fs.FileSystem,
       claim: org.apache.hadoop.fs.Path, root: String, v: Int): Nothing = {
@@ -2942,7 +2840,12 @@ object Snapshots {
       constraints: IndexedSeq[String] = IndexedSeq.empty,
       zorder: Boolean = false,
       bloomCols: IndexedSeq[String] = IndexedSeq.empty,
-      blooms: Map[(String, String), Array[Byte]] = Map.empty)
+      blooms: Map[(String, String), Array[Byte]] = Map.empty) {
+    /** The base of the next commit on this chain: the same schema,
+      * contract (stats, constraints, clustering, blooms) and refs,
+      * without the tag and fork point that belong to this version alone. */
+    private[Snapshots] def successor: VersionFile = copy(tag = None, fork = None)
+  }
 
   /** Per-JVM parse cache for version files, keyed by qualified path and
     * validated by (modification time, length). Version files are written

@@ -131,6 +131,16 @@ class SnapshotsScaleSpec extends SparkTestBase {
           statsCols = Seq("a"), constraints = Nil, zorder = true)
       }
       assert(e.getMessage.contains(">= 2 NUMERIC"))
+      // floating stats columns refuse before any job: the Morton key
+      // quantizes with integer division
+      val floating = intercept[graft.core.GraftAnalysisException] {
+        Snapshots.commitFull(spark, d.select(col("doc_id"), col("split"),
+          col("a").cast("int").as("a"), col("b").cast("double").as("b")),
+          zroot.toString, statsCols = Seq("a", "b"), constraints = Nil, zorder = true)
+      }
+      assert(floating.getMessage.contains(">= 2 NUMERIC") &&
+        floating.getMessage.contains("'b' has type DOUBLE"), floating.getMessage)
+      assert(Snapshots.latestVersion(spark, zroot.toString) === 2)
     } finally {
       CorpusExport.deleteRecursively(zroot.toFile)
       CorpusExport.deleteRecursively(lroot.toFile)

@@ -2327,9 +2327,12 @@ class SnapshotsSpec extends SparkTestBase {
   /** Version file `v` with what legitimately differs between two stores
     * fed the same commits removed: the commit stamp and the attempt-
     * unique dir names. */
-  private def versionText(root: java.nio.file.Path, v: Int): String =
+  private def versionText(root: java.nio.file.Path, v: Int,
+      branch: Option[String] = None): String =
     new String(java.nio.file.Files.readAllBytes(
-      root.resolve("_versions").resolve(s"v$v.list")), "UTF-8")
+      branch.fold(root.resolve("_versions"))(b =>
+        root.resolve("_versions").resolve("branches").resolve(b))
+        .resolve(s"v$v.list")), "UTF-8")
       .linesIterator.filterNot(_.startsWith("#ts="))
       .map(_.replaceAll("v\\d+-[0-9a-f]{8}", "v?")).mkString("\n")
 
@@ -2509,6 +2512,144 @@ class SnapshotsSpec extends SparkTestBase {
         assert(readBacks(t.descs).isEmpty, s"empty write $i read back: ${t.descs}")
         assert(versionText(root, i + 1).linesIterator.count(!_.startsWith("#")) == 1,
           versionText(root, i + 1)) // schema line only: no refs
+      }
+    } finally CorpusExport.deleteRecursively(root.toFile)
+  }
+
+  /** One tiny lifecycle through every call site that publishes a version
+    * file, with blooms kept 64 bits wide so their base64 stays short. */
+  private def goldenLifecycle(r: String): Unit = {
+    val none = df(Nil).select(col("split"), col("doc_id"))
+    def keys(id: Long, split: String) =
+      df(Seq(doc(id, split, ""))).select(col("split"), col("doc_id"))
+    Snapshots.commitFull(spark, df(Seq(doc(1, "a", "one"), doc(2, "a", "two"),
+      doc(8, "a", "eight"), doc(3, "b", "three"), doc(4, "c", "four"))), r,
+      Seq("doc_id", "n_tokens"), Seq("n_tokens >= 0"), zorder = false, Seq("doc_id"))
+    Snapshots.commitDelta(spark, r, df(Seq(doc(5, "b", "five"))), keys(1, "a"),
+      tag = Some("t1"))
+    Snapshots.commitRemove(spark, r, keys(2, "a"))
+    Snapshots.compactDeletionVectors(spark, r, 0.0)
+    Snapshots.consolidate(spark, r)
+    Snapshots.dropSplits(spark, r, Seq("c"))
+    Snapshots.restore(spark, r, 5)
+    Snapshots.createBranch(spark, r, "exp", 7)
+    Snapshots.commitDelta(spark, r, df(Seq(doc(6, "b", "six"))), none,
+      tag = None, branch = Some("exp"))
+    Snapshots.mergeBranch(spark, r, "exp")
+    Snapshots.mergeInto(spark, r, df(Seq(doc(3, "b", "THREE"), doc(7, "c", "seven"))),
+      Snapshots.WhenMatched.Update, Snapshots.WhenNotMatched.Insert)
+  }
+
+  test("version-file golden: every publishing call site writes the pinned text") {
+    val root = freshRoot()
+    val bitsKey = "spark.graft.snapshot.bloomBits"
+    spark.conf.set(bitsKey, "64")
+    try {
+      goldenLifecycle(root.toString)
+      val got = (1 to 9).map(v => s"v$v" -> versionText(root, v)) ++
+        (1 to 2).map(v => s"exp v$v" -> versionText(root, v, Some("exp")))
+      def file(lines: String*) = lines.mkString("\n")
+      val narrow = "doc_id BIGINT NOT NULL,split STRING,text STRING,n_tokens BIGINT NOT NULL"
+      val wide = "doc_id BIGINT,split STRING,text STRING,n_tokens BIGINT"
+      val contract = file("#check=n_tokens+%3E%3D+0", "#stats=doc_id,n_tokens",
+        "#bloom=doc_id")
+      val want = Seq(
+        "v1" -> file(narrow, contract, "#bf=a\tdoc_id\toANxCEbAAhg=",
+          "#bf=b\tdoc_id\tAAEgAAZAAAg=", "#bf=c\tdoc_id\tIABAAIgAEAE=",
+          "a\tv?\t3\t1\t8\t0\t3\t5\t0", "b\tv?\t1\t3\t3\t0\t5\t5\t0",
+          "c\tv?\t1\t4\t4\t0\t4\t4\t0"),
+        "v2" -> file(narrow, "#tag=t1", contract, "#bf=a\tdoc_id\tgANwAAbAABg=",
+          "#bf=b\tdoc_id\tAAEoggZAQRg=", "#bf=c\tdoc_id\tIABAAIgAEAE=",
+          "a\tv?\t2\t2\t8\t0\t3\t5\t0", "b\tv?\t2\t3\t5\t0\t4\t5\t0",
+          "c\tv?\t1\t4\t4\t0\t4\t4\t0"),
+        "v3" -> file(narrow, contract, "#bf=a\tdoc_id\tgANwAAbAABg=",
+          "#bf=b\tdoc_id\tAAEoggZAQRg=", "#bf=c\tdoc_id\tIABAAIgAEAE=",
+          "a\tv?\t2\t2\t8\t0\t3\t5\t0\tv?-dv\t1", "b\tv?\t2\t3\t5\t0\t4\t5\t0",
+          "c\tv?\t1\t4\t4\t0\t4\t4\t0"),
+        "v4" -> file(narrow, contract, "#bf=a\tdoc_id\tgAEQAAJAAAg=",
+          "#bf=b\tdoc_id\tAAEoggZAQRg=", "#bf=c\tdoc_id\tIABAAIgAEAE=",
+          "a\tv?\t1\t8\t8\t0\t5\t5\t0", "b\tv?\t2\t3\t5\t0\t4\t5\t0",
+          "c\tv?\t1\t4\t4\t0\t4\t4\t0"),
+        "v5" -> file(wide, contract, "#bf=a\tdoc_id\tgAEQAAJAAAg=",
+          "#bf=b\tdoc_id\tAAEoggZAQRg=", "#bf=c\tdoc_id\tIABAAIgAEAE=",
+          "a\tv?\t1\t8\t8\t0\t5\t5\t0", "b\tv?\t2\t3\t5\t0\t4\t5\t0",
+          "c\tv?\t1\t4\t4\t0\t4\t4\t0"),
+        "v6" -> file(wide, contract, "#bf=a\tdoc_id\tgAEQAAJAAAg=",
+          "#bf=b\tdoc_id\tAAEoggZAQRg=", "a\tv?\t1\t8\t8\t0\t5\t5\t0",
+          "b\tv?\t2\t3\t5\t0\t4\t5\t0"),
+        "v7" -> file(wide, contract, "#bf=a\tdoc_id\tgAEQAAJAAAg=",
+          "#bf=b\tdoc_id\tAAEoggZAQRg=", "#bf=c\tdoc_id\tIABAAIgAEAE=",
+          "a\tv?\t1\t8\t8\t0\t5\t5\t0", "b\tv?\t2\t3\t5\t0\t4\t5\t0",
+          "c\tv?\t1\t4\t4\t0\t4\t4\t0"),
+        "v8" -> file(wide, contract, "#bf=a\tdoc_id\tgAEQAAJAAAg=",
+          "#bf=b\tdoc_id\tEAMoggZAYZw=", "#bf=c\tdoc_id\tIABAAIgAEAE=",
+          "a\tv?\t1\t8\t8\t0\t5\t5\t0", "b\tv?\t3\t3\t6\t0\t3\t5\t0",
+          "c\tv?\t1\t4\t4\t0\t4\t4\t0"),
+        "v9" -> file(wide, contract, "#bf=a\tdoc_id\tgAEQAAJAAAg=",
+          "#bf=b\tdoc_id\tEAMoggZAYZw=", "#bf=c\tdoc_id\tIADAD4gAEAE=",
+          "a\tv?\t1\t8\t8\t0\t5\t5\t0", "b\tv?\t3\t3\t6\t0\t3\t5\t0",
+          "c\tv?\t2\t4\t7\t0\t4\t5\t0"),
+        "exp v1" -> file(wide, "#fork=7", contract, "#bf=a\tdoc_id\tgAEQAAJAAAg=",
+          "#bf=b\tdoc_id\tAAEoggZAQRg=", "#bf=c\tdoc_id\tIABAAIgAEAE=",
+          "a\tv?\t1\t8\t8\t0\t5\t5\t0", "b\tv?\t2\t3\t5\t0\t4\t5\t0",
+          "c\tv?\t1\t4\t4\t0\t4\t4\t0"),
+        "exp v2" -> file(wide, contract, "#bf=a\tdoc_id\tgAEQAAJAAAg=",
+          "#bf=b\tdoc_id\tEAMoggZAYZw=", "#bf=c\tdoc_id\tIABAAIgAEAE=",
+          "a\tv?\t1\t8\t8\t0\t5\t5\t0", "b\tb-exp-v?\t3\t3\t6\t0\t3\t5\t0",
+          "c\tv?\t1\t4\t4\t0\t4\t4\t0")
+      )
+      assert(got.map(_._1) === want.map(_._1))
+      got.zip(want).foreach { case ((k, t), (_, w)) => assert(t === w, k) }
+    } finally {
+      spark.conf.unset(bitsKey)
+      CorpusExport.deleteRecursively(root.toFile)
+    }
+  }
+
+  test("a tagged mergeInto on a branch refuses like commitDelta; main's tag ledger is untouched") {
+    val root = freshRoot()
+    try {
+      val r = root.toString
+      Snapshots.commitFull(spark, df(Seq(
+        doc(1, "a", "one"), doc(2, "a", "two"), doc(3, "b", "three"))), r)
+      Snapshots.createBranch(spark, r, "exp", 1)
+      val e = intercept[graft.core.GraftAnalysisException] {
+        Snapshots.mergeInto(spark, r, df(Seq(doc(4, "b", "four"))),
+          Snapshots.WhenMatched.Update, Snapshots.WhenNotMatched.Insert,
+          tag = Some("t"), branch = Some("exp"))
+      }
+      assert(e.getMessage.contains("main-chain only"), e.getMessage)
+      assert(Snapshots.versionForTag(spark, r, "t") === None)
+      assert(Snapshots.latestVersion(spark, r) === 1)
+      assert(Snapshots.latestVersion(spark, r, Some("exp")) === 1)
+    } finally CorpusExport.deleteRecursively(root.toFile)
+  }
+
+  test("commits that never rebase turn a lost claim race into a typed refusal naming the version that landed") {
+    val root = freshRoot()
+    try {
+      val r = root.toString
+      Snapshots.commitFull(spark, df(Seq(
+        doc(1, "a", "one"), doc(2, "a", "two"), doc(3, "b", "three"))), r)
+      Snapshots.commitRemove(spark, r, df(Seq(doc(2, "a", "")))
+        .select(col("split"), col("doc_id")))
+      val none = df(Nil).select(col("split"), col("doc_id"))
+      val ops: Seq[(String, () => Int)] = Seq(
+        "commitFull" -> (() => Snapshots.commitFull(spark, df(Seq(doc(9, "a", "nine"))), r)),
+        "restore" -> (() => Snapshots.restore(spark, r, 1)),
+        "dropSplits" -> (() => Snapshots.dropSplits(spark, r, Seq("b"))),
+        "compactDeletionVectors" -> (() => Snapshots.compactDeletionVectors(spark, r, 0.0)))
+      ops.zipWithIndex.foreach { case ((what, op), i) =>
+        val id = 20L + i
+        val before = contents(r, Snapshots.latestVersion(spark, r))
+        val st = new LosingClaim(Some(() =>
+          Snapshots.commitDelta(spark, r, df(Seq(doc(id, "b", "theirs"))), none): Unit))
+        val e = intercept[graft.core.GraftAnalysisException](withStrategy(st)(op()))
+        val head = Snapshots.latestVersion(spark, r)
+        assert(head === 3 + i, what)
+        assert(e.getMessage.contains(what) && e.getMessage.contains(s"v$head"),
+          s"$what: ${e.getMessage}")
+        assert(contents(r, head) === before + ((id, "b", "theirs")), what)
       }
     } finally CorpusExport.deleteRecursively(root.toFile)
   }
