@@ -1,6 +1,5 @@
 package graft
 
-
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line with per-query seconds.
   *
@@ -9,9 +8,9 @@ package graft
   *   - one untimed warm-up pass over all queries (parquet footer cache, JIT,
   *     whole-stage-codegen class compilation — one-time session costs that
   *     would otherwise be charged to whichever query runs first);
-  *   - any streaming query left running by the warm-up is stopped before
-  *     timing starts, so state-store background load never bleeds into a
-  *     timed window;
+  *   - every warm-up run and every timed sample is followed by
+  *     [[GateLoop.reclaim]] (streams stopped, caches and checkpoint blocks
+  *     dropped), so one gate's state never bleeds into a timed window;
   *   - each query is then timed ITERS times (default 3) from a fresh plan
   *     build and the MEDIAN is reported, so one GC pause / page-cache miss
   *     cannot own the number;
@@ -19,7 +18,8 @@ package graft
   *     stalled run is diagnosable from its partial output;
   *   - failures report -1 per query but are EXCLUDED from the summed total
   *     (a failure must never lower the reported runtime); a "failures"
-  *     count field makes them visible at the top level.
+  *     count field makes them visible at the top level, and stderr names
+  *     each failing gate's first error.
   *
   * Pinned-environment mode (round-12 addition — this box's run-to-run
   * noise band measured 126–154 s on IDENTICAL code across four r11 runs,
@@ -39,21 +39,13 @@ package graft
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val sfDir = GateLoop.sfDir
+    val cpus = GateLoop.cpus
     val pinned = sys.env.get("SPARK_GRAFT_BENCH_PINNED").exists(v => v == "1" || v == "true")
     val iters = sys.env.get("SPARK_GRAFT_BENCH_ITERS").map(_.toInt)
       .getOrElse(if (pinned) 5 else 3)
-    val spark = graft.core.Sessions.local(cpus)
-
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
-    only.foreach { o =>
-      val unknown = o -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"SPARK_GRAFT_BENCH_ONLY names unknown gates: $unknown")
-    }
+    val names = GateLoop.gates(sys.env.get("SPARK_GRAFT_BENCH_ONLY"), "SPARK_GRAFT_BENCH_ONLY")
+    val spark = GateLoop.session()
 
     // JVM settle: collect the PREVIOUS gate's garbage outside every timed
     // window. Two passes because finalizable/phantom-reachable Spark
@@ -63,75 +55,20 @@ object Bench {
       System.gc(); Thread.sleep(150); System.gc(); Thread.sleep(150)
     }
 
-    // Per-query shuffle-write attribution (diagnostic): accumulate stage
-    // shuffle bytes via a listener and snapshot around each timed query.
-    // Listener delivery is async, so numbers are ~approximate at the
-    // boundary — good enough to spot an exchange regression between rounds.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten): Unit
-      }
-    })
+    // Per-gate shuffle-write attribution (diagnostic). Listener delivery is
+    // async, so numbers are ~approximate at the boundary — good enough to
+    // spot an exchange regression between rounds.
+    val jobs = new GateLoop.JobTable
+    spark.sparkContext.addSparkListener(jobs)
 
-    // Cross-query state reclaim (round-7 fix): many gates return frames
-    // materialized through localCheckpoint(true) — their RDD blocks are
-    // pinned in the block manager until the RDD is GC'd AND the async
-    // ContextCleaner runs, which across warm-up + 3 iters × ~100 gates
-    // accumulates enough storage pressure that late/heavy queries degrade
-    // (round-6 recorded d_curation_pipeline 18.9s vs 3.4–4.3s solo).
-    // clearCache() only drops SQL-cached plans, not checkpoint blocks, so
-    // explicitly unpersist every persistent RDD between samples. Safe:
-    // every timed sample rebuilds its plan from scratch, and no gate
-    // relies on cross-query cached state (each builder re-reads parquet).
-    def reclaim(): Unit = {
-      spark.streams.active.foreach { q => try q.stop() catch { case _: Throwable => () } }
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
-      spark.sparkContext.getPersistentRDDs.values.foreach { r =>
-        try r.unpersist(blocking = false) catch { case _: Throwable => () }
-      }
-    }
+    GateLoop.warmUp(spark, sfDir, names)
 
-    // Warm-up pass: never timed, failures ignored (they fail again, timed, below).
-    names.foreach { name =>
-      try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case _: Throwable => () }
-      reclaim()
-    }
-    // Streaming queries (e.g. a warm-up that used a memory sink) must not keep
-    // background threads or state-store maintenance alive into the timed pass.
-    spark.streams.active.foreach { q => try q.stop() catch { case _: Throwable => () } }
-
-    // Each iteration reports (total, plan): `plan` covers everything before
-    // the main action — DataFrame construction, analysis, optimization and
-    // physical planning (forced via executedPlan), plus any driver-side
-    // setup a query's builder performs (e.g. the IVF centroid fetch or a
-    // streaming sync harness). Execution then runs the SAME QueryExecution
-    // (toRdd) — a df.count() here would (a) re-plan the whole tree a second
-    // time and (b) let the optimizer prune every projection a count-star
-    // doesn't need, silently skipping the very expressions being measured.
     // "queries" stays the plain per-query median total for the driver's
-    // existing parse.
-    def timeOnce(name: String): (Double, Double) = {
-      val t0 = System.nanoTime()
-      try {
-        val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
-        qe.executedPlan
-        val t1 = System.nanoTime()
-        qe.toRdd.count()
-        val t2 = System.nanoTime()
-        ((t2 - t0) / 1e9, (t1 - t0) / 1e9)
-      } catch {
-        // failures report -1, never a partial elapsed time posing as a result
-        case _: Throwable => (-1.0, -1.0)
-      } finally {
-        // outside the timed window (t2 already captured): free the sample's
-        // checkpoint blocks before the next sample builds its plan
-        reclaim()
-      }
-    }
+    // existing parse. A failed sample reports -1, never a partial elapsed
+    // time posing as a result.
+    def timeOnce(name: String): Either[Throwable, (Double, Double)] =
+      try Right(GateLoop.sample(spark, sfDir, name))
+      catch { case e: Throwable => Left(e) }
 
     def median(xs: Seq[Double]): Double =
       if (xs.contains(-1.0)) -1.0 else xs.sorted.apply(xs.length / 2)
@@ -146,10 +83,12 @@ object Bench {
 
     val results = names.map { name =>
       settle() // pinned mode: previous gate's garbage never lands in this window
-      val sb0 = shuffleBytes.get()
-      val samples = Seq.fill(iters)(timeOnce(name))
-      Thread.sleep(50) // let async stage-completion events drain (diagnostic only)
-      val sbQ = (shuffleBytes.get() - sb0) / iters
+      val (tries, gateJobs) = jobs.record(drainMs = 50)(Seq.fill(iters)(timeOnce(name)))
+      tries.collectFirst { case Left(e) => e }.foreach { e =>
+        System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+      }
+      val samples = tries.map(_.getOrElse((-1.0, -1.0)))
+      val sbQ = gateJobs.map(_.shuffleWrite).sum / iters
       val med = median(samples.map(_._1))
       val mn = minOf(samples.map(_._1))
       val medPlan = median(samples.map(_._2))

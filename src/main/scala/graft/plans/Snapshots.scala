@@ -202,12 +202,20 @@ object Snapshots {
     *   the splits they rewrite and carry the rest verbatim. */
   def commitFull(s: SparkSession, df: DataFrame, root: String,
       statsCols: Seq[String] = Nil, constraints: Seq[String] = Nil,
-      zorder: Boolean = false, bloomCols: Seq[String] = Nil): Int = {
+      zorder: Boolean = false, bloomCols: Seq[String] = Nil): Int =
+    commitFullAs(s, df, df.schema, root, statsCols, constraints, zorder, bloomCols)
+
+  /** [[commitFull]] recording `schema`, which must be `df`'s schema up to
+    * nullability. */
+  private def commitFullAs(s: SparkSession, df: DataFrame,
+      schema: org.apache.spark.sql.types.StructType, root: String,
+      statsCols: Seq[String], constraints: Seq[String], zorder: Boolean,
+      bloomCols: Seq[String]): Int = {
     validateStatsCols(root, df.schema, statsCols)
     if (zorder) validateZOrder(root, df.schema, statsCols)
     validateBloomCols(root, df.schema, statsCols, bloomCols)
     checkConstraints(root, df, constraints, "commitFull seed data")
-    val contract = VersionFile(df.schema, Nil, None, statsCols.toIndexedSeq,
+    val contract = VersionFile(schema, Nil, None, statsCols.toIndexedSeq,
       constraints = constraints.toIndexedSeq, zorder = zorder,
       bloomCols = bloomCols.toIndexedSeq)
     val v = latestVersion(s, root) + 1
@@ -1832,13 +1840,18 @@ object Snapshots {
     * dir, carrying the store's statsCols AND check constraints forward
     * — after which `vacuum` can drop the long delta chain's dirs.
     * Equivalent to `commitFull(readAt(latest), root, statsCols,
-    * constraints)`, which a caller should not have to hand-roll
-    * (forgetting either would silently drop data skipping or the data
-    * contract at the consolidation point). Returns the new version. */
+    * constraints)` recording the head's own schema, which a caller
+    * should not have to hand-roll (forgetting either would silently drop
+    * data skipping or the data contract at the consolidation point).
+    * Returns the new version. */
   def consolidate(s: SparkSession, root: String): Int = {
     val head = latestVersion(s, root)
     require(head >= 1, s"consolidate on an empty store at $root")
-    commitFullLike(s, readAt(s, root, head), root)
+    val vf = readVersionFile(s, root, head)
+    // the parquet read makes every column nullable; the content is the
+    // head's own rows, so the head's NOT NULL columns still hold
+    commitFullAs(s, readRefs(s, root, vf.schema, vf.refs), vf.schema, root,
+      vf.statsCols, vf.constraints, vf.zorder, vf.bloomCols)
   }
 
   /** [[commitFull]] carrying the HEAD's recorded contract forward —

@@ -26,7 +26,7 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
   * listing races. The production path is untouched: these files exist
   * only to advance watermarks inside the gate harness.
   */
-private[streaming] object SentinelFiles {
+private[graft] object SentinelFiles {
 
   /** One sentinel event row: (event_id, ts, user_id, event_type, value,
     * props) — the raw events schema. */

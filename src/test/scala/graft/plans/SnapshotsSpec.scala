@@ -2550,7 +2550,6 @@ class SnapshotsSpec extends SparkTestBase {
         (1 to 2).map(v => s"exp v$v" -> versionText(root, v, Some("exp")))
       def file(lines: String*) = lines.mkString("\n")
       val narrow = "doc_id BIGINT NOT NULL,split STRING,text STRING,n_tokens BIGINT NOT NULL"
-      val wide = "doc_id BIGINT,split STRING,text STRING,n_tokens BIGINT"
       val contract = file("#check=n_tokens+%3E%3D+0", "#stats=doc_id,n_tokens",
         "#bloom=doc_id")
       val want = Seq(
@@ -2570,30 +2569,30 @@ class SnapshotsSpec extends SparkTestBase {
           "#bf=b\tdoc_id\tAAEoggZAQRg=", "#bf=c\tdoc_id\tIABAAIgAEAE=",
           "a\tv?\t1\t8\t8\t0\t5\t5\t0", "b\tv?\t2\t3\t5\t0\t4\t5\t0",
           "c\tv?\t1\t4\t4\t0\t4\t4\t0"),
-        "v5" -> file(wide, contract, "#bf=a\tdoc_id\tgAEQAAJAAAg=",
+        "v5" -> file(narrow, contract, "#bf=a\tdoc_id\tgAEQAAJAAAg=",
           "#bf=b\tdoc_id\tAAEoggZAQRg=", "#bf=c\tdoc_id\tIABAAIgAEAE=",
           "a\tv?\t1\t8\t8\t0\t5\t5\t0", "b\tv?\t2\t3\t5\t0\t4\t5\t0",
           "c\tv?\t1\t4\t4\t0\t4\t4\t0"),
-        "v6" -> file(wide, contract, "#bf=a\tdoc_id\tgAEQAAJAAAg=",
+        "v6" -> file(narrow, contract, "#bf=a\tdoc_id\tgAEQAAJAAAg=",
           "#bf=b\tdoc_id\tAAEoggZAQRg=", "a\tv?\t1\t8\t8\t0\t5\t5\t0",
           "b\tv?\t2\t3\t5\t0\t4\t5\t0"),
-        "v7" -> file(wide, contract, "#bf=a\tdoc_id\tgAEQAAJAAAg=",
+        "v7" -> file(narrow, contract, "#bf=a\tdoc_id\tgAEQAAJAAAg=",
           "#bf=b\tdoc_id\tAAEoggZAQRg=", "#bf=c\tdoc_id\tIABAAIgAEAE=",
           "a\tv?\t1\t8\t8\t0\t5\t5\t0", "b\tv?\t2\t3\t5\t0\t4\t5\t0",
           "c\tv?\t1\t4\t4\t0\t4\t4\t0"),
-        "v8" -> file(wide, contract, "#bf=a\tdoc_id\tgAEQAAJAAAg=",
+        "v8" -> file(narrow, contract, "#bf=a\tdoc_id\tgAEQAAJAAAg=",
           "#bf=b\tdoc_id\tEAMoggZAYZw=", "#bf=c\tdoc_id\tIABAAIgAEAE=",
           "a\tv?\t1\t8\t8\t0\t5\t5\t0", "b\tv?\t3\t3\t6\t0\t3\t5\t0",
           "c\tv?\t1\t4\t4\t0\t4\t4\t0"),
-        "v9" -> file(wide, contract, "#bf=a\tdoc_id\tgAEQAAJAAAg=",
+        "v9" -> file(narrow, contract, "#bf=a\tdoc_id\tgAEQAAJAAAg=",
           "#bf=b\tdoc_id\tEAMoggZAYZw=", "#bf=c\tdoc_id\tIADAD4gAEAE=",
           "a\tv?\t1\t8\t8\t0\t5\t5\t0", "b\tv?\t3\t3\t6\t0\t3\t5\t0",
           "c\tv?\t2\t4\t7\t0\t4\t5\t0"),
-        "exp v1" -> file(wide, "#fork=7", contract, "#bf=a\tdoc_id\tgAEQAAJAAAg=",
+        "exp v1" -> file(narrow, "#fork=7", contract, "#bf=a\tdoc_id\tgAEQAAJAAAg=",
           "#bf=b\tdoc_id\tAAEoggZAQRg=", "#bf=c\tdoc_id\tIABAAIgAEAE=",
           "a\tv?\t1\t8\t8\t0\t5\t5\t0", "b\tv?\t2\t3\t5\t0\t4\t5\t0",
           "c\tv?\t1\t4\t4\t0\t4\t4\t0"),
-        "exp v2" -> file(wide, contract, "#bf=a\tdoc_id\tgAEQAAJAAAg=",
+        "exp v2" -> file(narrow, contract, "#bf=a\tdoc_id\tgAEQAAJAAAg=",
           "#bf=b\tdoc_id\tEAMoggZAYZw=", "#bf=c\tdoc_id\tIABAAIgAEAE=",
           "a\tv?\t1\t8\t8\t0\t5\t5\t0", "b\tb-exp-v?\t3\t3\t6\t0\t3\t5\t0",
           "c\tv?\t1\t4\t4\t0\t4\t4\t0")
