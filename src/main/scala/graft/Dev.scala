@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
@@ -46,26 +47,30 @@ object Dev {
   /** A per-JOB cost table of one gate — duration, description/call-site,
     * task count, input bytes, shuffle read/write — so a multi-action gate
     * (a lifecycle commit chain, a streaming sync harness) can be
-    * attributed job by job instead of guessed at from its total. One
-    * untimed warm-up, then one sample as [[Bench]] times it. */
+    * attributed job by job instead of guessed at from its total. The
+    * header also counts the Janino compiles of the sample (the
+    * declaration/compile layer). One untimed warm-up, then one sample as
+    * [[Bench]] times it. Printed on stderr. */
   private def profile(spark: SparkSession, sfDir: String, gate: String): Unit = {
     GateLoop.requireGates(Seq(gate), "graft.Dev profile")
     GateLoop.warmUp(spark, sfDir, Seq(gate))
     val table = new GateLoop.JobTable
     spark.sparkContext.addSparkListener(table)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val ((total, plan), jobs) =
       try table.record(drainMs = 500)(GateLoop.sample(spark, sfDir, gate))
       finally spark.sparkContext.removeSparkListener(table)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
     def mb(b: Long) = f"${b / 1e6}%9.1f"
-    System.err.println(f"[profile] $gate total=$total%.3fs " +
-      f"(plan=$plan%.3fs exec=${total - plan}%.3fs) jobs=${jobs.size}")
-    System.err.println("[profile]   ms  tasks stages   inputMB  shufRdMB  shufWrMB  description")
+    Console.err.println(f"[profile] $gate total=$total%.3fs " +
+      f"(plan=$plan%.3fs exec=${total - plan}%.3fs) jobs=${jobs.size} compiles=$compiles")
+    Console.err.println("[profile]   ms  tasks stages   inputMB  shufRdMB  shufWrMB  description")
     jobs.foreach { r =>
-      System.err.println(f"[profile] ${r.ms}%5d ${r.tasks}%6d ${r.stages}%6d " +
+      Console.err.println(f"[profile] ${r.ms}%5d ${r.tasks}%6d ${r.stages}%6d " +
         f"${mb(r.inputBytes)} ${mb(r.shuffleRead)} ${mb(r.shuffleWrite)}  ${r.desc.take(110)}")
     }
     val acct = jobs.map(_.ms).filter(_ > 0).sum
-    System.err.println(f"[profile] job-accounted=${acct / 1e3}%.3fs of " +
+    Console.err.println(f"[profile] job-accounted=${acct / 1e3}%.3fs of " +
       f"$total%.3fs (gap = driver-side/planning/fs)")
   }
 

@@ -71,15 +71,16 @@ private[graft] object GateLoop {
     * (e.g. the IVF centroid fetch or a streaming sync harness). Execution
     * then runs the SAME QueryExecution (toRdd): a df.count() would re-plan
     * the tree and let the optimizer prune every projection a count-star
-    * doesn't need, skipping the very expressions being measured. The
-    * sample's state is reclaimed after its clock stops. */
+    * doesn't need, skipping the very expressions being measured; its jobs
+    * are labelled `gate <name>: execute`. The sample's state is reclaimed
+    * after its clock stops. */
   def sample(spark: SparkSession, sfDir: String, name: String): (Double, Double) =
     try {
       val t0 = System.nanoTime()
       val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
       qe.executedPlan
       val t1 = System.nanoTime()
-      qe.toRdd.count()
+      graft.core.Labeled(spark, s"gate $name: execute")(qe.toRdd.count())
       val t2 = System.nanoTime()
       ((t2 - t0) / 1e9, (t1 - t0) / 1e9)
     } finally reclaim(spark)

@@ -1,8 +1,9 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, Literal, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, EmptyBlock, ExprCode, FalseLiteral, JavaCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -691,6 +692,28 @@ case class BloomMightContain(child: Expression, bloom: Array[Byte], k: Int)
 
   override protected def withNewChildInternal(newChild: Expression): BloomMightContain =
     copy(child = newChild)
+}
+
+/** A non-null primitive value (numeric, date, timestamp) that evaluates
+  * as its [[Literal]] does but is not inlined into generated code: the
+  * code reads it once from the plan's references into a primitive field,
+  * so two plans that differ only in such values generate the same source
+  * and share one compiled class. Not foldable, so neither a rule nor an
+  * expression's code generation evaluates it into an inlined constant;
+  * it renders as the literal, so explain text is unchanged.
+  * [[graft.compile.FilterParams]] places it. */
+case class Param(value: Any, dataType: DataType) extends LeafExpression {
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any = value
+  override def toString: String = Literal(value, dataType).toString
+  override def sql: String = Literal(value, dataType).sql
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val javaType = CodeGenerator.javaType(dataType)
+    val ref = ctx.addReferenceObj("param", value, CodeGenerator.boxedType(dataType))
+    val field = ctx.addMutableState(javaType, "param", v => s"$v = $ref.${javaType}Value();")
+    ev.copy(code = EmptyBlock, isNull = FalseLiteral, value = JavaCode.global(field, dataType))
+  }
 }
 
 /** Minimal input-type validation shared by the custom expressions (stand-in

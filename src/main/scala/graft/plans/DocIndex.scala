@@ -255,8 +255,10 @@ object DocIndex {
     try {
       // bounded collect: at most min(#ids, width) bucket names — one job,
       // no exchange (Snapshots.distinctStringsOneJob, r17)
-      val bucketNames = Snapshots.distinctStringsOneJob(
-        probed.select(bucketCol(width, col("doc_id")).as("b"))).toArray
+      val bucketNames = graft.core.Labeled(s, "graft docindex resolveSplits: probed buckets") {
+        Snapshots.distinctStringsOneJob(
+          probed.select(bucketCol(width, col("doc_id")).as("b"))).toArray
+      }
       idxFrame
         .filter(col("split").isin(bucketNames.toIndexedSeq: _*))
         .join(probed, "doc_id")

@@ -1272,7 +1272,9 @@ trait LlmIngestCurationOps { this: LlmOps.type =>
           sum(col("doc_id")).cast("long").as("id_sum"))
         .select(lit("index").as("side"), col("split"),
           col("n_docs"), col("id_sum"))
-      corpusSide.unionAll(indexSide).graftCheckpoint()
+      graft.core.Labeled(s, "d_corpus_docindex: corpus and index split counts") {
+        corpusSide.unionAll(indexSide).graftCheckpoint()
+      }
     } finally {
       CorpusExport.deleteRecursively(root.toFile)
       CorpusExport.deleteRecursively(idx.toFile)

@@ -34,6 +34,18 @@ class DevSpec extends SparkTestBase {
     assert(text.contains("== Physical Plan =="), text)
   }
 
+  test("graft.Dev profile prints the gate's header with its job and compile counts, then one row per job") {
+    val err = new java.io.ByteArrayOutputStream()
+    Console.withErr(err)(Dev.run(spark, Seq("profile", "c1_projection"), sf))
+    val lines = err.toString("UTF-8").linesIterator.filter(_.startsWith("[profile]")).toSeq
+    val header = """\[profile\] c1_projection total=\S+s \(plan=\S+s exec=\S+s\) jobs=(\d+) compiles=(\d+)""".r
+    lines.headOption match {
+      case Some(header(jobs, _)) =>
+        assert(lines.size === jobs.toInt + 3, lines.mkString("\n")) // header, column names, total
+      case other => fail(s"no profile header: $other")
+    }
+  }
+
   test("graft.Verify with a gate list dumps exactly those gates and their oracle SQL") {
     val out = Files.createTempDirectory("graft_verify_subset")
     try {

@@ -87,6 +87,7 @@ trait SparkTestBase extends AnyFunSuite {
 object SparkTestBase {
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
+      .withExtensions(graft.compile.FilterParams.extension)
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
