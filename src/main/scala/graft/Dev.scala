@@ -93,7 +93,8 @@ object Dev {
     * `readAtWhere` over a scratch N-split store — the internal store-read
     * plans `explain` cannot surface. The interesting field is the scan's
     * `Location`: how many `split=` paths the read LISTED. Then the commit
-    * WRITE's distribution plan under each `Distribute` mode. */
+    * write distribution plan of each mode in use: store commits' and
+    * exports'. */
   private def explainStore(spark: SparkSession, nSplits: Int): Unit = {
     import spark.implicits._
     val root = Files.createTempDirectory("graft_explain_store")
@@ -114,11 +115,11 @@ object Dev {
       println(s"inputFiles: ${pruned.inputFiles.length} file(s)")
       pruned.inputFiles.sorted.foreach(f => println(s"  $f"))
       val delta = rows.take(10).toDF("doc_id", "split", "text", "n_tokens")
-      Seq("rebalance", "hash", "none").foreach { mode =>
-        println(s"===== commit-write distribution plan: mode=$mode =====")
-        println(graft.core.Distribute
-          .forWrite(delta, "split", scope = "", scopeDefault = mode)
-          .queryExecution.explainString(FormattedMode))
+      Seq("store commits: hashPinned" -> graft.core.Distribute.hashPinned(delta, "split"),
+        "exports: rebalance" -> graft.core.Distribute.rebalance(delta, "split")
+      ).foreach { case (mode, df) =>
+        println(s"===== write distribution plan, $mode =====")
+        println(df.queryExecution.explainString(FormattedMode))
       }
     } finally graft.plans.CorpusExport.deleteRecursively(root.toFile)
   }

@@ -9,59 +9,34 @@ import org.apache.spark.sql.functions.col
   * 64-bucket store that is ~2,000 tiny files per commit, and at cluster
   * scale it is the classic small-files explosion (object-store listing and
   * open cost compound across every later read) plus a same-key row-group
-  * interleave that dilutes any in-partition clustering.
+  * interleave that dilutes any in-partition clustering. Keying an
+  * exchange by the partition column bounds the files at ~#k. Cost: one
+  * exchange of the DATA BEING WRITTEN (a commit delta, an export — never
+  * a standing corpus).
   *
-  * `REBALANCE(k)` keys the exchange by the partition column and lets AQE
-  * size the output: small keys coalesce into shared tasks (few files), a
-  * skewed key fans out over several tasks of advisory-partition size
-  * (write parallelism preserved) — the Iceberg
-  * `write.distribution-mode=hash` shape, scale-adaptive by construction.
-  * Cost: one exchange of the DATA BEING WRITTEN (a commit delta, an index
-  * batch — never a standing corpus).
-  *
-  * Knob `spark.graft.write.distribution`:
-  *   - `rebalance` (default) — AQE-sized per-key writers;
-  *   - `hash` — plain `repartition(k)`: fixed per-key writers, no AQE
-  *     dependence (one task per key hash; beware giant keys);
-  *   - `none` — the shuffle-free layout, for callers whose input is
-  *     already clustered by the partition key.
-  *
-  * PER-SCOPE OVERRIDE (r17, VERDICT r16 deferred item 5): one session
-  * knob cannot fit every write family — the 64-bucket doc index repays
-  * the exchange while a 16-cell IVF ingest measurably does not (r16's
-  * pinned A/B) — so each call site names its write family (`store`,
-  * `ivf`, `export`) and `spark.graft.write.distribution.<scope>` beats
-  * the global knob for that family alone. Resolution order:
-  * scoped conf → global conf → the call site's default.
+  * Each write family uses the mode its pinned A/Bs measured (r16, r17):
+  * store commits [[hashPinned]], exports [[rebalance]]. IVF index writes
+  * add no exchange: their input is a narrow projection over the ingest
+  * scan, and r16's A/B measured the exchange as a net loss at a
+  * model-bounded cell count.
   */
 object Distribute {
 
-  val Key = "spark.graft.write.distribution"
+  /** Plain hash exchange on `partCol`, pinned to the session's
+    * shuffle width. A bare `repartition(col)` is AQE-coalescable
+    * (ShuffleOrigin REPARTITION_BY_COL), so on a small commit delta it
+    * collapsed to ONE task writing every split dir serially (r17). The
+    * explicit width keeps per-split writers parallel: each split still
+    * lands wholly in one task (≤1 file per split), and the width is the
+    * deployment's own parallelism setting, not a constant. */
+  def hashPinned(df: DataFrame, partCol: String): DataFrame =
+    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, col(partCol))
 
-  def forWrite(df: DataFrame, partCol: String): DataFrame =
-    forWrite(df, partCol, scope = "", scopeDefault = "rebalance")
-
-  def forWrite(df: DataFrame, partCol: String, scope: String,
-      scopeDefault: String): DataFrame = {
-    val conf = df.sparkSession.conf
-    val mode = (if (scope.nonEmpty) conf.getOption(s"$Key.$scope") else None)
-      .orElse(conf.getOption(Key))
-      .getOrElse(scopeDefault)
-    mode match {
-      case "none" => df
-      // EXPLICIT width (r17): a bare repartition(col) is AQE-coalescable
-      // (ShuffleOrigin REPARTITION_BY_COL), so on a small commit delta it
-      // collapsed to ONE task writing every split dir serially — exactly
-      // the "no AQE dependence" this mode documents against. Pinning the
-      // session's shuffle width keeps per-split writers parallel: each
-      // split still lands wholly in one task (≤1 file per split), and the
-      // width is the deployment's own parallelism knob, not a constant.
-      case "hash" => df.repartition(
-        df.sparkSession.sessionState.conf.numShufflePartitions, col(partCol))
-      case "rebalance" => df.hint("rebalance", col(partCol))
-      case other => throw GraftAnalysisException(Seq(
-        s"unknown $Key distribution '$other' " +
-          "(expected 'rebalance', 'hash' or 'none')"))
-    }
-  }
+  /** `REBALANCE(partCol)`: AQE sizes the output, so small keys coalesce
+    * into shared tasks (few files) and a skewed key fans out over several
+    * tasks of advisory-partition size — the Iceberg
+    * `write.distribution-mode=hash` shape, scale-adaptive by
+    * construction. */
+  def rebalance(df: DataFrame, partCol: String): DataFrame =
+    df.hint("rebalance", col(partCol))
 }

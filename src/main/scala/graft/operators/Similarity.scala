@@ -277,18 +277,13 @@ object Similarity {
       if (refineIters > 0) kmeansCentroids(df, idCol, vecCol, nCells, refineIters)
       else ivfCentroids(df, idCol, vecCol, nCells)
     val assigned = withIvfCell(df, vecCol, centroids)
-    // Distribution scope `ivf`, default `none` (r17): the index write's
-    // input is a narrow assignment projection over the ingest scan (no
-    // upstream shuffle), so its file count is bounded by scan tasks ×
-    // cells — and r16's pinned A/B measured the rebalance exchange
-    // NEGATIVE on this family at gate scale (Σ 30.2 s vs 29.8 s none;
-    // the fixed AQE-stage cost never repays at a model-bounded cell
-    // count). A many-celled deployment whose ingest fans wide sets
-    // `spark.graft.write.distribution.ivf=rebalance` (or the global
-    // knob) to bound files at ~#cells — see [[graft.core.Distribute]].
-    graft.core.Distribute.forWrite(
-        storageProjected(assigned, df.columns.toSeq, vecCol, quantize, pq),
-        "cell", scope = "ivf", scopeDefault = "none")
+    // No write exchange (r17): the index write's input is a narrow
+    // assignment projection over the ingest scan (no upstream shuffle),
+    // so its file count is bounded by scan tasks × cells — and r16's
+    // pinned A/B measured the rebalance exchange NEGATIVE on this family
+    // at gate scale (Σ 30.2 s vs 29.8 s none; the fixed AQE-stage cost
+    // never repays at a model-bounded cell count).
+    storageProjected(assigned, df.columns.toSeq, vecCol, quantize, pq)
       .write.mode("overwrite").partitionBy("cell").parquet(path)
     centroids
   }
@@ -342,10 +337,8 @@ object Similarity {
     else
       require(pq.isEmpty, s"index at $path is not PQ-coded; drop the codebook")
     val assigned = withIvfCell(df, vecCol, centroids)
-    // scope `ivf`, default `none` — see [[writeIvfIndex]]'s rationale
-    graft.core.Distribute.forWrite(
-        storageProjected(assigned, df.columns.toSeq, vecCol, quantized, pq),
-        "cell", scope = "ivf", scopeDefault = "none")
+    // no write exchange — see [[writeIvfIndex]]'s rationale
+    storageProjected(assigned, df.columns.toSeq, vecCol, quantized, pq)
       .write.mode("append").partitionBy("cell").parquet(path)
   }
 
@@ -392,10 +385,8 @@ object Similarity {
     val staging = new Path(root, s"_graft_ingest_staging_$batchTag")
     fs.delete(staging, true): Unit
     val assigned = withIvfCell(df, vecCol, centroids)
-    // scope `ivf`, default `none` — see [[writeIvfIndex]]'s rationale
-    graft.core.Distribute.forWrite(
-        storageProjected(assigned, df.columns.toSeq, vecCol, quantized, pq),
-        "cell", scope = "ivf", scopeDefault = "none")
+    // no write exchange — see [[writeIvfIndex]]'s rationale
+    storageProjected(assigned, df.columns.toSeq, vecCol, quantized, pq)
       .write.mode("overwrite").partitionBy("cell").parquet(staging.toString)
     val cellDirs = Option(fs.listStatus(staging)).getOrElse(Array.empty)
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
@@ -519,11 +510,9 @@ object Similarity {
     val after = survivors.count()
     val staging = new Path(root, "_graft_compact_staging")
     fs.delete(staging, true): Unit
-    // scope `ivf`, default `none` — the compaction rewrite is bounded by
-    // the affected cells (compaction-cadence-sized, like the append batch)
-    graft.core.Distribute.forWrite(survivors, "cell",
-        scope = "ivf", scopeDefault = "none")
-      .write.mode("overwrite").partitionBy("cell").parquet(staging.toString)
+    // no write exchange — the compaction rewrite is bounded by the
+    // affected cells (compaction-cadence-sized, like the append batch)
+    survivors.write.mode("overwrite").partitionBy("cell").parquet(staging.toString)
 
     affected.foreach { c =>
       val live = new Path(root, s"cell=$c")

@@ -47,8 +47,7 @@ object CorpusExport {
       s: SparkSession, full: DataFrame, outPath: String): DataFrame = {
     graft.core.Labeled(s, "graft export: corpus + manifest write") {
       Channels.multiSink(full)(Seq[DataFrame => Unit](
-        df => graft.core.Distribute.forWrite(df, "split",
-          scope = "export", scopeDefault = "rebalance")
+        df => graft.core.Distribute.rebalance(df, "split")
           .write.mode("overwrite").partitionBy("split")
           .parquet(s"$outPath/corpus"),
         df => manifestOf(df).coalesce(1)
@@ -144,8 +143,7 @@ object CorpusExport {
       val removed = diff.filter(col("status") === "removed").select(col("doc_id"))
 
       graft.core.Labeled(s, "graft export: delta write") {
-        graft.core.Distribute.forWrite(full.join(changed, "doc_id"), "split",
-          scope = "export", scopeDefault = "rebalance")
+        graft.core.Distribute.rebalance(full.join(changed, "doc_id"), "split")
           .write.mode("overwrite").partitionBy("split")
           .parquet(s"$outPath/delta")
       }
@@ -229,11 +227,11 @@ object CorpusExport {
         if (affected.nonEmpty) {
           val affectedCol = affected.toSeq.map(lit)
           graft.core.Labeled(s, "graft applyDelta: staged rewrite") {
-            graft.core.Distribute.forWrite(
+            graft.core.Distribute.rebalance(
                 base.filter(col("split").isin(affectedCol: _*))
                   .join(gone, Seq("doc_id"), "left_anti")
                   .unionByName(delta.filter(col("split").isin(affectedCol: _*))),
-                "split", scope = "export", scopeDefault = "rebalance")
+                "split")
               .write.mode("overwrite").partitionBy("split")
               .parquet(stagingRoot.getPath)
           }

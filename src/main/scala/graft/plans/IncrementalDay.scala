@@ -99,13 +99,13 @@ object IncrementalDay {
       }
 
       // 4. split-partitioned delta export of the curated day
-      graft.core.Distribute.forWrite(
+      graft.core.Distribute.rebalance(
           curated
             .join(batch.select(col("doc_id"), col("text")), "doc_id")
             .withColumn("split", splitRule(col("doc_id")))
             .select(col("doc_id"), col("lang"), col("n_tokens"),
               col("quality"), col("text"), col("split")),
-          "split", scope = "export", scopeDefault = "rebalance")
+          "split")
         .write.mode("overwrite").partitionBy("split").parquet(deltaPath)
 
       // 5. idempotent ANN append of the curated day's vectors. A FALSE

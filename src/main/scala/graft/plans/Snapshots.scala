@@ -279,7 +279,7 @@ object Snapshots {
     * corpus). The z-order lane is untouched: its range exchange already
     * distributes by (split, zval).
     *
-    * Scope default `hash` (r17, measured): under `rebalance`, AQE
+    * Pinned-width hash (r17, measured): under `rebalance`, AQE
     * coalesces a small delta's exchange to ONE task which then creates
     * every split dir's file serially (~1 s/commit on the 64-bucket doc
     * index — AQE's byte-based sizing cannot see per-file creation cost);
@@ -287,12 +287,9 @@ object Snapshots {
     * Interleaved 3-arm pinned A/B (r17): lifecycle family Σ min 26.8 s
     * (hash) vs 30.3 (rebalance) vs 32.5 (none); docindex 6.44 / 7.93 /
     * 9.25. At scale this is Iceberg's write.distribution-mode=hash shape
-    * with width = the deployment's shuffle-partitions knob; a deployment
-    * with giant-split skew sets `spark.graft.write.distribution.store=
-    * rebalance` to let AQE fan a hot split across writers. */
+    * with width = the deployment's shuffle-partitions setting. */
   private def distribute(df: DataFrame): DataFrame =
-    graft.core.Distribute.forWrite(df, "split",
-      scope = "store", scopeDefault = "hash")
+    graft.core.Distribute.hashPinned(df, "split")
 
   /** In-split clustering of a frame about to be written `partitionBy
     * ("split")`: lexicographic by the stats columns (rides the writer's

@@ -1,11 +1,17 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.concurrent.ConcurrentHashMap
+
 import graft.core.Checkpoint.Ops
-import graft.queries.Exact.{dec2, sqlSumMoney}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.functions.GraftFunctions
+import graft.plans.{CorpusExport, Snapshots}
+import graft.queries.Exact.dec2
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Structured Streaming pipelines over the events table — the streaming
   * capability the reference lacks entirely (SURVEY §2.2: no streaming
@@ -17,6 +23,17 @@ import org.apache.spark.sql.types._
   * (same 30-minute gap rule) — one declaration, two execution modes, which
   * is exactly Spark's promise at 100 TB: the backfill and the live pipeline
   * share operators.
+  *
+  * Each operator has a synchronous `*Sync` driver for its `s_stream_*`
+  * gate. Every driver runs on one skeleton, [[syncGate]]: an isolated
+  * harness session, one scratch dir (checkpoint, staged inputs,
+  * throwaway sinks), start/drain/stop, an eager `graftCheckpoint` that
+  * detaches the result, and a `finally` that releases whatever the gate
+  * registered and deletes the scratch dir. Four shapes sit on top of it:
+  * the memory sink ([[Gate.toMemory]]), staged input plus sentinel
+  * batches ([[Gate.stagedEvents]]), a standing artifact streamed against
+  * through `foreachBatch` ([[standingIngestSync]]), and a seeded
+  * split-keyed store ([[storeGate]]).
   */
 object EventPipeline {
 
@@ -59,55 +76,115 @@ object EventPipeline {
       .withColumn("ts", col("ts").cast("timestamp"))
   }
 
+  /** File-source stream over the sf dir's single documents file. */
+  private def docStream(s: SparkSession, dir: String): DataFrame =
+    s.readStream.schema(docSchema)
+      .option("pathGlobFilter", "documents.parquet")
+      .parquet(dir)
+
   /** Synchronous batch-equivalent run of [[windowedCounts]] for the driver
     * gate: streams the sf dir's events file through the memory sink and
-    * returns the final table — hash-matches the batch eventsWindow oracle.
-    *
-    * Leak-free under repeated invocation (benchmark loops): the result is
-    * detached from the memory sink via an eager graftCheckpoint, the sink's
-    * temp view is dropped, and the streaming checkpoint directory is
-    * deleted — otherwise every run would pin its full result in driver
-    * memory and leave state-store providers behind. */
-  def windowedCountsSync(spark: SparkSession, dir: String): DataFrame = {
-    val s = harnessSession(spark)
-    val name = s"graft_stream_win_${System.nanoTime()}"
-    runToTable(s, name) { ckpt =>
-      windowedCounts(
-          readEventStream(s, dir, globFilter = Some("events.parquet")))
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .option("checkpointLocation", ckpt.toString).start()
-    }()
-  }
+    * returns the final table — hash-matches the batch eventsWindow oracle. */
+  def windowedCountsSync(spark: SparkSession, dir: String): DataFrame =
+    syncGate(spark, "win") { g =>
+      g.toMemory(windowedCounts(
+        readEventStream(g.s, dir, globFilter = Some("events.parquet"))), "complete")
+    }
 
-  /** The memory-sink gate skeleton: start the query against a scratch
-    * checkpoint dir, drain it, detach the sink table, clean up. The
-    * scratch dir is deleted in a FINALLY — a gate that dies mid-stream
-    * must release its tmpfs bytes AND its [[liveShmDirs]] reserve, or
-    * every later gate in the process over-reserves and falls back to
-    * disk tmp for nothing. */
-  private def runToTable(
-      s: SparkSession, name: String)(
-      start: java.nio.file.Path => org.apache.spark.sql.streaming.StreamingQuery)(
-      finish: DataFrame => DataFrame = identity): DataFrame = {
-    val ckpt = harnessTmpDir("graft_stream_ckpt")
-    try {
-      val q = start(ckpt)
-      try q.processAllAvailable() finally q.stop()
-      finish(s.table(name)).graftCheckpoint()
-    } finally {
-      // in the finally, not the success path: a finish()/checkpoint
-      // failure must not leak the memory-sink view (and its pinned rows)
-      // into the long-lived harness session
-      dropViewQuietly(s, name)
-      deleteRecursively(ckpt.toFile)
+  /** One sync gate's run: its isolated harness session `s` and one
+    * scratch dir, whose subpaths ([[path]]) hold the streaming checkpoint,
+    * staged inputs and throwaway sinks. What a gate registers with
+    * [[onExit]] is released when the gate ends, however it ends. */
+  private final class Gate(val s: SparkSession, root: Path) {
+    private var exits = List.empty[() => Unit]
+
+    def path(name: String): String = root.resolve(name).toString
+
+    /** Runs `release` at the gate's end, after its result is detached;
+      * a failing release never masks the exception already unwinding. */
+    def onExit(release: => Unit): Unit = exits ::= (() => release)
+
+    def release(): Unit = exits.foreach { f =>
+      try f() catch { case scala.util.control.NonFatal(_) => () }
+    }
+
+    /** Starts `w` on the scratch checkpoint and drains it; each step then
+      * lands more input (a sentinel file, a store commit) and is drained
+      * in turn. The query stops in a finally. */
+    def drain(w: DataStreamWriter[Row], steps: (() => Unit)*): Unit = {
+      val q = w.option("checkpointLocation", path("ckpt")).start()
+      try {
+        q.processAllAvailable()
+        steps.foreach { step => step(); q.processAllAvailable() }
+      } finally q.stop()
+    }
+
+    /** [[drain]]s `df` through a memory sink in output `mode` and returns
+      * the sink's table. The table's view is dropped at exit, so no run
+      * pins its rows in the long-lived harness session. */
+    def toMemory(df: DataFrame, mode: String, steps: (() => Unit)*): DataFrame = {
+      val name = s"graft_stream_${System.nanoTime()}"
+      onExit(s.catalog.dropTempView(name): Unit)
+      drain(df.writeStream.outputMode(mode).format("memory").queryName(name), steps: _*)
+      s.table(name)
+    }
+
+    /** `df` persisted for this run only (a stream's static side). */
+    def persisted(df: DataFrame): DataFrame = {
+      onExit(df.unpersist(false): Unit)
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+    }
+
+    /** Stages the sf dir's events file as the first file of a polled
+      * input dir `in` and returns the event stream over that dir, plus one
+      * step per entry of `offsetsSec`. Step n lands the sentinel rows
+      * `sentinel(n, maxTs + offset)`, where maxTs is the staged file's
+      * max(ts), to advance the event-time watermark. The rows are
+      * driver-written ([[SentinelFiles]]: no Spark job), staged outside
+      * the polled dir and moved in atomically, so a listing never sees a
+      * half-written parquet (a footerless file kills the query). */
+    def stagedEvents(dir: String, offsetsSec: Seq[Long])(
+        sentinel: (Int, java.time.LocalDateTime) => Seq[SentinelFiles.EventRow])
+        : (DataFrame, Seq[() => Unit]) = {
+      val inDir = Files.createDirectories(root.resolve("in"))
+      val first = inDir.resolve("part-a.parquet")
+      Files.copy(Paths.get(dir, "events.parquet"), first)
+      // from the footer statistics when present (no Spark job), else the
+      // aggregate: the same value for an uncorrupted file
+      val maxTs = SentinelFiles.maxTsFromFooter(first).getOrElse(
+        s.read.schema(rawSchema).parquet(first.toString)
+          .agg(max(col("ts"))).head().getAs[java.time.LocalDateTime](0))
+      val steps = offsetsSec.zipWithIndex.map { case (offset, i) => () => {
+        val staged = root.resolve(s"part-z${i + 1}.parquet.staged")
+        SentinelFiles.writeEvents(staged, sentinel(i + 1, maxTs.plusSeconds(offset)))
+        Files.move(staged, inDir.resolve(s"part-z${i + 1}.parquet"),
+          StandardCopyOption.ATOMIC_MOVE): Unit
+      }}
+      (readEventStream(s, inDir.toString), steps)
     }
   }
 
-  /** Best-effort memory-sink view drop for the gate harnesses' cleanup
-    * paths — never masks the exception already unwinding through them. */
-  private def dropViewQuietly(s: SparkSession, name: String): Unit =
-    try s.catalog.dropTempView(name): Unit
-    catch { case scala.util.control.NonFatal(_) => () }
+  /** The skeleton every `*Sync` gate driver runs on: `body` gets a
+    * [[Gate]] (harness session plus a scratch dir named
+    * `graft_stream_<name>…`), its result is detached by an eager
+    * `graftCheckpoint`, and then, in a finally, the gate's releases run
+    * and the scratch dir is deleted. The delete is in the finally because
+    * a gate that dies mid-stream must still release its tmpfs bytes and
+    * its [[liveShmDirs]] reserve, or every later gate in the process
+    * over-reserves and falls back to disk for nothing. Repeated runs
+    * (bench loops) therefore leave no sink views, persisted static sides,
+    * state-store checkpoints or scratch files behind. */
+  private def syncGate(spark: SparkSession, name: String)(
+      body: Gate => DataFrame): DataFrame = {
+    val s = harnessSession(spark)
+    val root = harnessTmpDir(s"graft_stream_$name")
+    val g = new Gate(s, root)
+    try body(g).graftCheckpoint()
+    finally {
+      g.release()
+      deleteScratch(root)
+    }
+  }
 
   /** Isolated child session for the sync gate harnesses: shares the
     * SparkContext but not session state, so the small shuffle-partition
@@ -154,49 +231,38 @@ object EventPipeline {
     * disk-backed /tmp that metadata I/O dominates the tiny gates' cost.
     * Everything written here is deleted by the harness before returning;
     * a REAL deployment's checkpoint must of course live on durable
-    * storage — this root is only for the ephemeral gate runs. */
-  /** Budget reserved on the tmpfs for each LIVE harness dir: the usable-
+    * storage — this root is only for the ephemeral gate runs.
+    *
+    * Budget reserved on the tmpfs for each LIVE harness dir: the usable-
     * space guard below is taken when a dir is created EMPTY, but the dir
     * fills afterwards — so concurrent gates (a parallel suite run) must
     * each reserve their expected growth up front or they collectively
     * exhaust the tmpfs mid-query. 512 MiB is ~10× the largest observed
     * gate footprint (staged sf0.1 events parquet + state checkpoints). */
   private val ShmDirBudget = 512L << 20
-  private val liveShmDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
+  private val liveShmDirs = ConcurrentHashMap.newKeySet[Path]()
 
-  private def harnessTmpDir(prefix: String): java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
+  private def harnessTmpDir(prefix: String): Path = {
+    val shm = Paths.get("/dev/shm")
     // capacity guard: a default Docker /dev/shm is 64 MiB — writable but
     // far too small for staged parquet + state checkpoints; only prefer
     // the tmpfs when it has real headroom AFTER every live harness dir's
     // reserved growth, else fall back to the default temp dir
     val reserve = (2L << 30) + liveShmDirs.size().toLong * ShmDirBudget
-    val shmUsable = java.nio.file.Files.isDirectory(shm) &&
-      java.nio.file.Files.isWritable(shm) &&
+    val shmUsable = Files.isDirectory(shm) && Files.isWritable(shm) &&
       shm.toFile.getUsableSpace >= reserve
     if (shmUsable) {
-      val p = java.nio.file.Files.createTempDirectory(shm, prefix)
+      val p = Files.createTempDirectory(shm, prefix)
       liveShmDirs.add(p): Unit
       p
-    } else java.nio.file.Files.createTempDirectory(prefix)
+    } else Files.createTempDirectory(prefix)
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    liveShmDirs.remove(f.toPath.toAbsolutePath): Unit // releases its reserve
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
+  /** Releases a scratch dir's tmpfs reserve, then deletes it. */
+  private def deleteScratch(dir: Path): Unit = {
+    liveShmDirs.remove(dir): Unit
+    CorpusExport.deleteRecursively(dir.toFile)
   }
-
-  /** max(ts) of the harness's staged events file, to aim the watermark
-    * sentinels: from the parquet footer statistics when present (driver
-    * work, no Spark job), else the Spark aggregate — same value either
-    * way, the footer max IS the column max for an uncorrupted file. */
-  private def stagedMaxTs(
-      hs: SparkSession, staged: java.nio.file.Path): java.time.LocalDateTime =
-    SentinelFiles.maxTsFromFooter(staged).getOrElse(
-      hs.read.schema(rawSchema).parquet(staged.toString)
-        .agg(max(col("ts"))).head().getAs[java.time.LocalDateTime](0))
 
   /** Synchronous batch-equivalent run of [[sessionize]] for the driver
     * gate: stages the sf dir's events file as a file stream, then advances
@@ -205,7 +271,7 @@ object EventPipeline {
     * because the watermark for batch N derives from data seen through
     * batch N−1). Every open session flushes on its event-time timeout, so
     * the streamed result EQUALS the batch operator's sessions — not merely
-    * a closed-session subset. Leak-free like [[windowedCountsSync]]. */
+    * a closed-session subset. */
   def sessionizeSync(spark: SparkSession, dir: String): DataFrame =
     sessionSyncOver(spark, dir)(hs => in => sessionize(hs, in).toDF())
 
@@ -243,41 +309,13 @@ object EventPipeline {
     sessionSyncOver(spark, dir)(_ => in => sessionWindow(in))
 
   private def sessionSyncOver(spark: SparkSession, dir: String)(
-      op: SparkSession => DataFrame => DataFrame): DataFrame = {
-    val hs = harnessSession(spark)
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = harnessTmpDir("graft_stream_sess")
-    try {
-      val inDir = tmp.resolve("in")
-      Files.createDirectories(inDir)
-      Files.copy(Paths.get(dir, "events.parquet"), inDir.resolve("part-a.parquet"))
-      val maxTs = stagedMaxTs(hs, inDir.resolve("part-a.parquet"))
-
-      val name = s"graft_stream_sess_${System.nanoTime()}"
-      val q = op(hs)(readEventStream(hs, inDir.toString))
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", tmp.resolve("ckpt").toString).start()
-      try {
-        q.processAllAvailable()
-        var n = 0
-        Seq(2L * 3600, 2L * 3600 + 1).foreach { offsetSec =>
-            n += 1
-            // driver-written sentinel (SentinelFiles: no Spark job), staged
-            // OUTSIDE the polled dir and moved in atomically so a listing
-            // can never observe a half-written parquet (footerless file ⇒
-            // query death)
-            val staged = tmp.resolve(s"part-z$n.parquet.staged")
-            SentinelFiles.writeEvents(staged, Seq(
-              (-n.toLong, maxTs.plusSeconds(offsetSec), -1L, "sentinel", 0.0, "{}")))
-            Files.move(staged, inDir.resolve(s"part-z$n.parquet"),
-              StandardCopyOption.ATOMIC_MOVE)
-            q.processAllAvailable()
-          }
-      } finally q.stop()
-      try hs.table(name).filter(col("user_id") >= 0).graftCheckpoint()
-      finally dropViewQuietly(hs, name)
-    } finally deleteRecursively(tmp.toFile)
-  }
+      op: SparkSession => DataFrame => DataFrame): DataFrame =
+    syncGate(spark, "sess") { g =>
+      val (in, sentinels) = g.stagedEvents(dir, Seq(2L * 3600, 2L * 3600 + 1)) {
+        (n, ts) => Seq((-n.toLong, ts, -1L, "sentinel", 0.0, "{}"))
+      }
+      g.toMemory(op(g.s)(in), "append", sentinels: _*).filter(col("user_id") >= 0)
+    }
 
   /** LIVE maintenance of the day-partitioned events layout
     * ([[graft.plans.EventsLayout]]): the event stream lands directly in
@@ -288,8 +326,7 @@ object EventPipeline {
     * partition pruning as the batch-written layout; the gate runs the
     * date-window sessionize probe over the STREAMED files against the
     * flat-table oracle. */
-  def dayLayoutStream(events: DataFrame, outDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+  def dayLayoutStream(events: DataFrame, outDir: String): DataStreamWriter[Row] =
     events
       .withColumn("event_date", to_date(col("ts")))
       .writeStream.format("parquet")
@@ -299,24 +336,16 @@ object EventPipeline {
   /** Sync gate run of [[dayLayoutStream]]: stream the sf events into a
     * temp day layout, then run the two-day sessionize probe from the
     * streamed files — sharing `r_events_partitioned`'s oracle. */
-  def dayLayoutSync(spark: SparkSession, dir: String): DataFrame = {
-    val hs = harnessSession(spark)
-    val tmp = harnessTmpDir("graft_stream_days")
-    try {
-      val q = dayLayoutStream(
-          readEventStream(hs, dir, globFilter = Some("events.parquet")),
-          tmp.resolve("days").toString)
-        .option("checkpointLocation", tmp.resolve("ckpt").toString).start()
-      try q.processAllAvailable() finally q.stop()
-      val d0 = hs.read.schema(rawSchema)
+  def dayLayoutSync(spark: SparkSession, dir: String): DataFrame =
+    syncGate(spark, "days") { g =>
+      g.drain(dayLayoutStream(
+        readEventStream(g.s, dir, globFilter = Some("events.parquet")), g.path("days")))
+      val d0 = g.s.read.schema(rawSchema)
         .option("pathGlobFilter", "events.parquet").parquet(dir)
         .agg(min(to_date(col("ts").cast("timestamp")))).head().getDate(0).toLocalDate
       graft.queries.Relational.sessionizeOver(
-        graft.plans.EventsLayout.readDayWindow(
-          hs, tmp.resolve("days").toString, d0.plusDays(1), days = 2))
-        .graftCheckpoint()
-    } finally deleteRecursively(tmp.toFile)
-  }
+        graft.plans.EventsLayout.readDayWindow(g.s, g.path("days"), d0.plusDays(1), days = 2))
+    }
 
   /** Tumbling one-hour windows per event type with a one-hour watermark
     * (late data beyond the watermark is dropped, state is bounded). */
@@ -345,20 +374,14 @@ object EventPipeline {
     * the survivors — the key set is deterministic (which physical row
     * survives within a micro-batch is not, so the gate projects it away)
     * and equals batch `SELECT DISTINCT`, since all duplicates co-arrive
-    * within the watermark horizon here. Leak-free like
-    * [[windowedCountsSync]]. */
-  def dedupSync(spark: SparkSession, dir: String): DataFrame = {
-    val s = harnessSession(spark)
-    val name = s"graft_stream_dedup_${System.nanoTime()}"
-    runToTable(s, name) { ckpt =>
-      dedupWithinWatermark(
-          readEventStream(s, dir, globFilter = Some("events.parquet")),
+    * within the watermark horizon here. */
+  def dedupSync(spark: SparkSession, dir: String): DataFrame =
+    syncGate(spark, "dedup") { g =>
+      g.toMemory(dedupWithinWatermark(
+          readEventStream(g.s, dir, globFilter = Some("events.parquet")),
           Seq("user_id", "event_type"))
-        .select(col("user_id"), col("event_type"))
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", ckpt.toString).start()
-    }()
-  }
+        .select(col("user_id"), col("event_type")), "append")
+    }
 
   /** Stream–static enrichment join: the static dimension is joined to every
     * micro-batch (broadcast when small) — no state, no watermark needed. */
@@ -382,26 +405,10 @@ object EventPipeline {
     * Output is deterministic — (purchase, click) membership is set by
     * event times alone, so stream output ≡ the batch time-range join,
     * at any micro-batching (asserted in StreamingSpec; the driver gate's
-    * oracle IS the batch SQL). */
-  def attributionJoin(events: DataFrame, windowMinutes: Int = 30): DataFrame = {
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ts").as("purchase_ts"), col("value").as("purchase_value"))
-      .withWatermark("purchase_ts", "1 hour")
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("click_user"),
-        col("ts").as("click_ts"))
-      .withWatermark("click_ts", "1 hour")
-    purchases.join(clicks,
-        col("user_id") === col("click_user") &&
-        col("click_ts") <= col("purchase_ts") &&
-        col("click_ts") >= col("purchase_ts") -
-          expr(s"INTERVAL $windowMinutes MINUTES"))
-      .select(col("purchase_id"), col("click_id"), col("user_id"),
-        (unix_micros(col("purchase_ts")) - unix_micros(col("click_ts")))
-          .as("gap_us"),
-        col("purchase_value"))
-  }
+    * oracle IS the batch SQL). The body is [[attributionJoinOuter]]'s,
+    * under `joinType = "inner"`. */
+  def attributionJoin(events: DataFrame, windowMinutes: Int = 30): DataFrame =
+    attributionJoinOuter(events, windowMinutes, joinType = "inner")
 
   /** LEFT-OUTER stream–stream attribution ([[attributionJoin]]'s
     * reconciliation-grade variant): a purchase with NO click in the
@@ -430,16 +437,19 @@ object EventPipeline {
       .select(col("event_id").as("click_id"), col("user_id").as("click_user"),
         col("ts").as("click_ts"))
       .withWatermark("click_ts", "1 hour")
+    // coalesce: under fullOuter an unmatched CLICK's only user id is the
+    // click side's (≡ user_id verbatim under leftOuter). An inner row
+    // always carries both, equal by the equi-join, so it projects user_id
+    val userId =
+      if (joinType == "inner") col("user_id")
+      else coalesce(col("user_id"), col("click_user")).as("user_id")
     purchases.join(clicks,
         col("user_id") === col("click_user") &&
         col("click_ts") <= col("purchase_ts") &&
         col("click_ts") >= col("purchase_ts") -
           expr(s"INTERVAL $windowMinutes MINUTES"),
         joinType)
-      // coalesce: under fullOuter an unmatched CLICK's only user id is
-      // the click side's (≡ user_id verbatim under leftOuter)
-      .select(col("purchase_id"), col("click_id"),
-        coalesce(col("user_id"), col("click_user")).as("user_id"),
+      .select(col("purchase_id"), col("click_id"), userId,
         (unix_micros(col("purchase_ts")) - unix_micros(col("click_ts")))
           .as("gap_us"),
         col("purchase_value"))
@@ -464,8 +474,7 @@ object EventPipeline {
     * they can never join with real traffic. The flush turns every
     * still-buffered click-less purchase into its null-click outer row;
     * sentinels are filtered from the result (`user_id >= 0` — the sentinel
-    * purchase emits as its own unmatched row). Leak-free like
-    * [[windowedCountsSync]]. */
+    * purchase emits as its own unmatched row). */
   def attributionJoinOuterSync(spark: SparkSession, dir: String): DataFrame =
     outerJoinSyncOver(spark, dir, "leftOuter")
 
@@ -477,58 +486,26 @@ object EventPipeline {
     outerJoinSyncOver(spark, dir, "fullOuter")
 
   private def outerJoinSyncOver(
-      spark: SparkSession, dir: String, joinType: String): DataFrame = {
-    val hs = harnessSession(spark)
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = harnessTmpDir("graft_stream_joino")
-    try {
-      val inDir = tmp.resolve("in")
-      Files.createDirectories(inDir)
-      Files.copy(Paths.get(dir, "events.parquet"), inDir.resolve("part-a.parquet"))
-      val maxTs = stagedMaxTs(hs, inDir.resolve("part-a.parquet"))
-
-      val name = s"graft_stream_joino_${System.nanoTime()}"
-      val q = attributionJoinOuter(readEventStream(hs, inDir.toString),
-          joinType = joinType)
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", tmp.resolve("ckpt").toString).start()
-      try {
-        q.processAllAvailable()
-        var n = 0
-        Seq(3L * 3600, 3L * 3600 + 1).foreach { offsetSec =>
-          n += 1
-          val ts = maxTs.plusSeconds(offsetSec)
-          // driver-written sentinel pair (one per join branch), atomic
-          // move — see sessionSyncOver
-          val staged = tmp.resolve(s"part-z$n.parquet.staged")
-          SentinelFiles.writeEvents(staged, Seq(
-            (-(2L * n), ts, -1L, "purchase", 0.0, "{}"),
-            (-(2L * n + 1), ts, -2L, "click", 0.0, "{}")))
-          Files.move(staged, inDir.resolve(s"part-z$n.parquet"),
-            StandardCopyOption.ATOMIC_MOVE)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      try hs.table(name).filter(col("user_id") >= 0).graftCheckpoint()
-      finally dropViewQuietly(hs, name)
-    } finally deleteRecursively(tmp.toFile)
-  }
+      spark: SparkSession, dir: String, joinType: String): DataFrame =
+    syncGate(spark, "joino") { g =>
+      val (in, sentinels) = g.stagedEvents(dir, Seq(3L * 3600, 3L * 3600 + 1)) {
+        (n, ts) => Seq( // one row per join branch
+          (-(2L * n), ts, -1L, "purchase", 0.0, "{}"),
+          (-(2L * n + 1), ts, -2L, "click", 0.0, "{}"))
+      }
+      g.toMemory(attributionJoinOuter(in, joinType = joinType), "append", sentinels: _*)
+        .filter(col("user_id") >= 0)
+    }
 
   /** Synchronous gate run of [[attributionJoin]]: streams the sf dir's
     * events file through both branches of the self-join and the memory
     * sink. Inner-join rows emit on arrival, so one `processAllAvailable`
-    * drains every match — no sentinel batches. Leak-free like
-    * [[windowedCountsSync]]. */
-  def attributionJoinSync(spark: SparkSession, dir: String): DataFrame = {
-    val s = harnessSession(spark)
-    val name = s"graft_stream_join_${System.nanoTime()}"
-    runToTable(s, name) { ckpt =>
-      attributionJoin(
-          readEventStream(s, dir, globFilter = Some("events.parquet")))
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", ckpt.toString).start()
-    }()
-  }
+    * drains every match — no sentinel batches. */
+  def attributionJoinSync(spark: SparkSession, dir: String): DataFrame =
+    syncGate(spark, "join") { g =>
+      g.toMemory(attributionJoin(
+        readEventStream(g.s, dir, globFilter = Some("events.parquet"))), "append")
+    }
 
   /** Raw schema of the documents fixture (for the file-source stream). */
   val docSchema: StructType = StructType(Seq(
@@ -546,7 +523,6 @@ object EventPipeline {
     * batch backfill can never disagree. Stateless ⇒ no watermark, no state
     * store; scales as a pure map over whatever the source delivers. */
   def curationFilterStream(docs: DataFrame): DataFrame = {
-    import graft.functions.GraftFunctions
     GraftFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"), col("lang"),
@@ -567,19 +543,11 @@ object EventPipeline {
     * the operator is stateless, so batching cannot change its output; the
     * multi-batch behavior of the same source harness is exercised by
     * [[sessionizeSync]]'s staged two-file input), returns the accepted
-    * documents. Leak-free like [[windowedCountsSync]]. */
-  def curationFilterSync(spark: SparkSession, dir: String): DataFrame = {
-    val s = harnessSession(spark)
-    val name = s"graft_stream_cur_${System.nanoTime()}"
-    runToTable(s, name) { ckpt =>
-      val in = s.readStream.schema(docSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-      curationFilterStream(in)
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", ckpt.toString).start()
-    }()
-  }
+    * documents. */
+  def curationFilterSync(spark: SparkSession, dir: String): DataFrame =
+    syncGate(spark, "cur") { g =>
+      g.toMemory(curationFilterStream(docStream(g.s, dir)), "append")
+    }
 
   /** Multimodal decode on a DOCUMENT STREAM: each micro-batch's payloads
     * run the full FLAC frame-walk + Rice + CRC/MD5 decode
@@ -607,18 +575,10 @@ object EventPipeline {
 
   /** Synchronous gate run of [[mediaDecodeStream]] — the
     * [[curationFilterSync]] harness (stateless operator, memory sink). */
-  def mediaDecodeSync(spark: SparkSession, dir: String): DataFrame = {
-    val s = harnessSession(spark)
-    val name = s"graft_stream_media_${System.nanoTime()}"
-    runToTable(s, name) { ckpt =>
-      val in = s.readStream.schema(docSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-      mediaDecodeStream(in)
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", ckpt.toString).start()
-    }()
-  }
+  def mediaDecodeSync(spark: SparkSession, dir: String): DataFrame =
+    syncGate(spark, "media") { g =>
+      g.toMemory(mediaDecodeStream(docStream(g.s, dir)), "append")
+    }
 
   /** Deploy the TRAINED quality probe to the ingest stream — the
     * model-serving half of the GPT-3/LLaMA filtering recipe: weights are
@@ -629,7 +589,6 @@ object EventPipeline {
     * no watermark, no state store — so stream output ≡ batch scoring by
     * construction, at any micro-batching. */
   def probeScoreStream(docs: DataFrame, w: Seq[Double], margin: Double): DataFrame = {
-    import graft.functions.GraftFunctions
     GraftFunctions.register(docs.sparkSession)
     val vecs = docs.select(col("doc_id"), col("lang"),
       GraftFunctions.hashedTfVector(split(col("text"), " "), w.length).as("vector"))
@@ -647,46 +606,33 @@ object EventPipeline {
     * bit-reproducible on any partitioning, so cache hits freeze the
     * identical vector the batch lifecycle gate replays against its
     * oracle. */
-  private val frozenProbeWeights =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Double]]()
+  private val frozenProbeWeights = new ConcurrentHashMap[String, Seq[Double]]()
 
   /** Per-JVM standing-corpus artifact templates backing the ingest-stream
-    * gates — the same deployment split [[frozenProbeWeights]] and the
-    * r10 serve lanes established: the standing corpus's artifact (band
-    * index, boilerplate set, bloom + fingerprint store, IVF index) is a
+    * gates, keyed by artifact kind and [[fixtureKey]] — the same
+    * deployment split [[frozenProbeWeights]] and the r10 serve lanes
+    * established: the standing corpus's artifact (band index, boilerplate
+    * set, bloom + fingerprint store, eval fingerprints, IVF index) is a
     * BATCH product, priced by its own batch gate (`d_dedup_minhash`,
-    * `d_line_dedup`, `d_dedup_bloom`, `d_ann_build`); a deployed ingest
-    * stream loads it once and pays only the per-batch admit cost. Each
-    * template is built at most once per process — a bench warm-up or a
-    * verify first call pays it — into a temp dir the shutdown hook
-    * sweeps; builds are deterministic, so cache hits replay the
-    * identical artifact the first (uncached) call produced. The gates
+    * `d_line_dedup`, `d_dedup_bloom`, `d_decontaminate`, `d_ann_build`);
+    * a deployed ingest stream loads it once and pays only the per-batch
+    * admit cost. Each template is built at most once per process — a
+    * bench warm-up or a verify first call pays it — into a temp dir the
+    * shutdown hook sweeps; builds are deterministic, so cache hits replay
+    * the identical artifact the first (uncached) call produced. The gates
     * still RELOAD the artifact per invocation (the deployed process's
     * startup cost), and the ANN gate re-COPIES its index template per
     * run so the streamed appends land on fresh files every time —
     * nothing of the timed stream work is cached, only the batch-side
-    * build. */
-  private val standingIvf = new java.util.concurrent.ConcurrentHashMap[
-    String, (java.nio.file.Path, Seq[(Int, Seq[Float])])]()
-  private val standingBandIndex =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private val standingBoiler =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
-  private val standingBloom = new java.util.concurrent.ConcurrentHashMap[
-    String, (java.nio.file.Path, Array[Byte])]()
-  private val standingEvalFps =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
+    * build. A value is the template dir and what its build returned. */
+  private val standing = new ConcurrentHashMap[String, (Path, Any)]()
 
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def sweep(p: java.nio.file.Path): Unit =
-        try graft.plans.CorpusExport.deleteRecursively(p.toFile)
+      standing.values().forEach { v =>
+        try CorpusExport.deleteRecursively(v._1.toFile)
         catch { case _: Exception => () } // exit path: best-effort only
-      standingIvf.values().forEach(v => sweep(v._1))
-      standingBandIndex.values().forEach(sweep)
-      standingBoiler.values().forEach(sweep)
-      standingBloom.values().forEach(v => sweep(v._1))
-      standingEvalFps.values().forEach(sweep)
+      }
     }, "graft-standing-template-sweeper"))
   }
 
@@ -696,42 +642,36 @@ object EventPipeline {
     * one JVM therefore misses the cache and rebuilds, instead of
     * silently replaying the stale artifact. */
   private def fixtureKey(dir: String, sourceFile: String): String = {
-    val p = java.nio.file.Paths.get(dir, sourceFile)
+    val p = Paths.get(dir, sourceFile)
     val (len, mtime) =
-      try (java.nio.file.Files.size(p),
-        java.nio.file.Files.getLastModifiedTime(p).toMillis)
+      try (Files.size(p), Files.getLastModifiedTime(p).toMillis)
       catch { case _: java.io.IOException => (-1L, -1L) }
     s"$dir|$sourceFile|$len|$mtime"
   }
 
-  /** Build-once helper for the template caches: `build` fills the fresh
-    * temp dir; a failed build deletes it and rethrows UNCACHED so a
-    * retry rebuilds from scratch (the artifactCache discipline). Key
-    * with [[fixtureKey]] so the cache is invalidated by source-data
-    * changes, not only by path changes. */
-  private def templateDir[T](
-      cache: java.util.concurrent.ConcurrentHashMap[String, T], key: String,
-      prefix: String)(build: java.nio.file.Path => T): T =
-    cache.computeIfAbsent(key, _ => {
-      val out = java.nio.file.Files.createTempDirectory(prefix)
-      try build(out)
-      catch { case e: Throwable =>
-        graft.plans.CorpusExport.deleteRecursively(out.toFile); throw e
-      }
-    })
+  /** Build-once template of artifact `kind` derived from `dir`'s
+    * `sourceFile`: `build` fills the fresh temp dir; a failed build
+    * deletes it and rethrows UNCACHED so a retry rebuilds from scratch
+    * (the artifactCache discipline). The key fixes `kind`, and with it
+    * `A`, so the cast back is safe. */
+  private def templateDir[A](kind: String, dir: String, sourceFile: String)(
+      build: Path => A): (Path, A) =
+    standing.computeIfAbsent(s"$kind|${fixtureKey(dir, sourceFile)}", _ => {
+      val out = Files.createTempDirectory(s"graft_standing_$kind")
+      try (out, build(out))
+      catch { case e: Throwable => CorpusExport.deleteRecursively(out.toFile); throw e }
+    }).asInstanceOf[(Path, A)]
 
   /** Recursive file copy (template → per-run scratch), so each run's
     * streamed appends land on a fresh private tree. */
-  private def copyTree(
-      src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-    val st = java.nio.file.Files.walk(src)
+  private def copyTree(src: Path, dst: Path): Unit = {
+    val st = Files.walk(src)
     try st.forEach { p =>
       val t = dst.resolve(src.relativize(p).toString)
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.createDirectories(t): Unit
+      if (Files.isDirectory(p)) Files.createDirectories(t): Unit
       else {
-        java.nio.file.Files.createDirectories(t.getParent)
-        java.nio.file.Files.copy(p, t): Unit
+        Files.createDirectories(t.getParent)
+        Files.copy(p, t): Unit
       }
     } finally st.close()
   }
@@ -739,24 +679,51 @@ object EventPipeline {
   /** Synchronous gate run of [[probeScoreStream]]: trains on the PARENT
     * (batch) session — the deployment split: training is a batch job, the
     * stream only evaluates the frozen linear map — then streams the sf
-    * dir's documents through the memory sink. Leak-free like
-    * [[windowedCountsSync]]. */
+    * dir's documents through the memory sink. */
   def probeScoreSync(spark: SparkSession, dir: String): DataFrame = {
     // the mapping function receives the composite CACHE KEY, not a path —
     // train on the closed-over dir
     val w = frozenProbeWeights.computeIfAbsent(fixtureKey(dir, "documents.parquet"),
       _ => graft.queries.LlmOps.trainedProbeWeights(spark, dir))
-    val s = harnessSession(spark)
-    val name = s"graft_stream_probe_${System.nanoTime()}"
-    runToTable(s, name) { ckpt =>
-      val in = s.readStream.schema(docSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-      probeScoreStream(in, w, graft.queries.LlmOps.ProbeGateMargin)
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", ckpt.toString).start()
-    }()
+    syncGate(spark, "probe") { g =>
+      g.toMemory(probeScoreStream(
+        docStream(g.s, dir), w, graft.queries.LlmOps.ProbeGateMargin), "append")
+    }
   }
+
+  /** `foreachBatch` writing `admit(batch)` to one overwritten
+    * `outPath/batch_id=N` directory per micro-batch, so a replay after a
+    * failure (the sink's at-least-once contract) rewrites the same
+    * directory instead of appending duplicates. */
+  private def perBatchDirs(in: DataFrame, outPath: String)(
+      admit: DataFrame => DataFrame): DataStreamWriter[Row] =
+    in.writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        admit(batch).write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
+      }
+
+  /** The standing-artifact gate shape: the standing corpus's artifact is
+    * built once per process by `build(documents, sidePath)` into a
+    * [[templateDir]]. Each run reloads the static side written at
+    * `sidePath`, persisted for the run; streams the documents the
+    * `incoming` predicate keeps through `ingest(stream, side, artifact,
+    * outPath)` into `batch_id=` dirs; and reads the admitted rows back
+    * with `schema` — explicit, so an all-rejected run is an empty result,
+    * not an inference error. */
+  private def standingIngestSync[A](spark: SparkSession, dir: String, kind: String,
+      incoming: Column, schema: StructType)(build: (DataFrame, String) => A)(
+      ingest: (DataFrame, DataFrame, A, String) => DataStreamWriter[Row]): DataFrame =
+    syncGate(spark, kind) { g =>
+      GraftFunctions.register(g.s)
+      val (tmpl, artifact) = templateDir(kind, dir, "documents.parquet") { t =>
+        build(g.s.read.parquet(s"$dir/documents.parquet"), t.resolve("side").toString)
+      }
+      val side = g.persisted(g.s.read.parquet(tmpl.resolve("side").toString))
+      g.drain(ingest(docStream(g.s, dir).filter(incoming), side, artifact, g.path("out")))
+      g.s.read.schema(schema)
+        .option("recursiveFileLookup", "true").parquet(g.path("out"))
+    }
 
   /** Live near-dup ingest gate: a DOCUMENT STREAM admitted against the
     * static standing-corpus MinHash band index
@@ -771,15 +738,10 @@ object EventPipeline {
     * (its at-least-once contract) rewrites the same directory instead of
     * appending duplicates into the corpus store this gate protects. */
   def nearDupIngestStream(
-      docsStream: DataFrame, corpusIndex: DataFrame, outPath: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docsStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Dedup
-          .nearDupAgainstIndex(batch, corpusIndex, "doc_id", "text")
-          .select(col("doc_id"), col("lang"))
-          .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-      }
+      docsStream: DataFrame, corpusIndex: DataFrame, outPath: String): DataStreamWriter[Row] =
+    perBatchDirs(docsStream, outPath)(
+      graft.operators.Dedup.nearDupAgainstIndex(_, corpusIndex, "doc_id", "text")
+        .select(col("doc_id"), col("lang")))
 
   /** Output schema of the admitted-documents store. */
   private val admittedSchema: StructType = StructType(Seq(
@@ -794,18 +756,21 @@ object EventPipeline {
     * definitely-new docs bypass the anti-join entirely and only the
     * bloom-hit sliver joins the store. Admit decisions are per-document
     * → output is independent of micro-batching; per-batch-id overwrite
-    * keeps the at-least-once `foreachBatch` contract idempotent. */
+    * keeps the at-least-once `foreachBatch` contract idempotent. The
+    * admit step's result is checkpointed; it is freed once its batch is
+    * written, so a long-running stream pins no blocks per batch. */
   def bloomIngestStream(
       docsStream: DataFrame, corpusFp: DataFrame, bloom: Array[Byte],
-      numProbes: Int, outPath: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      numProbes: Int, outPath: String): DataStreamWriter[Row] =
     docsStream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.functions.GraftFunctions.register(batch.sparkSession)
-        graft.operators.Dedup
+        GraftFunctions.register(batch.sparkSession)
+        val admitted = graft.operators.Dedup
           .bloomDedupAgainstFingerprints(batch, corpusFp, "text", bloom, numProbes)
-          .select(col("doc_id"), col("lang"))
+        try admitted.select(col("doc_id"), col("lang"))
           .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
+        finally graft.core.Checkpoint.free(admitted)
       }
 
   /** Synchronous gate run of [[bloomIngestStream]]: incoming slice
@@ -813,90 +778,32 @@ object EventPipeline {
     * shares its batch twin's oracle, which is the proof that live ingest
     * ≡ batch backfill), the rest as the standing corpus whose bloom +
     * fingerprint store are built once before the stream starts. */
-  def bloomIngestSync(spark: SparkSession, dir: String): DataFrame = {
-    val s = harnessSession(spark)
-    graft.functions.GraftFunctions.register(s)
-    val ckpt = harnessTmpDir("graft_stream_ckpt")
-    val out = harnessTmpDir("graft_stream_bloom")
-    // standing-corpus snapshot artifacts (fingerprint store + bloom):
-    // batch products, template-cached per JVM (see [[standingBloom]]);
-    // the gate reloads the store per run — the deployed stream's startup
-    val (fpDir, bloom) = templateDir(standingBloom, fixtureKey(dir, "documents.parquet"), "graft_standing_bloom") {
-      tmpl =>
-        s.read.parquet(s"$dir/documents.parquet")
-          .filter(pmod(col("doc_id"), lit(5)) =!= 0)
-          .withColumn("dedup_fp", graft.functions.GraftFunctions.fingerprint128(
-            graft.functions.GraftFunctions.canonicalKey(col("text"))))
+  def bloomIngestSync(spark: SparkSession, dir: String): DataFrame =
+    standingIngestSync(spark, dir, "bloom", pmod(col("doc_id"), lit(5)) === 0,
+        admittedSchema)(
+      (docs, side) => {
+        docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
+          .withColumn("dedup_fp", GraftFunctions.fingerprint128(
+            GraftFunctions.canonicalKey(col("text"))))
           .select(col("dedup_fp"))
-          .write.parquet(tmpl.resolve("fp").toString)
-        val b = graft.operators.Dedup.bloomOfCorpus(
-          s.read.parquet(tmpl.resolve("fp").toString)
-            .select(col("dedup_fp.f1").as("f1")),
+          .write.parquet(side)
+        graft.operators.Dedup.bloomOfCorpus(
+          docs.sparkSession.read.parquet(side).select(col("dedup_fp.f1").as("f1")),
           "f1", numBits = 1 << 16, numProbes = 4)
-        (tmpl, b)
-    }
-    val corpusFp = s.read.parquet(fpDir.resolve("fp").toString)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val in = s.readStream.schema(docSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-        .filter(pmod(col("doc_id"), lit(5)) === 0)
-      val q = bloomIngestStream(in, corpusFp, bloom, numProbes = 4, out.toString)
-        .option("checkpointLocation", ckpt.toString).start()
-      try q.processAllAvailable() finally q.stop()
-      s.read.schema(admittedSchema)
-        .option("recursiveFileLookup", "true").parquet(out.toString)
-        .graftCheckpoint()
-    } finally {
-      corpusFp.unpersist(false)
-      deleteRecursively(ckpt.toFile)
-      deleteRecursively(out.toFile)
-    }
-  }
+      })(
+      (in, fp, bloom, out) => bloomIngestStream(in, fp, bloom, numProbes = 4, out))
 
   /** Synchronous gate run of [[nearDupIngestStream]]: the sf dir's
     * documents stream, incoming slice doc_id ≡ 0 (mod 7) filtered
     * in-stream, the rest as the static corpus (banded once, persisted).
-    * Returns the admitted documents; the explicit read schema keeps the
-    * all-documents-rejected case an empty result, not an inference
-    * error. */
-  def nearDupIngestSync(spark: SparkSession, dir: String): DataFrame = {
-    val s = harnessSession(spark)
-    val ckpt = harnessTmpDir("graft_stream_ckpt")
-    val out = harnessTmpDir("graft_stream_ingest")
-    // standing band index: a batch product ("computed ONCE and
-    // persisted" — the [[nearDupIngestStream]] contract), template-cached
-    // per JVM (see [[standingBandIndex]]); the gate reloads the persisted
-    // index per run — exactly the deployed ingest service's startup
-    val idxDir = templateDir(standingBandIndex, fixtureKey(dir, "documents.parquet"), "graft_standing_band") {
-      tmpl =>
-        graft.operators.Dedup.bandedIndex(
-            s.read.parquet(s"$dir/documents.parquet")
-              .filter(pmod(col("doc_id"), lit(7)) =!= 0),
-            "doc_id", "text")
-          .write.parquet(tmpl.resolve("idx").toString)
-        tmpl
-    }
-    val corpusIndex = s.read.parquet(idxDir.resolve("idx").toString)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val in = s.readStream.schema(docSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-        .filter(pmod(col("doc_id"), lit(7)) === 0)
-      val q = nearDupIngestStream(in, corpusIndex, out.toString)
-        .option("checkpointLocation", ckpt.toString).start()
-      try q.processAllAvailable() finally q.stop()
-      s.read.schema(admittedSchema)
-        .option("recursiveFileLookup", "true").parquet(out.toString)
-        .graftCheckpoint()
-    } finally {
-      corpusIndex.unpersist(false)
-      deleteRecursively(ckpt.toFile)
-      deleteRecursively(out.toFile)
-    }
-  }
+    * Returns the admitted documents. */
+  def nearDupIngestSync(spark: SparkSession, dir: String): DataFrame =
+    standingIngestSync(spark, dir, "band", pmod(col("doc_id"), lit(7)) === 0,
+        admittedSchema)(
+      (docs, side) => graft.operators.Dedup.bandedIndex(
+          docs.filter(pmod(col("doc_id"), lit(7)) =!= 0), "doc_id", "text")
+        .write.parquet(side))(
+      (in, index, _, out) => nearDupIngestStream(in, index, out))
 
   /** Streamed line-level boilerplate filter: the corpus's boilerplate line
     * set ([[graft.operators.Lines.boilerplate]]) is built ONCE from the
@@ -907,14 +814,9 @@ object EventPipeline {
     * the stream shares the batch twin's oracle. */
   def lineFilterStream(
       docsStream: DataFrame, boiler: DataFrame,
-      textCol: org.apache.spark.sql.Column,
-      outPath: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docsStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Lines.dropAgainst(batch, "doc_id", textCol, boiler)
-          .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-      }
+      textCol: Column, outPath: String): DataStreamWriter[Row] =
+    perBatchDirs(docsStream, outPath)(
+      graft.operators.Lines.dropAgainst(_, "doc_id", textCol, boiler))
 
   private val lineFilterSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("n_lines", LongType),
@@ -926,40 +828,14 @@ object EventPipeline {
     * standing rest, over the SAME webified pages as the batch
     * `d_line_dedup` gate. */
   def lineFilterSync(spark: SparkSession, dir: String): DataFrame = {
-    val s = harnessSession(spark)
-    graft.functions.GraftFunctions.register(s)
     val page = graft.queries.LlmOps.gopherPage
-    val ckpt = harnessTmpDir("graft_stream_ckpt")
-    val out = harnessTmpDir("graft_stream_lines")
-    // standing boilerplate set: a batch product of the standing corpus,
-    // template-cached per JVM (see [[standingBoiler]]); reloaded per run
-    val boilerDir = templateDir(standingBoiler, fixtureKey(dir, "documents.parquet"), "graft_standing_boiler") {
-      tmpl =>
-        graft.operators.Lines.boilerplate(
-            s.read.parquet(s"$dir/documents.parquet")
-              .filter(pmod(col("doc_id"), lit(4)) =!= 0),
-            "doc_id", page, minDocs = graft.queries.LlmOps.LineDedupMinDocs)
-          .write.parquet(tmpl.resolve("boiler").toString)
-        tmpl
-    }
-    val boiler = s.read.parquet(boilerDir.resolve("boiler").toString)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val in = s.readStream.schema(docSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-        .filter(pmod(col("doc_id"), lit(4)) === 0)
-      val q = lineFilterStream(in, boiler, page, out.toString)
-        .option("checkpointLocation", ckpt.toString).start()
-      try q.processAllAvailable() finally q.stop()
-      s.read.schema(lineFilterSchema)
-        .option("recursiveFileLookup", "true").parquet(out.toString)
-        .graftCheckpoint()
-    } finally {
-      boiler.unpersist(false)
-      deleteRecursively(ckpt.toFile)
-      deleteRecursively(out.toFile)
-    }
+    standingIngestSync(spark, dir, "boiler", pmod(col("doc_id"), lit(4)) === 0,
+        lineFilterSchema)(
+      (docs, side) => graft.operators.Lines.boilerplate(
+          docs.filter(pmod(col("doc_id"), lit(4)) =!= 0),
+          "doc_id", page, minDocs = graft.queries.LlmOps.LineDedupMinDocs)
+        .write.parquet(side))(
+      (in, boiler, _, out) => lineFilterStream(in, boiler, page, out))
   }
 
   /** Exactly-once streaming sink into a JDBC table: `foreachBatch` +
@@ -973,7 +849,7 @@ object EventPipeline {
     * this is the STREAMING tier of that capability. */
   def jdbcSinkStream(
       rows: DataFrame, url: String, table: String,
-      ledgerTable: String, queryId: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      ledgerTable: String, queryId: String): DataStreamWriter[Row] =
     rows.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -988,58 +864,52 @@ object EventPipeline {
     * at-least-once replay the protocol exists for. The ledger must skip
     * it: a broken skip doubles every count and hash-mismatches the
     * oracle. The result is the read-back aggregated per event type. */
-  def jdbcSinkSync(spark: SparkSession, dir: String): DataFrame = {
-    val s = harnessSession(spark)
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val db = s"memory:graftsink${System.nanoTime()}"
-    val url = s"jdbc:derby:$db;create=true"
-    val ckpt = harnessTmpDir("graft_stream_ckpt")
-    val tmp = harnessTmpDir("graft_stream_jdbc")
-    try {
-      val inDir = tmp.resolve("in")
-      Files.createDirectories(inDir)
-      Files.copy(Paths.get(dir, "events.parquet"), inDir.resolve("part-a.parquet"))
-      val maxTs = stagedMaxTs(s, inDir.resolve("part-a.parquet"))
+  def jdbcSinkSync(spark: SparkSession, dir: String): DataFrame =
+    syncGate(spark, "jdbc") { g =>
+      val db = s"memory:graftsink${System.nanoTime()}"
+      val url = s"jdbc:derby:$db;create=true"
+      // Derby in-memory databases live for the JVM unless dropped — a
+      // bench loop would accumulate one full table per sample. A
+      // successful drop reports itself as SQLException 08006, which the
+      // release swallows.
+      g.onExit(java.sql.DriverManager.getConnection(s"jdbc:derby:$db;drop=true").close())
       def sinkRows(df: DataFrame): DataFrame = df
         .filter(col("user_id") >= 0)
         .select(col("event_id"), col("event_type"))
-      val q = jdbcSinkStream(
-          sinkRows(readEventStream(s, inDir.toString)),
-          url, "evsink", "graft_epochs", "gate")
-        .option("checkpointLocation", ckpt.toString).start()
-      try {
-        q.processAllAvailable()
-        // batch 1: one sentinel row, filtered out in-stream — the sink
-        // must still commit (and ledger) the empty batch
-        val staged = tmp.resolve("part-z1.parquet.staged")
-        SentinelFiles.writeEvents(staged, Seq(
-          (-1L, maxTs.plusSeconds(60), -1L, "sentinel", 0.0, "{}")))
-        Files.move(staged, inDir.resolve("part-z1.parquet"),
-          StandardCopyOption.ATOMIC_MOVE)
-        q.processAllAvailable()
-      } finally q.stop()
+      // batch 1: one sentinel row, filtered out in-stream — the sink must
+      // still commit (and ledger) the empty batch
+      val (in, sentinel) = g.stagedEvents(dir, Seq(60L)) {
+        (_, ts) => Seq((-1L, ts, -1L, "sentinel", 0.0, "{}"))
+      }
+      g.drain(jdbcSinkStream(sinkRows(in), url, "evsink", "graft_epochs", "gate"),
+        sentinel: _*)
       // redelivery proof, in the gate itself: replaying batch 0 must be
       // skipped by the ledger (returns false), leaving the table as-is
       val replay = sinkRows(
-        s.read.schema(rawSchema)
-          .parquet(inDir.resolve("part-a.parquet").toString)
+        g.s.read.schema(rawSchema).parquet(g.path("in/part-a.parquet"))
           .withColumn("ts", col("ts").cast("timestamp")))
       require(!graft.sources.Sources.commitBatchJdbc(
           replay, url, "evsink", "graft_epochs", "gate", 0L),
         "redelivered batch 0 must be skipped by the ledger")
-      graft.sources.Sources.readJdbc(s, url, "evsink")
+      graft.sources.Sources.readJdbc(g.s, url, "evsink")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("event_id")).as("id_sum"))
-        .graftCheckpoint()
-    } finally {
-      // Derby in-memory databases live for the JVM unless dropped — a
-      // bench loop would accumulate one full table per sample
-      try java.sql.DriverManager.getConnection(s"jdbc:derby:$db;drop=true").close()
-      catch { case _: java.sql.SQLException => () } // 08006 = dropped, expected
-      deleteRecursively(ckpt.toFile)
-      deleteRecursively(tmp.toFile)
     }
-  }
+
+  /** No removals, in the store's split-keyed shape: an empty
+    * (split, doc_id) frame over `rows`. */
+  private def noRemovals(rows: DataFrame): DataFrame =
+    rows.select(col("split"), col("doc_id")).limit(0)
+
+  /** The tagged commit of one micro-batch: a delta with no removals,
+    * tagged `<queryId>-b<batchId>` in the store's durable ledger, so a
+    * redelivered batch returns its committed version instead of
+    * committing again. */
+  private def commitTagged(batch: DataFrame, batchId: Long, root: String,
+      queryId: String): Unit =
+    Snapshots.commitDelta(batch.sparkSession, root,
+      adds = batch, removedIds = noRemovals(batch),
+      tag = Some(s"$queryId-b$batchId")): Unit
 
   /** Versioned-store ingest: each micro-batch commits into the
     * copy-on-write snapshot store ([[graft.plans.Snapshots]]) as a
@@ -1051,52 +921,40 @@ object EventPipeline {
     * (the store's core property); `rows` must carry the store's `split`
     * column. Removals are SPLIT-KEYED (here trivially empty) so each
     * micro-batch commit's IO is bounded by the splits it lands in —
-    * never a corpus-wide victim scan per batch. */
-  def snapshotIngestStream(
-      rows: DataFrame, root: String, queryId: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    snapshotIngestStream(rows, root, queryId, maintainEvery = None)
-
-  /** [[snapshotIngestStream]] with BUILT-IN maintenance: every
-    * `maintainEvery`-th batch additionally runs [[graft.plans.Snapshots
-    * .maintain]] under `policy` AFTER its tagged commit — a long-running
-    * ingest stream keeps its own version chain bounded (DV folds,
-    * consolidation past the dir trigger) without an external cron. Safe
-    * under at-least-once redelivery: the tagged commit is ledger-skipped
-    * on replay, and maintain itself is idempotent in effect (a satisfied
-    * trigger no-ops). RETENTION IS OPT-IN HERE: the default policy
-    * overrides [[graft.plans.Snapshots.MaintenancePolicy]]'s
-    * `vacuumKeepLast = Some(32)` to None — deleting version history is
-    * a DESTRUCTIVE side effect a caller reaching for `maintainEvery`
-    * (DV folding, consolidation) must not inherit silently, because
-    * time-travel readers pinned more than the window back would break.
-    * Pass an explicit policy with `vacuumKeepLast`/`vacuumOlderThanMs`
-    * set comfortably above every training run still replaying to enable
-    * retention sweeps from inside the stream. */
-  def snapshotIngestStream(
-      rows: DataFrame, root: String, queryId: String,
-      maintainEvery: Option[Int],
-      policy: graft.plans.Snapshots.MaintenancePolicy =
-        graft.plans.Snapshots.MaintenancePolicy(vacuumKeepLast = None))
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    snapshotIngestStream(rows, root, queryId, maintainEvery, policy,
-      indexRoot = None)
-
-  /** [[snapshotIngestStream]] additionally maintaining a STANDING
-    * doc_id → split index ([[graft.plans.DocIndex]]) at `indexRoot`:
-    * after each batch's tagged commit (and any maintenance), the index
-    * is synced to the new head — built on the first batch, CDC-refreshed
-    * after that — so a takedown pipeline running beside a long-lived
-    * ingest stream always finds the index fresh
-    * ([[graft.plans.DocIndex.removeByIds]] refuses on a stale index by
-    * design). Safe with retention-enabled policies: a refresh whose CDC
-    * base was vacuumed falls back to a head rebuild. Redelivered
+    * never a corpus-wide victim scan per batch.
+    *
+    * BUILT-IN maintenance: with `maintainEvery = Some(n)`, every n-th
+    * batch additionally runs [[graft.plans.Snapshots.maintain]] under
+    * `policy` AFTER its tagged commit — a long-running ingest stream
+    * keeps its own version chain bounded (DV folds, consolidation past
+    * the dir trigger) without an external cron. Safe under at-least-once
+    * redelivery: the tagged commit is ledger-skipped on replay, and
+    * maintain itself is idempotent in effect (a satisfied trigger
+    * no-ops). RETENTION IS OPT-IN HERE: the default policy overrides
+    * [[graft.plans.Snapshots.MaintenancePolicy]]'s `vacuumKeepLast =
+    * Some(32)` to None — deleting version history is a DESTRUCTIVE side
+    * effect a caller reaching for `maintainEvery` (DV folding,
+    * consolidation) must not inherit silently, because time-travel
+    * readers pinned more than the window back would break. Pass an
+    * explicit policy with `vacuumKeepLast`/`vacuumOlderThanMs` set
+    * comfortably above every training run still replaying to enable
+    * retention sweeps from inside the stream.
+    *
+    * STANDING INDEX: with `indexRoot = Some(ir)`, a doc_id → split index
+    * ([[graft.plans.DocIndex]]) at `ir` is synced to the new head after
+    * each batch's tagged commit (and any maintenance) — built on the
+    * first batch, CDC-refreshed after that — so a takedown pipeline
+    * running beside a long-lived ingest stream always finds the index
+    * fresh ([[graft.plans.DocIndex.removeByIds]] refuses on a stale index
+    * by design). Safe with retention-enabled policies: a refresh whose
+    * CDC base was vacuumed falls back to a head rebuild. Redelivered
     * batches re-sync idempotently (head unchanged → no index commit). */
   def snapshotIngestStream(
       rows: DataFrame, root: String, queryId: String,
-      maintainEvery: Option[Int],
-      policy: graft.plans.Snapshots.MaintenancePolicy,
-      indexRoot: Option[String])
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+      maintainEvery: Option[Int] = None,
+      policy: Snapshots.MaintenancePolicy =
+        Snapshots.MaintenancePolicy(vacuumKeepLast = None),
+      indexRoot: Option[String] = None): DataStreamWriter[Row] = {
     // retention defaulted OFF in r15 (it used to inherit keepLast=32):
     // surface the silent behavior change once per process, so a stream
     // that relied on the old default learns its chain now grows
@@ -1114,14 +972,10 @@ object EventPipeline {
     rows.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.plans.Snapshots.commitDelta(
-          batch.sparkSession, root,
-          adds = batch,
-          removedIds = batch.select(col("split"), col("doc_id")).limit(0),
-          tag = Some(s"$queryId-b$batchId")): Unit
+        commitTagged(batch, batchId, root, queryId)
         maintainEvery.foreach { n =>
           if (n > 0 && batchId % n == n - 1)
-            graft.plans.Snapshots.maintain(batch.sparkSession, root, policy): Unit
+            Snapshots.maintain(batch.sparkSession, root, policy): Unit
         }
         indexRoot.foreach(ir =>
           graft.plans.DocIndex.sync(batch.sparkSession, root, ir): Unit)
@@ -1131,63 +985,66 @@ object EventPipeline {
   private val retentionOffWarned =
     new java.util.concurrent.atomic.AtomicBoolean(false)
 
+  /** The store gates' split key: s0..s3 by doc_id mod 4. */
+  private def storeRows(docs: DataFrame): DataFrame = docs
+    .withColumn("split", concat(lit("s"), pmod(col("doc_id"), lit(4))))
+    .select(col("doc_id"), col("split"), col("lang"), col("n_chars"))
+
+  /** The store gates' standing slice, seeded as v1; the rest arrives later. */
+  private def isSeed: Column = pmod(col("doc_id"), lit(3)) === 0
+
+  /** The split-keyed store gate shape: a store at the gate's `root`,
+    * seeded (`commitFull`, v1) with the standing slice [[isSeed]]. `body`
+    * gets the gate, the root, and `docs(f)`: the documents file, read
+    * through `f` and shaped into the store's rows. */
+  private def storeGate(spark: SparkSession, dir: String, name: String)(
+      body: (Gate, String, (DataFrame => DataFrame) => DataFrame) => DataFrame): DataFrame =
+    syncGate(spark, name) { g =>
+      val root = g.path("root")
+      def docs(f: DataFrame => DataFrame): DataFrame =
+        storeRows(f(g.s.read.schema(docSchema).parquet(s"$dir/documents.parquet")))
+      Snapshots.commitFull(g.s, docs(_.filter(isSeed)), root)
+      body(g, root, docs)
+    }
+
+  /** The rest of the documents (not [[isSeed]]) as a stream of store rows. */
+  private def restStream(s: SparkSession, dir: String): DataFrame =
+    storeRows(docStream(s, dir).filter(!isSeed))
+
+  /** The tag-ledger redelivery proof, in the gate itself: batch 0 of the
+    * gate's query (`replay`), redelivered through the commit path, must
+    * answer from the durable ledger with its committed version 2 and
+    * leave the chain at v2 — a broken skip would double every streamed
+    * doc and hash-mismatch. */
+  private def requireLedgerSkip(s: SparkSession, root: String, replay: DataFrame): Unit = {
+    require(Snapshots.commitDelta(s, root, adds = replay,
+        removedIds = noRemovals(replay), tag = Some("gate-b0")) == 2,
+      "redelivered batch 0 must return its committed version")
+    require(Snapshots.latestVersion(s, root) == 2,
+      "redelivery must not lengthen the version chain")
+  }
+
   /** Synchronous gate run of [[snapshotIngestStream]]: a store is seeded
-    * with the doc_id ≡ 0 (mod 3) slice (`commitFull` — the standing
-    * corpus), the REST of the documents stream in as one tagged delta
-    * commit, and then batch 0 is REDELIVERED through the commit path —
-    * the at-least-once replay the durable tag ledger exists for: it must
-    * return the already-committed version without lengthening the chain
-    * (a broken skip would double every streamed doc and hash-mismatch).
-    * The result is the latest version's (split, lang) manifest — base
-    * and streamed docs together, so any isolation or idempotence break
-    * shifts the counts. */
-  def snapshotIngestSync(spark: SparkSession, dir: String): DataFrame = {
-    val s = harnessSession(spark)
-    val ckpt = harnessTmpDir("graft_stream_ckpt")
-    val root = harnessTmpDir("graft_stream_snap")
-    try {
-      def shaped(df: DataFrame): DataFrame = df
-        .withColumn("split", concat(lit("s"), pmod(col("doc_id"), lit(4))))
-        .select(col("doc_id"), col("split"), col("lang"), col("n_chars"))
-      graft.plans.Snapshots.commitFull(s,
-        shaped(s.read.schema(docSchema).parquet(s"$dir/documents.parquet")
-          .filter(pmod(col("doc_id"), lit(3)) === 0)),
-        root.toString)
-      val in = shaped(
-        s.readStream.schema(docSchema)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir)
-          .filter(pmod(col("doc_id"), lit(3)) =!= 0))
-      val q = snapshotIngestStream(in, root.toString, "gate")
-        .option("checkpointLocation", ckpt.toString).start()
-      try q.processAllAvailable() finally q.stop()
-      val latest = graft.plans.Snapshots.latestVersion(s, root.toString)
+    * with the doc_id ≡ 0 (mod 3) slice (the standing corpus), the REST
+    * of the documents stream in as one tagged delta commit, and then
+    * batch 0 is REDELIVERED ([[requireLedgerSkip]]). The result is the
+    * latest version's (split, lang) manifest — base and streamed docs
+    * together, so any isolation or idempotence break shifts the counts. */
+  def snapshotIngestSync(spark: SparkSession, dir: String): DataFrame =
+    storeGate(spark, dir, "snap") { (g, root, docs) =>
+      g.drain(snapshotIngestStream(restStream(g.s, dir), root, "gate"))
+      val latest = Snapshots.latestVersion(g.s, root)
       require(latest == 2, s"one delivered batch must land as ONE version, got v$latest")
-      // redelivery proof, in the gate itself: the replayed batch answers
-      // from the durable ledger with the committed version
-      val replay = shaped(
-        s.read.schema(docSchema).parquet(s"$dir/documents.parquet")
-          .filter(pmod(col("doc_id"), lit(3)) =!= 0))
-      require(graft.plans.Snapshots.commitDelta(s, root.toString,
-          adds = replay,
-          removedIds = replay.select(col("split"), col("doc_id")).limit(0),
-          tag = Some("gate-b0")) == 2,
-        "redelivered batch 0 must return its committed version")
-      require(graft.plans.Snapshots.latestVersion(s, root.toString) == 2,
-        "redelivery must not lengthen the version chain")
-      graft.plans.Snapshots.readAt(s, root.toString, 2)
+      requireLedgerSkip(g.s, root, docs(_.filter(!isSeed)))
+      Snapshots.readAt(g.s, root, 2)
         .groupBy(col("split"), col("lang"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_chars")).cast("long").as("total_chars"))
-        .graftCheckpoint()
-    } finally {
-      deleteRecursively(ckpt.toFile)
-      deleteRecursively(root.toFile)
     }
-  }
 
   /** LIVE incrementally-maintained aggregate — the dashboard over the
     * streaming ingest: each micro-batch commits into the store as a
-    * TAGGED delta ([[snapshotIngestStream]]'s discipline) and then
+    * TAGGED delta ([[snapshotIngestStream]]'s commit) and then
     * refreshes the materialized rollup
     * ([[graft.plans.IncrementalAgg.refresh]]) to the new head, so the
     * view tracks the stream with refresh cost ∝ the batch. BOTH halves
@@ -1196,17 +1053,12 @@ object EventPipeline {
     * unlengthened) and the follow-up refresh no-ops on an unchanged
     * head — the view can never double-count a retried batch. */
   def incrAggStream(rows: DataFrame, root: String, viewPath: String,
-      queryId: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      queryId: String): DataStreamWriter[Row] =
     rows.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.plans.Snapshots.commitDelta(
-          batch.sparkSession, root,
-          adds = batch,
-          removedIds = batch.select(col("split"), col("doc_id")).limit(0),
-          tag = Some(s"$queryId-b$batchId")): Unit
-        graft.plans.IncrementalAgg.refresh(
-          batch.sparkSession, root, viewPath): Unit
+        commitTagged(batch, batchId, root, queryId)
+        graft.plans.IncrementalAgg.refresh(batch.sparkSession, root, viewPath): Unit
       }
 
   /** Synchronous gate run of [[incrAggStream]]: the store seeds with the
@@ -1217,53 +1069,22 @@ object EventPipeline {
     * the LIVE VIEW's contents, which must equal the from-scratch
     * aggregate of the whole table ([[snapshotIngestSync]]'s oracle,
     * shared verbatim): streamed refresh ≡ batch rebuild. */
-  def incrAggSync(spark: SparkSession, dir: String): DataFrame = {
-    val s = harnessSession(spark)
-    val ckpt = harnessTmpDir("graft_stream_ckpt")
-    val root = harnessTmpDir("graft_stream_iagg")
-    val view = harnessTmpDir("graft_stream_iagg_view")
-    try {
-      def shaped(df: DataFrame): DataFrame = df
-        .withColumn("split", concat(lit("s"), pmod(col("doc_id"), lit(4))))
-        .select(col("doc_id"), col("split"), col("lang"), col("n_chars"))
-      graft.plans.Snapshots.commitFull(s,
-        shaped(s.read.schema(docSchema).parquet(s"$dir/documents.parquet")
-          .filter(pmod(col("doc_id"), lit(3)) === 0)),
-        root.toString)
-      graft.plans.IncrementalAgg.materialize(s, root.toString, view.toString,
-        graft.plans.IncrementalAgg.Spec(Seq("split", "lang"), Seq("n_chars"))): Unit
-      val in = shaped(
-        s.readStream.schema(docSchema)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir)
-          .filter(pmod(col("doc_id"), lit(3)) =!= 0))
-      val q = incrAggStream(in, root.toString, view.toString, "gate")
-        .option("checkpointLocation", ckpt.toString).start()
-      try q.processAllAvailable() finally q.stop()
-      require(graft.plans.IncrementalAgg.version(s, view.toString) == 2,
+  def incrAggSync(spark: SparkSession, dir: String): DataFrame =
+    storeGate(spark, dir, "iagg") { (g, root, docs) =>
+      import graft.plans.IncrementalAgg
+      val view = g.path("view")
+      IncrementalAgg.materialize(g.s, root, view,
+        IncrementalAgg.Spec(Seq("split", "lang"), Seq("n_chars"))): Unit
+      g.drain(incrAggStream(restStream(g.s, dir), root, view, "gate"))
+      require(IncrementalAgg.version(g.s, view) == 2,
         "the live view must track the streamed commit")
-      // redelivery proof: the replayed batch's commit answers from the
-      // ledger and the refresh no-ops — the view must not double-count
-      val replay = shaped(
-        s.read.schema(docSchema).parquet(s"$dir/documents.parquet")
-          .filter(pmod(col("doc_id"), lit(3)) =!= 0))
-      require(graft.plans.Snapshots.commitDelta(s, root.toString,
-          adds = replay,
-          removedIds = replay.select(col("split"), col("doc_id")).limit(0),
-          tag = Some("gate-b0")) == 2,
-        "redelivered batch 0 must return its committed version")
-      require(graft.plans.IncrementalAgg.refresh(
-          s, root.toString, view.toString) == 2,
+      requireLedgerSkip(g.s, root, docs(_.filter(!isSeed)))
+      require(IncrementalAgg.refresh(g.s, root, view) == 2,
         "refresh after a skipped redelivery must no-op at the head")
-      graft.plans.IncrementalAgg.read(s, view.toString)
+      IncrementalAgg.read(g.s, view)
         .select(col("split"), col("lang"), col("n_docs"),
           col("sum_n_chars").cast("long").as("total_chars"))
-        .graftCheckpoint()
-    } finally {
-      deleteRecursively(ckpt.toFile)
-      deleteRecursively(root.toFile)
-      deleteRecursively(view.toFile)
     }
-  }
 
   /** The CDC TAIL of the snapshot store — the consumer-side twin of
     * [[snapshotIngestStream]]: the store's version files are an
@@ -1280,8 +1101,7 @@ object EventPipeline {
     * replays idempotent; the driver-side work per batch is one tiny
     * collect of version FILE NAMES (one row per commit, never data). */
   def snapshotChangesStream(
-      s: SparkSession, root: String, outPath: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.plans.Snapshots
+      s: SparkSession, root: String, outPath: String): DataStreamWriter[Row] = {
     s.readStream
       .schema(StructType(Seq(StructField("value", StringType))))
       .option("pathGlobFilter", "v*.list")
@@ -1292,7 +1112,7 @@ object EventPipeline {
         // bounded: one value per version FILE in this batch — one job, no
         // exchange (Snapshots.distinctStringsOneJob, r17): this collect
         // runs EVERY micro-batch, so its job count is trigger fixed cost
-        val versions = graft.plans.Snapshots
+        val versions = Snapshots
           .distinctStringsOneJob(batch.select(col("f")))
           .toSeq
           .flatMap { f =>
@@ -1308,55 +1128,40 @@ object EventPipeline {
       }
   }
 
+  /** The change gates' two later commits, as drain steps: v2 adds the
+    * rest of the documents, v3 takes down doc_id ≡ 0 (mod 7) by split. */
+  private def laterCommits(s: SparkSession, root: String,
+      docs: (DataFrame => DataFrame) => DataFrame): Seq[() => Unit] = Seq(
+    () => Snapshots.commitDelta(s, root,
+      adds = docs(_.filter(!isSeed)), removedIds = noRemovals(docs(identity))): Unit,
+    () => Snapshots.commitDelta(s, root,
+      adds = docs(identity).limit(0),
+      removedIds = docs(_.filter(pmod(col("doc_id"), lit(7)) === 0))
+        .select(col("split"), col("doc_id"))): Unit)
+
+  /** A change feed's rows and doc-id sum per (version, change, split). */
+  private def changeCounts(feed: DataFrame, versionCol: String): DataFrame =
+    feed.groupBy(concat(lit("v"), col(versionCol).cast("string")).as("version"),
+        col("change"), col("split"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("doc_id")).cast("long").as("id_sum"))
+
   /** Synchronous gate run of [[snapshotChangesStream]]: the tail stream
     * starts against a one-version store and STAYS RUNNING while two more
     * commits land (an add batch, then split-keyed takedowns) — each
-    * `processAllAvailable` drains the version files that appeared since,
-    * so the gate exercises the live-tail path, not a replay of a
-    * finished log. The result aggregates the emitted change feed per
-    * (version, change, split); the oracle replays all three versions'
-    * classes in closed form from `documents` alone. */
-  def snapshotChangesSync(spark: SparkSession, dir: String): DataFrame = {
-    val s = harnessSession(spark)
-    val ckpt = harnessTmpDir("graft_stream_ckpt")
-    val root = harnessTmpDir("graft_stream_snaproot")
-    val out = harnessTmpDir("graft_stream_snapch")
-    try {
-      def shaped(f: DataFrame => DataFrame): DataFrame = f(
-        s.read.schema(docSchema).parquet(s"$dir/documents.parquet"))
-        .withColumn("split", concat(lit("s"), pmod(col("doc_id"), lit(4))))
-        .select(col("doc_id"), col("split"), col("lang"), col("n_chars"))
-      graft.plans.Snapshots.commitFull(s,
-        shaped(_.filter(pmod(col("doc_id"), lit(3)) === 0)), root.toString)
-      val q = snapshotChangesStream(s, root.toString, out.toString)
-        .option("checkpointLocation", ckpt.toString).start()
-      try {
-        q.processAllAvailable() // v1 bootstrap
-        val none = shaped(identity).select(col("split"), col("doc_id")).limit(0)
-        graft.plans.Snapshots.commitDelta(s, root.toString,
-          adds = shaped(_.filter(pmod(col("doc_id"), lit(3)) =!= 0)),
-          removedIds = none)
-        q.processAllAvailable() // v2 adds
-        graft.plans.Snapshots.commitDelta(s, root.toString,
-          adds = shaped(identity).limit(0),
-          removedIds = shaped(_.filter(pmod(col("doc_id"), lit(7)) === 0))
-            .select(col("split"), col("doc_id")))
-        q.processAllAvailable() // v3 removes
-      } finally q.stop()
-      s.read.schema(
+    * drain takes the version files that appeared since, so the gate
+    * exercises the live-tail path, not a replay of a finished log. The
+    * result aggregates the emitted change feed per (version, change,
+    * split); the oracle replays all three versions' classes in closed
+    * form from `documents` alone. */
+  def snapshotChangesSync(spark: SparkSession, dir: String): DataFrame =
+    storeGate(spark, dir, "snapch") { (g, root, docs) =>
+      val out = g.path("out")
+      g.drain(snapshotChangesStream(g.s, root, out), laterCommits(g.s, root, docs): _*)
+      changeCounts(g.s.read.schema(
           "change string, doc_id long, split string, lang string, n_chars long")
-        .option("basePath", out.toString).parquet(out.toString)
-        .groupBy(concat(lit("v"), col("version").cast("string")).as("version"),
-          col("change"), col("split"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("doc_id")).cast("long").as("id_sum"))
-        .graftCheckpoint()
-    } finally {
-      deleteRecursively(ckpt.toFile)
-      deleteRecursively(root.toFile)
-      deleteRecursively(out.toFile)
+        .option("basePath", out).parquet(out), "version")
     }
-  }
 
   /** Synchronous gate run of the STREAMING FRONT DOOR
     * ([[graft.sources.SnapshotChangeFeed]]): the same three-commit
@@ -1368,53 +1173,21 @@ object EventPipeline {
     * and is picked up by a FRESH query on the SAME checkpoint — the
     * restart-resume pin through the public API: a broken resume would
     * re-emit v1/v2 and double every count. */
-  def snapshotSqlChangesSync(spark: SparkSession, dir: String): DataFrame = {
-    val s = harnessSession(spark)
-    val ckpt = harnessTmpDir("graft_stream_ckpt")
-    val root = harnessTmpDir("graft_stream_sqlsnaproot")
-    val out = harnessTmpDir("graft_stream_sqlsnapch")
-    try {
-      def shaped(f: DataFrame => DataFrame): DataFrame = f(
-        s.read.schema(docSchema).parquet(s"$dir/documents.parquet"))
-        .withColumn("split", concat(lit("s"), pmod(col("doc_id"), lit(4))))
-        .select(col("doc_id"), col("split"), col("lang"), col("n_chars"))
-      graft.plans.Snapshots.commitFull(s,
-        shaped(_.filter(pmod(col("doc_id"), lit(3)) === 0)), root.toString)
-      def startTail() = s.readStream.format("graft-snapshot")
-        .option("changeFeed", "true").load(root.toString)
-        .writeStream.format("parquet").option("path", out.toString)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append").start()
-      val none = shaped(identity).select(col("split"), col("doc_id")).limit(0)
-      val q = startTail()
-      try {
-        q.processAllAvailable() // v1 bootstrap (full snapshot as adds)
-        graft.plans.Snapshots.commitDelta(s, root.toString,
-          adds = shaped(_.filter(pmod(col("doc_id"), lit(3)) =!= 0)),
-          removedIds = none)
-        q.processAllAvailable() // v2 adds, live tail
-      } finally q.stop()
+  def snapshotSqlChangesSync(spark: SparkSession, dir: String): DataFrame =
+    storeGate(spark, dir, "sqlsnapch") { (g, root, docs) =>
+      val Seq(adds, takedown) = laterCommits(g.s, root, docs)
+      def tail() = g.s.readStream.format("graft-snapshot")
+        .option("changeFeed", "true").load(root)
+        .writeStream.format("parquet").option("path", g.path("out"))
+        .outputMode("append")
+      g.drain(tail(), adds) // v1 bootstrap (full snapshot as adds), v2 live
       // the takedown commits with no consumer attached …
-      graft.plans.Snapshots.commitDelta(s, root.toString,
-        adds = shaped(identity).limit(0),
-        removedIds = shaped(_.filter(pmod(col("doc_id"), lit(7)) === 0))
-          .select(col("split"), col("doc_id")))
+      takedown()
       // … and a fresh query on the same checkpoint resumes at v2,
       // emitting ONLY v3 (duplicated v1/v2 rows would shift every count)
-      val q2 = startTail()
-      try q2.processAllAvailable() finally q2.stop()
-      s.read.parquet(out.toString)
-        .groupBy(concat(lit("v"), col("_version").cast("string")).as("version"),
-          col("change"), col("split"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("doc_id")).cast("long").as("id_sum"))
-        .graftCheckpoint()
-    } finally {
-      deleteRecursively(ckpt.toFile)
-      deleteRecursively(root.toFile)
-      deleteRecursively(out.toFile)
+      g.drain(tail())
+      changeCounts(g.s.read.parquet(g.path("out")), "_version")
     }
-  }
 
   /** Decontamination at INGEST: each micro-batch of incoming training
     * documents is scored against the eval suite's STATIC n-gram
@@ -1428,14 +1201,10 @@ object EventPipeline {
     * overwrite keeps `foreachBatch`'s at-least-once replays idempotent. */
   def decontamStream(
       docsStream: DataFrame, evalFps: DataFrame,
-      n: Int, outPath: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docsStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Decontaminate
-          .overlapAgainstFingerprints(batch, evalFps, "doc_id", "text", n)
-          .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-      }
+      n: Int, outPath: String): DataStreamWriter[Row] =
+    perBatchDirs(docsStream, outPath)(
+      graft.operators.Decontaminate
+        .overlapAgainstFingerprints(_, evalFps, "doc_id", "text", n))
 
   private val decontamSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("n_overlap", LongType),
@@ -1448,39 +1217,15 @@ object EventPipeline {
     * `d_decontaminate` oracle verbatim, the proof that the ingest filter
     * and the backfill can never disagree on a verdict. */
   def decontamSync(spark: SparkSession, dir: String): DataFrame = {
-    val s = harnessSession(spark)
-    graft.functions.GraftFunctions.register(s)
     val evalMod = graft.queries.LlmOps.DecontEvalMod
     val gramK = graft.queries.LlmOps.DecontGramK
-    val ckpt = harnessTmpDir("graft_stream_ckpt")
-    val out = harnessTmpDir("graft_stream_decontam")
-    val fpDir = templateDir(standingEvalFps, fixtureKey(dir, "documents.parquet"), "graft_standing_evalfp") {
-      tmpl =>
-        graft.operators.Decontaminate.evalFingerprints(
-            s.read.parquet(s"$dir/documents.parquet")
-              .filter(pmod(col("doc_id"), lit(evalMod)) === 0),
-            "doc_id", "text", n = gramK)
-          .write.parquet(tmpl.resolve("fp").toString)
-        tmpl
-    }
-    val evalFps = s.read.parquet(fpDir.resolve("fp").toString)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val in = s.readStream.schema(docSchema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-        .filter(pmod(col("doc_id"), lit(evalMod)) =!= 0)
-      val q = decontamStream(in, evalFps, gramK, out.toString)
-        .option("checkpointLocation", ckpt.toString).start()
-      try q.processAllAvailable() finally q.stop()
-      s.read.schema(decontamSchema)
-        .option("recursiveFileLookup", "true").parquet(out.toString)
-        .graftCheckpoint()
-    } finally {
-      evalFps.unpersist(false)
-      deleteRecursively(ckpt.toFile)
-      deleteRecursively(out.toFile)
-    }
+    standingIngestSync(spark, dir, "evalfp", pmod(col("doc_id"), lit(evalMod)) =!= 0,
+        decontamSchema)(
+      (docs, side) => graft.operators.Decontaminate.evalFingerprints(
+          docs.filter(pmod(col("doc_id"), lit(evalMod)) === 0),
+          "doc_id", "text", n = gramK)
+        .write.parquet(side))(
+      (in, fps, _, out) => decontamStream(in, fps, gramK, out))
   }
 
   /** Raw schema of the embeddings fixture (for the file-source stream). */
@@ -1499,7 +1244,7 @@ object EventPipeline {
     * `foreachBatch`'s at-least-once replays from ever duplicating rows. */
   def annIngestStream(
       embStream: DataFrame, indexPath: String,
-      centroids: Seq[(Int, Seq[Float])]): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      centroids: Seq[(Int, Seq[Float])]): DataStreamWriter[Row] =
     embStream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -1512,49 +1257,31 @@ object EventPipeline {
     * convention — the stream shares its batch twin's oracle, proving live
     * ingest ≡ batch append), the odd-id half streams in through
     * `foreachBatch`, and the probe runs against the on-disk union. */
-  def annIngestSync(spark: SparkSession, dir: String): DataFrame = {
-    val s = harnessSession(spark)
-    graft.functions.GraftFunctions.register(s)
-    val ckpt = harnessTmpDir("graft_stream_ckpt")
-    val idx = harnessTmpDir("graft_stream_ann")
-    try {
-      val e = s.read.parquet(s"$dir/embeddings.parquet")
-      // standing index (even half, frozen centroids): a batch product,
-      // template-cached per JVM (see [[standingIvf]]) and COPIED to a
-      // fresh scratch tree per run, so the streamed appends below write
-      // real files every invocation — only the batch-side build is cached
-      val (tmplIdx, cents) = templateDir(standingIvf, fixtureKey(dir, "embeddings.parquet"), "graft_standing_ivf") {
-        tmpl =>
-          val base = e.filter(pmod(col("vec_id"), lit(2)) === 0)
-          val c = graft.operators.Similarity.writeIvfIndex(
-            base, "vec_id", "embedding", tmpl.toString,
-            nCells = 16, refineIters = graft.queries.LlmOps.IvfKmeansIters)
-          (tmpl, c)
+  def annIngestSync(spark: SparkSession, dir: String): DataFrame =
+    syncGate(spark, "ann") { g =>
+      GraftFunctions.register(g.s)
+      val e = g.s.read.parquet(s"$dir/embeddings.parquet")
+      // standing index (even half, frozen centroids): a template COPIED
+      // to the run's scratch, so the streamed appends below write real
+      // files every invocation — only the batch-side build is cached
+      val (tmpl, cents) = templateDir("ivf", dir, "embeddings.parquet") { t =>
+        graft.operators.Similarity.writeIvfIndex(
+          e.filter(pmod(col("vec_id"), lit(2)) === 0), "vec_id", "embedding", t.toString,
+          nCells = 16, refineIters = graft.queries.LlmOps.IvfKmeansIters)
       }
-      copyTree(tmplIdx, idx)
-      val in = s.readStream.schema(embSchema)
+      val idx = g.path("idx")
+      copyTree(tmpl, Paths.get(idx))
+      val in = g.s.readStream.schema(embSchema)
         .option("pathGlobFilter", "embeddings.parquet")
         .parquet(dir)
         .filter(pmod(col("vec_id"), lit(2)) =!= 0)
-      val q = annIngestStream(in, idx.toString, cents)
-        .option("checkpointLocation", ckpt.toString).start()
-      try q.processAllAvailable() finally q.stop()
+      g.drain(annIngestStream(in, idx, cents))
       val query = e.orderBy(col("vec_id").asc).limit(1)
         .select(col("embedding")).head().getSeq[Float](0)
       graft.operators.Similarity.ivfTopKFromIndex(
-        s, idx.toString, cents, "vec_id", "embedding",
-        query, k = 20, nprobe = 4).graftCheckpoint()
-    } finally {
-      deleteRecursively(ckpt.toFile)
-      deleteRecursively(idx.toFile)
+        g.s, idx, cents, "vec_id", "embedding", query, k = 20, nprobe = 4)
     }
-  }
 
-  /** Stateful gap sessionization (30-minute inactivity) via
-    * flatMapGroupsWithState: per-user state holds the open session; closed
-    * sessions are emitted as soon as a gap is observed in-batch, and the
-    * final open session is flushed on event-time timeout once the watermark
-    * passes session end + gap. */
   /** LIVE funnel-stage tracking: the streaming twin of the batch
     * `r_funnel` operator. Per user, a three-field state machine follows
     * signup → first qualifying click (within `windowUs` strictly after
@@ -1643,52 +1370,31 @@ object EventPipeline {
     * past every in-flight user's deadline (max event time + the funnel
     * window + the watermark delay), then the flushed per-user stages
     * aggregate to the batch gate's cumulative stage counts — sharing the
-    * batch `r_funnel` oracle. Leak-free like [[sessionizeSync]]. */
-  def funnelSync(spark: SparkSession, dir: String): DataFrame = {
-    val hs = harnessSession(spark)
-    val windowUs = graft.queries.Relational.FunnelWindowUs
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = harnessTmpDir("graft_stream_funnel")
-    try {
-      val inDir = tmp.resolve("in")
-      Files.createDirectories(inDir)
-      Files.copy(Paths.get(dir, "events.parquet"), inDir.resolve("part-a.parquet"))
-      val maxTs = stagedMaxTs(hs, inDir.resolve("part-a.parquet"))
-
-      val name = s"graft_stream_funnel_${System.nanoTime()}"
-      val q = funnelStages(hs, readEventStream(hs, inDir.toString), windowUs)
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", tmp.resolve("ckpt").toString).start()
-      try {
-        q.processAllAvailable()
-        // sentinel offset: window (24h) + watermark delay (30m) + slack
-        val base = windowUs / 1000000 + 3600
-        var n = 0
-        Seq(base, base + 1).foreach { offsetSec =>
-          n += 1
-          // driver-written sentinel, atomic move — see sessionSyncOver
-          val staged = tmp.resolve(s"part-z$n.parquet.staged")
-          SentinelFiles.writeEvents(staged, Seq(
-            (-n.toLong, maxTs.plusSeconds(offsetSec), -1L, "sentinel", 0.0, "{}")))
-          Files.move(staged, inDir.resolve(s"part-z$n.parquet"),
-            StandardCopyOption.ATOMIC_MOVE)
-          q.processAllAvailable()
+    * batch `r_funnel` oracle. */
+  def funnelSync(spark: SparkSession, dir: String): DataFrame =
+    syncGate(spark, "funnel") { g =>
+      val windowUs = graft.queries.Relational.FunnelWindowUs
+      // sentinel offset: window (24h) + watermark delay (30m) + slack
+      val base = windowUs / 1000000 + 3600
+      val (in, sentinels) = g.stagedEvents(dir, Seq(base, base + 1)) {
+        (n, ts) => Seq((-n.toLong, ts, -1L, "sentinel", 0.0, "{}"))
+      }
+      val per = g.toMemory(funnelStages(g.s, in, windowUs).toDF(), "append", sentinels: _*)
+        .filter(col("user_id") >= 0)
+      Seq(1 -> "1_signup", 2 -> "2_click", 3 -> "3_purchase")
+        .map { case (k, label) =>
+          per.filter(col("stage") >= k)
+            .agg(count(lit(1)).as("n_users"))
+            .select(lit(label).as("stage"), col("n_users"))
         }
-      } finally q.stop()
-      try {
-        val per = hs.table(name).filter(col("user_id") >= 0)
-        Seq(1 -> "1_signup", 2 -> "2_click", 3 -> "3_purchase")
-          .map { case (k, label) =>
-            per.filter(col("stage") >= k)
-              .agg(count(lit(1)).as("n_users"))
-              .select(lit(label).as("stage"), col("n_users"))
-          }
-          .reduce(_ unionAll _)
-          .graftCheckpoint()
-      } finally dropViewQuietly(hs, name)
-    } finally deleteRecursively(tmp.toFile)
-  }
+        .reduce(_ unionAll _)
+    }
 
+  /** Stateful gap sessionization (30-minute inactivity) via
+    * flatMapGroupsWithState: per-user state holds the open session; closed
+    * sessions are emitted as soon as a gap is observed in-batch, and the
+    * final open session is flushed on event-time timeout once the watermark
+    * passes session end + gap. */
   def sessionize(spark: SparkSession, events: DataFrame,
       gapMinutes: Int = 30): Dataset[SessionOut] = {
     import spark.implicits._

@@ -1,29 +1,13 @@
 package graft.core
 
 import graft.SparkTestBase
+import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.functions._
 
-/** Pins for the r16 write-distribution helper: the file-count bound the
-  * REBALANCE mode exists for, the shuffle-free `none` escape hatch, and
-  * the loud refusal on an unknown knob value. */
+/** Pins for the write distributions: the file-count bound REBALANCE
+  * exists for (exports), the pinned-width hash exchange of store
+  * commits, and the exchange-free IVF index write. */
 class DistributeSpec extends SparkTestBase {
-
-  import spark.implicits._
-
-  private def withKnob[T](v: Option[String])(body: => T): T = {
-    val prev = spark.conf.getOption(Distribute.Key)
-    v match {
-      case Some(x) => spark.conf.set(Distribute.Key, x)
-      case None => spark.conf.unset(Distribute.Key)
-    }
-    try body
-    finally {
-      prev match {
-        case Some(p) => spark.conf.set(Distribute.Key, p)
-        case None => spark.conf.unset(Distribute.Key)
-      }
-    }
-  }
 
   private def partFiles(dir: java.io.File): Seq[java.io.File] =
     Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
@@ -39,13 +23,15 @@ class DistributeSpec extends SparkTestBase {
     .select(col("id").as("doc_id"),
       concat(lit("s"), pmod(col("id"), lit(8))).as("split"))
 
+  /** The final (post-AQE) plans of `body`'s SQL executions that write files. */
+  private def writePlans(body: => Unit): Seq[SparkPlanInfo] =
+    traced(body).finalPlans.filter(p => nodes(p).exists(_.nodeName.contains("WriteFiles")))
+
   test("rebalance bounds a partitioned write's files at ~#splits, content intact") {
     val out = java.nio.file.Files.createTempDirectory("graft_dist_reb").toFile
     try {
-      withKnob(Some("rebalance")) {
-        Distribute.forWrite(wide, "split")
-          .write.mode("overwrite").partitionBy("split").parquet(out.getPath)
-      }
+      Distribute.rebalance(wide, "split")
+        .write.mode("overwrite").partitionBy("split").parquet(out.getPath)
       val files = partFiles(out)
       // 16 input partitions × 8 splits = up to 128 files undistributed;
       // the rebalanced write must stay within a small factor of #splits
@@ -59,59 +45,46 @@ class DistributeSpec extends SparkTestBase {
     } finally graft.plans.CorpusExport.deleteRecursively(out)
   }
 
-  test("none is the identity — no exchange is added to the plan") {
-    withKnob(Some("none")) {
-      val df = wide
-      val out = Distribute.forWrite(df, "split")
-      assert(out.queryExecution.logical eq df.queryExecution.logical)
+  // r17: a bare repartition(split) is AQE-coalescable, and on a small
+  // commit it collapsed to ONE task writing every split dir serially
+  test("a store commit writes through a shuffle-width hash exchange that AQE does not coalesce") {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    val root = java.nio.file.Files.createTempDirectory("graft_dist_store")
+    spark.conf.set(key, "32")
+    try {
+      val small = spark.range(0, 40, 1, 4)
+        .select(col("id").as("doc_id"),
+          concat(lit("s"), pmod(col("id"), lit(8))).as("split"))
+      val writes = writePlans(
+        graft.plans.Snapshots.commitFull(spark, small, root.toString): Unit)
+      assert(writes.size == 1, writes.map(_.simpleString))
+      val plan = nodes(writes.head)
+      val hash = plan.filter(n => n.nodeName.contains("Exchange") &&
+        n.simpleString.contains("hashpartitioning(split#"))
+      assert(hash.size == 1, plan.map(_.simpleString))
+      assert(hash.head.simpleString.matches(""".*hashpartitioning\(split#\d+, 32\).*"""),
+        hash.head.simpleString)
+      assert(!plan.exists(_.nodeName == "AQEShuffleRead"),
+        s"the write's exchange was re-read by AQE: ${plan.map(_.simpleString)}")
+    } finally {
+      spark.conf.set(key, prev)
+      graft.plans.CorpusExport.deleteRecursively(root.toFile)
     }
   }
 
-  test("default (knob unset) distributes; unknown knob value refuses loudly") {
-    withKnob(None) {
-      val planned = Distribute.forWrite(wide, "split")
-        .queryExecution.optimizedPlan.toString
-      assert(planned.toLowerCase.contains("rebalance") ||
-        planned.contains("RepartitionByExpression"),
-        s"default mode must plan a distribution:\n$planned")
-    }
-    withKnob(Some("zorder")) {
-      val e = intercept[GraftAnalysisException] {
-        Distribute.forWrite(wide, "split")
-      }
-      assert(e.getMessage.contains("zorder") &&
-        e.getMessage.contains(Distribute.Key))
-    }
-  }
-
-  // r17: the per-scope override — scoped conf beats global conf beats the
-  // call site's default; an unscoped call never reads another scope's conf
-  test("scoped resolution: scoped conf > global conf > call-site default") {
-    def isIdentity(scope: String, dflt: String): Boolean = {
-      val df = wide // bind: `wide` is a def, each call is a fresh frame
-      val out = Distribute.forWrite(df, "split", scope, dflt)
-      out.queryExecution.logical eq df.queryExecution.logical
-    }
-    val scoped = s"${Distribute.Key}.ivf"
-    withKnob(None) {
-      spark.conf.unset(scoped)
-      // nothing set: the call site's default rules
-      assert(isIdentity("ivf", "none"))
-      assert(!isIdentity("ivf", "rebalance"))
-      // global set: beats the call-site default
-      withKnob(Some("rebalance")) { assert(!isIdentity("ivf", "none")) }
-      withKnob(Some("none")) { assert(isIdentity("ivf", "rebalance")) }
-      // scoped set: beats the global knob, for its scope only
-      try {
-        spark.conf.set(scoped, "none")
-        withKnob(Some("rebalance")) {
-          assert(isIdentity("ivf", "rebalance"))
-          assert(!isIdentity("store", "rebalance"), "other scopes unaffected")
-          assert(!isIdentity("", "rebalance"), "unscoped calls unaffected")
-        }
-        spark.conf.set(scoped, "rebalance")
-        withKnob(Some("none")) { assert(!isIdentity("ivf", "none")) }
-      } finally spark.conf.unset(scoped)
-    }
+  test("an IVF index append writes with no exchange") {
+    val embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val path = java.nio.file.Files.createTempDirectory("graft_dist_ivf")
+    try {
+      val idx = path.resolve("idx").toString
+      val cents = graft.operators.Similarity.writeIvfIndex(
+        embs.filter(pmod(col("vec_id"), lit(2)) === 0), "vec_id", "embedding", idx, nCells = 4)
+      val writes = writePlans(graft.operators.Similarity.appendToIvfIndex(
+        embs.filter(pmod(col("vec_id"), lit(2)) =!= 0), "vec_id", "embedding", idx, cents))
+      assert(writes.size == 1, writes.map(_.simpleString))
+      assert(!nodes(writes.head).exists(_.nodeName.contains("Exchange")),
+        nodes(writes.head).map(_.simpleString))
+    } finally graft.plans.CorpusExport.deleteRecursively(path.toFile)
   }
 }
